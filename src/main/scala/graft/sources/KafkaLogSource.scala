@@ -1,11 +1,13 @@
 package graft.sources
 
-import java.io.{DataInputStream, DataOutputStream, FileInputStream, FileOutputStream}
+import java.io.{BufferedInputStream, DataInputStream, DataOutputStream, FileInputStream,
+  FileOutputStream}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -51,9 +53,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * round-robin for null keys.
   *
   * Scale notes: this is a test/demo transport, not a broker replacement —
-  * but the read path is still partition-parallel (one task per topic
-  * partition per micro-batch) and segment files are ranged by filename,
-  * so a batch touches only the segments overlapping its offset window.
+  * but the read path is still parallel (at most one task per core, each
+  * reading whole topic-partition ranges) and a batch reads only its own
+  * records: segment files are ranged by filename, so a batch opens only
+  * the segments overlapping its offset window, and skips the records of
+  * those segments that fall outside it.
   */
 object EmbeddedTopicLog {
 
@@ -149,25 +153,6 @@ object EmbeddedTopicLog {
       }
       records.length.toLong
     }
-
-  private[sources] def readSegment(f: Path): Iterator[(Long, Long, Array[Byte], Array[Byte])] = {
-    val in = new DataInputStream(new FileInputStream(f.toFile))
-    // try/finally: a truncated/corrupt segment throws EOFException mid-read
-    // and must not leak the descriptor (same class of leak listDir guards)
-    try {
-      val n = in.readInt()
-      val buf = (0 until n).map { _ =>
-        val off = in.readLong()
-        val ts = in.readLong()
-        val kl = in.readInt()
-        val kb = if (kl < 0) null else { val a = new Array[Byte](kl); in.readFully(a); a }
-        val vl = in.readInt()
-        val vb = { val a = new Array[Byte](vl); in.readFully(a); a }
-        (off, ts, kb, vb)
-      }
-      buf.iterator
-    } finally in.close()
-  }
 }
 
 class KafkaLogSource extends TableProvider with DataSourceRegister {
@@ -266,12 +251,7 @@ class KafkaLogScan(options: Map[String, String]) extends Scan {
     // batch is legal and empty; explicit offsets slice the log)
     override def planInputPartitions(): Array[InputPartition] = {
       val ends = endOffsets
-      val starts = StartingOffsets.resolve(starting, topic, ends)
-      ends.toSeq.sortBy(_._1).flatMap { case (p, end) =>
-        val so = starts.getOrElse(p, 0L)
-        if (so < end) Some(KafkaLogPartition(root, topic, p, so, end): InputPartition)
-        else None
-      }.toArray
+      KafkaLogPlanner.plan(root, topic, StartingOffsets.resolve(starting, topic, ends), ends)
     }
     override def createReaderFactory(): PartitionReaderFactory =
       KafkaLogReaderFactory
@@ -357,40 +337,110 @@ class KafkaLogMicroBatchStream(root: String, topic: String, starting: String,
   override def deserializeOffset(json: String): Offset = KafkaLogOffset.parse(json)
   override def commit(end: Offset): Unit = ()
 
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[KafkaLogOffset].offsets
-    val e = end.asInstanceOf[KafkaLogOffset].offsets
-    e.toSeq.sortBy(_._1).flatMap { case (p, eo) =>
-      val so = s.getOrElse(p, 0L)
-      if (so < eo) Some(KafkaLogPartition(root, topic, p, so, eo): InputPartition)
-      else None
-    }.toArray
-  }
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
+    KafkaLogPlanner.plan(root, topic, start.asInstanceOf[KafkaLogOffset].offsets,
+      end.asInstanceOf[KafkaLogOffset].offsets)
   override def createReaderFactory(): PartitionReaderFactory = KafkaLogReaderFactory
   override def stop(): Unit = ()
 }
 
-case class KafkaLogPartition(root: String, topic: String, p: Int,
-    start: Long, end: Long) extends InputPartition
+/** One topic partition's offset range [start, end). */
+case class KafkaLogRange(p: Int, start: Long, end: Long) {
+  def size: Long = end - start
+}
+
+/** One task's share of a batch: whole per-topic-partition ranges. */
+case class KafkaLogPartition(root: String, topic: String, ranges: Seq[KafkaLogRange])
+    extends InputPartition
+
+/** Input-partition planning shared by the batch and micro-batch paths. A
+  * batch's per-topic-partition ranges [start, end) are packed into at most
+  * `defaultParallelism` input partitions, largest range first into the
+  * lightest one, so a batch runs as one task wave whatever the topic's
+  * partition count. Ranges are never split: each row still carries its own
+  * topic partition and offset.
+  */
+private[sources] object KafkaLogPlanner {
+  def plan(root: String, topic: String, starts: Map[Int, Long],
+      ends: Map[Int, Long]): Array[InputPartition] = {
+    val ranges = ends.toSeq.flatMap { case (p, e) =>
+      val s = starts.getOrElse(p, 0L)
+      if (s < e) Some(KafkaLogRange(p, s, e)) else None
+    }
+    pack(ranges, SparkSession.active.sparkContext.defaultParallelism)
+      .map(KafkaLogPartition(root, topic, _): InputPartition)
+  }
+
+  private def pack(ranges: Seq[KafkaLogRange], slots: Int): Array[Seq[KafkaLogRange]] = {
+    val bins = Array.fill(math.max(1, math.min(slots, ranges.size)))(Vector.empty[KafkaLogRange])
+    val load = new Array[Long](bins.length)
+    ranges.sortBy(r => (-r.size, r.p)).foreach { r =>
+      val i = load.indices.minBy(load(_))
+      bins(i) :+= r
+      load(i) += r.size
+    }
+    bins.filter(_.nonEmpty).map(_.sortBy(_.p))
+  }
+}
 
 object KafkaLogReaderFactory extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val kp = partition.asInstanceOf[KafkaLogPartition]
-    // only segments overlapping [start, end): ranged by filename, so a
-    // micro-batch never opens historical segments it already consumed
-    val rows = EmbeddedTopicLog.segments(kp.root, kp.topic, kp.p)
-      .filter { case (s, e, _) => e > kp.start && s < kp.end }
-      .iterator
-      .flatMap { case (_, _, f) => EmbeddedTopicLog.readSegment(f) }
-      .filter { case (off, _, _, _) => off >= kp.start && off < kp.end }
-    new PartitionReader[InternalRow] {
-      private val it = rows
-      private var cur: (Long, Long, Array[Byte], Array[Byte]) = _
-      override def next(): Boolean = { val h = it.hasNext; if (h) cur = it.next(); h }
-      override def get(): InternalRow = InternalRow(
-        cur._3, cur._4, UTF8String.fromString(kp.topic), kp.p, cur._1,
-        cur._2 * 1000L /* ms → µs */, 0 /* CreateTime */)
-      override def close(): Unit = ()
-    }
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new KafkaLogReader(partition.asInstanceOf[KafkaLogPartition])
+}
+
+/** Reads a [[KafkaLogPartition]]'s ranges in turn, one segment open at a
+  * time through a buffered stream. Only segments overlapping a range are
+  * opened (ranged by filename, so a micro-batch never opens historical
+  * segments it already consumed); a record before the range is skipped
+  * without allocating its key and value, and a segment is left at the first
+  * offset past the range. The open segment is closed when it is done or
+  * when the reader closes, which Spark does after a failed read too (a
+  * truncated segment throws EOFException) — the same class of descriptor
+  * leak `listDir` guards.
+  */
+private[sources] class KafkaLogReader(kp: KafkaLogPartition)
+    extends PartitionReader[InternalRow] {
+  private val topic = UTF8String.fromString(kp.topic)
+  private val pending = kp.ranges.iterator.flatMap { r =>
+    EmbeddedTopicLog.segments(kp.root, kp.topic, r.p)
+      .collect { case (s, e, f) if e > r.start && s < r.end => (r, f) }
   }
+  private var in: DataInputStream = _
+  private var range: KafkaLogRange = _
+  private var left = 0 // records of the open segment not yet read
+  private var cur: InternalRow = _
+
+  private def bytes(n: Int): Array[Byte] = {
+    val a = new Array[Byte](n); in.readFully(a); a
+  }
+
+  override def next(): Boolean = {
+    while (true) {
+      if (left == 0) {
+        close()
+        if (!pending.hasNext) return false
+        val (r, f) = pending.next()
+        range = r
+        in = new DataInputStream(new BufferedInputStream(new FileInputStream(f.toFile), 1 << 16))
+        left = in.readInt()
+      } else {
+        left -= 1
+        val off = in.readLong()
+        val ts = in.readLong()
+        if (off >= range.start && off < range.end) {
+          val kl = in.readInt()
+          val key = if (kl < 0) null else bytes(kl)
+          cur = InternalRow(key, bytes(in.readInt()), topic, range.p, off,
+            ts * 1000L /* ms → µs */, 0 /* CreateTime */)
+          return true
+        } else if (off < range.start) {
+          in.skipNBytes(math.max(0, in.readInt()).toLong)
+          in.skipNBytes(in.readInt().toLong)
+        } else left = 0 // offsets ascend within a segment: past the range
+      }
+    }
+    false
+  }
+  override def get(): InternalRow = cur
+  override def close(): Unit = if (in != null) { in.close(); in = null }
 }

@@ -1,9 +1,11 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import scala.jdk.CollectionConverters._
 
 /** Log-structured, key-bucketed SCD1 gold target — the latency-floor fix
   * for the CDC apply path.
@@ -26,7 +28,9 @@ import org.apache.spark.sql.functions._
   *
   *  - '''Commit''' ([[appendBatch]]) = write the batch as one new delta
   *    dir (write to a scratch dir, RENAME into place — atomic on
-  *    local/HDFS): no read of existing state, no shuffle, no rewrite.
+  *    local/HDFS), its row count observed on that write (a zero-row batch
+  *    commits nothing): no footer pass, no read of existing state, no
+  *    shuffle, no rewrite.
   *    Batch cost is O(batch), independent of state size — this is what
   *    cuts the floor.
   *  - '''Query''' ([[read]]) = merge-on-read: latest-per-key over
@@ -148,12 +152,18 @@ object BucketedGold {
 
   /** Block until every async compaction scheduled so far has finished —
     * call before reading at quiesce (bench audit) or before spark.stop().
+    * A failed compaction is not swallowed: once every one has finished and
+    * left the in-flight map, the first failure is rethrown.
     */
   def awaitCompactions(): Unit = {
-    compactInFlight.values().forEach { fut =>
-      try fut.get() catch { case _: Exception => () }
+    val failures = compactInFlight.entrySet().asScala.toList.flatMap { e =>
+      val failure =
+        try { e.getValue.get(); None }
+        catch { case x: java.util.concurrent.ExecutionException => Some(x.getCause) }
+      compactInFlight.remove(e.getKey, e.getValue)
+      failure
     }
-    compactInFlight.clear()
+    failures.headOption.foreach(f => throw f)
   }
 
   /** Commit one micro-batch: atomic delta append, then compaction once
@@ -175,14 +185,13 @@ object BucketedGold {
     * metric attached to `batch` never executes, so callers pairing this
     * with `Observation.get` MUST gate the (blocking) get on the returned
     * Boolean. A zero-row batch the probe can't prove empty still pays the
-    * write job and is caught by the footer row-count check — parquet
-    * writes a schema-only part file for zero rows, so "no .parquet
-    * files" is never the test.
+    * write job and is caught by the row count observed on that same write
+    * (no footer pass afterwards) — parquet writes a schema-only part file
+    * for zero rows, so "no .parquet files" is never the test.
     */
   def appendBatch(spark: SparkSession, batch: DataFrame, root: String,
       batchId: Long, numBuckets: Int = 64, compactEvery: Int = 16,
       compactAsync: Boolean = false): Boolean = {
-    val t0 = System.nanoTime()
     // job-free, plan-free emptiness probe (analysis-level leaves only)
     if (org.apache.spark.sql.GraftSqlBridge.isStaticallyEmpty(batch)) return false
     val f = fs(spark)
@@ -191,23 +200,13 @@ object BucketedGold {
     val dst = new Path(deltaPath(root, appId, batchId))
     f.mkdirs(dst.getParent)
     f.delete(scratch, true)
-    val t1 = System.nanoTime()
+    // the commit's row count rides the write itself: an unnamed observation
+    // (a replayed batch id would collide with a named one), so no footer pass
+    val written = new Observation()
     batch.select(stateCols.map(col): _*)
+      .observe(written, count(lit(1)).as("rows"))
       .write.mode("overwrite").parquet(scratch.toString)
-    val t2 = System.nanoTime()
-    if (sys.env.contains("SPARK_GRAFT_GOLD_DEBUG"))
-      println(s"[bucketed-gold] b$batchId prep=${(t1 - t0) / 1000000}ms " +
-        s"writeJob=${(t2 - t1) / 1000000}ms")
-    // driver-side footer row counts: O(files) ~1-2 ms each, page-cache warm
-    val scratchRows = f.listStatus(scratch)
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .map { st =>
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
-            st, spark.sparkContext.hadoopConfiguration))
-        try r.getRecordCount finally r.close()
-      }.sum
-    if (scratchRows == 0L) {
+    if (written.get("rows") == 0L) {
       f.delete(scratch, true)
       return false
     }
@@ -222,15 +221,13 @@ object BucketedGold {
       if (!compactAsync) compact(spark, root, numBuckets)
       else {
         // skip if a compaction for this root is still running — the next
-        // threshold crossing re-triggers
+        // threshold crossing re-triggers. The Future carries a failure to
+        // awaitCompactions; a failed fold that a later crossing retries
+        // (deltas stay unretired) is superseded by the retry's outcome
         val prev = compactInFlight.get(root)
         if (prev == null || prev.isDone) {
           compactInFlight.put(root, compactPool.submit(new Runnable {
-            override def run(): Unit =
-              try compact(spark, root, numBuckets)
-              catch { case e: Exception =>
-                System.err.println(s"[bucketed-gold] async compact failed: $e")
-              }
+            override def run(): Unit = compact(spark, root, numBuckets)
           }))
         }
       }

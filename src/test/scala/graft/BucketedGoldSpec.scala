@@ -133,13 +133,31 @@ class BucketedGoldSpec extends SparkSpec {
     assert(!BucketedGold.appendBatch(spark, empty, gold, 1L))
     assert(spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
       === jobsBefore, "empty-plan probe must not launch a Spark job")
-    // zero ROWS behind a non-empty plan: caught post-write by the footer
-    // row counts, still no commit
+    // zero ROWS behind a non-empty plan: caught by the row count observed
+    // on the write itself, still no commit
     assert(!BucketedGold.appendBatch(spark,
       batchDF((1L, "INSERT", 1L, 1L, 1.0)).filter("user_id < 0"), gold, 2L))
     assert(deltaDir.listFiles().map(_.getName).toSet === deltasBefore)
     assert(!new java.io.File(root).listFiles()
       .exists(_.getName.startsWith(".scratch")), "no scratch left behind")
+  }
+
+  test("a failed async compaction surfaces from awaitCompactions") {
+    val root = Files.createTempDirectory("bg-async-fail").toString
+    val gold = s"$root/gold"
+    BucketedGold.appendBatch(spark, batchDF((1L, "INSERT", 1L, 1L, 1.0)), gold, 0L,
+      numBuckets = 8, compactEvery = 1000)
+    // a corrupt base part file: the compaction's base read fails
+    val bucket = new java.io.File(s"$gold/base/bucket=0")
+    bucket.mkdirs()
+    Files.write(new java.io.File(bucket, "part-00000-corrupt.parquet").toPath,
+      "not parquet".getBytes("UTF-8"))
+    assert(BucketedGold.appendBatch(spark, batchDF((2L, "INSERT", 2L, 2L, 2.0)), gold, 1L,
+      numBuckets = 8, compactEvery = 1, compactAsync = true),
+      "the delta commit itself does not wait on the compaction")
+    intercept[Exception](BucketedGold.awaitCompactions())
+    // reported once: the in-flight map was cleared
+    BucketedGold.awaitCompactions()
   }
 
   test("compact sweeps stale foreign-app scratch dirs, keeps own and fresh ones") {

@@ -875,6 +875,100 @@ class StreamingSpec extends SparkSpec {
     assert(sizes.length >= 7, s"cap did not split the backlog: $sizes")
   }
 
+  test("kafkalog: a capped micro-batch on an 8-partition topic plans at most one task per core") {
+    import graft.sources.EmbeddedTopicLog
+    val root = tmpDir("kafkalog-pack")
+    val topic = "pack.topic"
+    val parts = 8
+    // two produce calls, so capped batches span segment boundaries too
+    val records = (0 until 400).map(i => (s"k${i % 37}", s"v$i"))
+    records.grouped(200).foreach(EmbeddedTopicLog.produce(root, topic, _, parts))
+    // where each record was produced: key-hash partition, dense offsets
+    val next = Array.fill(parts)(0L)
+    val produced = records.map { case (k, v) =>
+      val p = math.floorMod(k.hashCode, parts)
+      next(p) += 1
+      v -> ((p, next(p) - 1))
+    }.toMap
+
+    val out = tmpDir("kafkalog-pack-out")
+    val tasks = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val q = spark.readStream.format("kafkalog")
+      .option("path", root).option("topic", topic)
+      .option("maxOffsetsPerTrigger", "50")
+      .load()
+      .selectExpr("CAST(value AS STRING) AS v", "partition", "offset")
+      .writeStream
+      .option("checkpointLocation", s"$out-ck")
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+        tasks.synchronized { tasks += b.rdd.getNumPartitions }
+        b.write.parquet(s"$out/b=$id"); ()
+      }
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    assert(tasks.nonEmpty && tasks.forall(_ <= 4),
+      s"a batch planned more input partitions than local[4] has cores: $tasks")
+
+    val got = spark.read.parquet(out).collect()
+      .map(r => (r.getAs[String]("v"), r.getAs[Int]("partition"), r.getAs[Long]("offset"),
+        r.getAs[Int]("b")))
+    assert(got.length === records.length, "capped batches lost or duplicated rows")
+    got.foreach { case (v, p, off, _) =>
+      assert(produced(v) === ((p, off)), s"$v read as partition $p offset $off")
+    }
+    // each batch is one contiguous [start, end) per partition, and the
+    // batches tile every partition's log in order
+    got.groupBy(_._2).foreach { case (p, rows) =>
+      val ranges = rows.groupBy(_._4).toSeq.sortBy(_._1).map { case (_, bs) =>
+        val offs = bs.map(_._3).sorted
+        assert(offs.toSeq === (offs.head to offs.last).toSeq, s"gap in partition $p")
+        (offs.head, offs.last + 1)
+      }
+      assert(ranges.head._1 === 0L && ranges.last._2 === next(p))
+      ranges.sliding(2).filter(_.size == 2).foreach { case Seq(a, b) =>
+        assert(a._2 === b._1, s"partition $p: batches $a and $b do not abut")
+      }
+    }
+    assert(got.map(_._4).distinct.length >= 8, "cap did not split the backlog")
+
+    // the batch path plans the same way; a read starting mid-segment
+    // replays exactly [start, end) of every partition
+    val from = (0 until parts).map(p => p -> next(p) / 3).toMap
+    val json = from.map { case (p, o) => s""""$p":$o""" }.mkString(s"""{"$topic":{""", ",", "}}")
+    val mid = spark.read.format("kafkalog")
+      .option("path", root).option("topic", topic)
+      .option("startingOffsets", json).load()
+      .selectExpr("CAST(value AS STRING) AS v", "partition", "offset")
+    assert(mid.rdd.getNumPartitions <= 4)
+    val midRows = mid.collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2)))
+    assert(midRows.map(r => (r._2, r._3)).toSet ===
+      (0 until parts).flatMap(p => (from(p) until next(p)).map(o => (p, o))).toSet)
+    assert(midRows.length === midRows.distinct.length)
+    midRows.foreach { case (v, p, off) => assert(produced(v) === ((p, off))) }
+  }
+
+  test("kafkalog: a truncated segment throws EOFException and releases its file") {
+    import graft.sources.EmbeddedTopicLog
+    val root = tmpDir("kafkalog-trunc")
+    val topic = "trunc.topic"
+    EmbeddedTopicLog.produce(root, topic, (0 until 20).map(i => (null: String, s"value-$i")),
+      partitions = 1)
+    val seg = new java.io.File(root, s"$topic/p=0").listFiles()
+      .filter(_.getName.endsWith(".bin")).head.toPath
+    // cut inside the first record
+    Files.write(seg, java.util.Arrays.copyOf(Files.readAllBytes(seg), 4 + 8 + 8 + 2))
+    val e = intercept[Exception] {
+      spark.read.format("kafkalog").option("path", root).option("topic", topic)
+        .load().collect()
+    }
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(_.isInstanceOf[java.io.EOFException]), s"not an EOF: $e")
+    val open = Option(new java.io.File("/proc/self/fd").listFiles()).toSeq.flatten
+      .flatMap(fd => scala.util.Try(Files.readSymbolicLink(fd.toPath)).toOption)
+    assert(!open.exists(_.toString == seg.toRealPath().toString),
+      s"$seg is still open after the failed read")
+  }
+
   test("kafka arm end-to-end: produce -> offsets -> silver -> SCD1 gold, checkpoint restart") {
     import graft.sources.EmbeddedTopicLog
     import graft.cdc.Debezium
