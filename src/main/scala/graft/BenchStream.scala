@@ -526,7 +526,7 @@ object BenchStream {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val warmupSec = sys.env.getOrElse("SPARK_GRAFT_STREAM_WARMUP", "20").toInt
     val measureSec = sys.env.getOrElse("SPARK_GRAFT_STREAM_SEC", "60").toInt
     val keySpace = sys.env.getOrElse("SPARK_GRAFT_STREAM_KEYS", "100000").toInt
@@ -535,22 +535,17 @@ object BenchStream {
       sys.env.getOrElse("SPARK_GRAFT_STREAM_TRIGGER", "250000").toLong
     val produceChunk = 25000
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // committer v2: task files move to the output dir at TASK commit —
-      // one fewer sequential rename pass per micro-batch commit. Safety
-      // here: delta writes land in a scratch dir that only becomes
-      // visible via BucketedGold's own atomic rename; the base rewrite
-      // (compaction's dynamic partition overwrite) relies on Spark's
-      // .spark-staging protocol instead, and a crash mid-compaction is
-      // recoverable regardless because the folded deltas are only
-      // retired a full cycle later (re-fold is a no-op).
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(cpus)
+    // committer v2: task files move to the output dir at TASK commit —
+    // one fewer sequential rename pass per micro-batch commit. Safety
+    // here: delta writes land in a scratch dir that only becomes
+    // visible via BucketedGold's own atomic rename; the base rewrite
+    // (compaction's dynamic partition overwrite) relies on Spark's
+    // .spark-staging protocol instead, and a crash mid-compaction is
+    // recoverable regardless because the folded deltas are only
+    // retired a full cycle later (re-fold is a no-op).
+    spark.sparkContext.hadoopConfiguration
+      .set("mapreduce.fileoutputcommitter.algorithm.version", "2")
 
     if (sys.env.get("SPARK_GRAFT_STREAM_MODE").contains("latency")) {
       try latencyMain(spark) finally spark.stop()

@@ -1,20 +1,27 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSessionExtensions, SparkSessionExtensionsProvider}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{BpeEncode, BpeMergeStep, CosineSim, DeflateSize,
   HyperplaneBucket, MinHashAgg, MinHashSig, NgramJaccard, QuantileSketchAgg,
   RollingMinHash, ShingleContainment, ShingleJaccard, SimHash64}
 
-/** SparkSessionExtensions entry point: registers the custom Catalyst
-  * expressions as SQL functions for any session built with
-  *   .config("spark.sql.extensions", "graft.GraftExtensions")
-  * — the idiomatic way a Spark-native library ships operators (the
-  * reference ships a Python DataSource registration instead;
-  * reference: src/notebooks/demo/cdc_500_tables_streaming.py:106).
+/** The library's whole session surface: the custom Catalyst expressions
+  * as SQL functions, the TopK / MV / exact-view optimizer rules and the
+  * TopK / as-of planner strategies — the idiomatic way a Spark-native
+  * library ships operators (the reference ships a Python DataSource
+  * registration instead; reference:
+  * src/notebooks/demo/cdc_500_tables_streaming.py:106).
+  *
+  * Listed in `META-INF/services/org.apache.spark.sql.SparkSessionExtensionsProvider`,
+  * so Spark's `ServiceLoader` applies it inside `getOrCreate` for every
+  * session with graft on its classpath — no `spark.sql.extensions` conf
+  * and no per-call registration. The rules run in the pre-CBO batch,
+  * after operator pushdown: a TopK rewrite placed in the main optimizer
+  * batch fires before predicate pushdown and strands filters above it.
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
+class GraftExtensions extends SparkSessionExtensionsProvider {
   private def info(name: String) =
     new ExpressionInfo("graft.functions", name)
 
@@ -57,9 +64,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         es(1).eval().asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
           .toDoubleArray().toSeq,
         if (es.length > 2) intArg(es(2)) else 200)))
-    e.injectOptimizerRule(_ => graft.plans.RewriteTopK)
-    e.injectOptimizerRule(_ => graft.plans.RewriteAggToMv)
-    e.injectOptimizerRule(_ => graft.plans.RewriteExactView)
+    e.injectPreCBORule(_ => graft.plans.RewriteTopK)
+    e.injectPreCBORule(_ => graft.plans.RewriteAggToMv)
+    e.injectPreCBORule(_ => graft.plans.RewriteExactView)
     e.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
   }

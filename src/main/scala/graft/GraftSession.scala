@@ -1,40 +1,24 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import graft.functions.GraftFunctions
-import graft.plans.TopKStrategy
 
-/** Session factory with the library's recommended configuration: AQE (skew
-  * join + partition coalescing), broadcast threshold, UTC, the custom SQL
-  * functions and the TopKPerGroup planner strategy registered.
-  *
-  * On a real cluster set `shufflePartitions` ≈ 2-3× total executor cores;
-  * the local default matches the 32-thread test harness.
+/** The one session builder every entry point and the spec suite share:
+  * `local[cores]`, one shuffle partition per core, UTC, UI off, WARN logs.
+  * The library's functions, rules and strategies arrive with the session
+  * itself — [[GraftExtensions]] is a `ServiceLoader`-listed extensions
+  * provider — so there is nothing to attach afterwards.
   */
 object GraftSession {
 
-  def build(master: String = "local[32]", shufflePartitions: Int = 32,
-      appName: String = "graft"): SparkSession = {
+  def build(cores: Int): SparkSession = {
     val spark = SparkSession.builder()
-      .master(master)
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .master(s"local[$cores]")
+      .appName("graft")
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    attach(spark)
-    spark
-  }
-
-  /** Register the library's functions + strategies on an existing session
-    * (idempotent) — for sessions the caller builds (driver harness, tests).
-    */
-  def attach(spark: SparkSession): SparkSession = {
-    GraftFunctions.register(spark)
-    graft.plans.RewriteTopK.enable(spark) // strategy + window-topk rewrite
+    spark.sparkContext.setLogLevel("WARN")
     spark
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-shape snapshot for the whole query inventory — the `.explain`
   * habit upgraded to a committed CI artifact: one JSON object per
   * registered query with the pre-execution plan's structural metrics
@@ -19,7 +17,7 @@ import org.apache.spark.sql.SparkSession
   * Determinism: metrics are read off the AQE `initialPlan` (no job runs
   * for the metric read; some query CONSTRUCTORS run bounded jobs — the
   * k-means samples, BPE merges — exactly as Verify does), with the same
-  * fixed local conf the spec suite pins (shuffle.partitions=4), so the
+  * session the spec suite builds (`GraftSession.build(4)`), so the
   * snapshot is a pure function of the corpus snapshot and the code.
   *
   * Usage: runMain graft.PlanSnapshot [sfDir] [outPath]
@@ -28,14 +26,7 @@ object PlanSnapshot {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outPath = if (args.length > 1) args(1) else "PLAN_BASELINE.json"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(4)
     // planProbes override memoized-artifact reads with the un-memoized
     // funnel builders so the snapshot pins the real plan structure
     val rows = (SparkEntry.queries ++ SparkEntry.planProbes)

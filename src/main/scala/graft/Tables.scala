@@ -132,8 +132,8 @@ object Tables {
   }
 
   /** Register every table as a temp view, making the whole surface
-    * available to `spark.sql` — combined with `GraftSession.attach` the
-    * custom functions compose with plain SQL over these views (the
+    * available to `spark.sql` — the custom functions every session gets
+    * from [[GraftExtensions]] compose with plain SQL over these views (the
     * "switch from the reference" entry point for SQL-first users).
     */
   def registerViews(spark: SparkSession, dir: String): Unit = {

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -303,6 +303,9 @@ case class DeflateSize(child: Expression) extends UnaryExpression {
   override def prettyName: String = "deflate_size"
 }
 
+/** Column-API constructors for the expressions above. Their SQL names are
+  * registered once, by [[graft.GraftExtensions]].
+  */
 object GraftFunctions {
   def simhash64(c: Column): Column = ExpressionUtils.column(SimHash64(ExpressionUtils.expression(c)))
   def rollingMinHash(c: Column, window: Int): Column =
@@ -337,45 +340,4 @@ object GraftFunctions {
     ExpressionUtils.column(BpeMergeStep(ExpressionUtils.expression(syms), left, right))
   def bpeEncode(syms: Column, lefts: Array[String], rights: Array[String]): Column =
     ExpressionUtils.column(BpeEncode(ExpressionUtils.expression(syms), lefts, rights))
-
-  /** Idempotent SQL registration so `spark.sql("... simhash64(x) ...")` works.
-    * Mirrors [[graft.GraftExtensions]] (the `spark.sql.extensions` build-time
-    * path) — keep BOTH lists in sync; UtilSpec exercises each name.
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def intArg(e: Expression): Int = e.eval().asInstanceOf[Number].intValue()
-    def strArrayArg(e: Expression): Array[String] =
-      e.eval().asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-        .toObjectArray(org.apache.spark.sql.types.StringType).map(_.toString)
-    reg.createOrReplaceTempFunction("simhash64", es => SimHash64(es.head), "built-in")
-    reg.createOrReplaceTempFunction("rolling_min_hash",
-      es => RollingMinHash(es.head, intArg(es(1))), "built-in")
-    reg.createOrReplaceTempFunction("cosine_sim", es => CosineSim(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("minhash_sig",
-      es => MinHashSig(es.head, intArg(es(1))), "built-in")
-    reg.createOrReplaceTempFunction("ngram_jaccard",
-      es => NgramJaccard(es.head, es(1), intArg(es(2))), "built-in")
-    reg.createOrReplaceTempFunction("shingle_jaccard",
-      es => ShingleJaccard(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("shingle_containment",
-      es => ShingleContainment(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("deflate_size",
-      es => DeflateSize(es.head), "built-in")
-    reg.createOrReplaceTempFunction("hyperplane_bucket",
-      es => HyperplaneBucket(es.head, intArg(es(1)),
-        if (es.length > 2) intArg(es(2)) else 0), "built-in")
-    reg.createOrReplaceTempFunction("bpe_merge_step",
-      es => BpeMergeStep(es.head, es(1).eval().toString, es(2).eval().toString), "built-in")
-    reg.createOrReplaceTempFunction("bpe_encode",
-      es => BpeEncode(es.head, strArrayArg(es(1)), strArrayArg(es(2))), "built-in")
-    // aggregates: the analyzer wraps a returned AggregateFunction itself
-    reg.createOrReplaceTempFunction("minhash_agg",
-      es => MinHashAgg(es.head, intArg(es(1))), "built-in")
-    reg.createOrReplaceTempFunction("quantile_sketch",
-      es => QuantileSketchAgg(es.head,
-        es(1).eval().asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-          .toDoubleArray().toSeq,
-        if (es.length > 2) intArg(es(2)) else 200), "built-in")
-  }
 }

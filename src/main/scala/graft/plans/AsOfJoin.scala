@@ -177,7 +177,7 @@ object AsOfJoinOp {
     * carried right columns come back as `asof_<name>` plus the matched
     * time `asof_t`; `tolerance` (time units) degrades stale matches to
     * null; `tiebreak` columns order equal right timestamps (largest
-    * wins). Registers the planner strategy idempotently.
+    * wins).
     */
   def asofJoinExec(left: DataFrame, right: DataFrame, keyCols: Seq[String],
       leftTime: String, rightTime: String, carryCols: Seq[String],
@@ -185,10 +185,6 @@ object AsOfJoinOp {
       tolerance: Option[Long] = None): DataFrame = {
     require(carryCols.nonEmpty, "carryCols must name at least one right column")
     val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-    }
     val lPlan = left.queryExecution.analyzed
     // ALWAYS give the right side fresh exprIds: as-of inputs routinely
     // share lineage (both sides filtered from one log frame), and a

@@ -2,7 +2,7 @@ package graft.plans
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -330,9 +330,9 @@ object RewriteAggToMv extends Rule[LogicalPlan] with PredicateHelper {
   * canonical forms").
   *
   * Both sides compare post-main-optimizer (the stored plan is the
-  * definition's `optimizedPlan`; the rule runs in the user batch after
-  * the main batches), so both saw the same filter pushdown and join
-  * ordering. Output attributes keep the query's ExprIds via positional
+  * definition's `optimizedPlan`; the rule runs in the pre-CBO batch,
+  * after the main operator batches), so both saw the same filter
+  * pushdown and join ordering. Output attributes keep the query's ExprIds via positional
   * re-aliasing — canonical equality implies positionally equal outputs.
   */
 object RewriteExactView extends Rule[LogicalPlan] {
@@ -495,15 +495,6 @@ object Mv {
     refreshed
   }
 
-  /** #296 Registered query: build a (l_returnflag, l_linestatus) summary
-    * of lineitem, register it, then run a filtered SUBSET-grouping
-    * aggregate written against the BASE table — the rule reroutes it to
-    * the summary (MvRewriteSpec pins the plan: the optimized scan reads
-    * the MV path, not lineitem). The driver's oracle runs the same SQL
-    * on the base table in DuckDB, so the hash match IS the rewrite's
-    * exactness proof. l_quantity is integer-valued, so its double sums
-    * are order-independent and bit-exact across engines and plans.
-    */
   /** Materialize an arbitrary definition frame and register it for
     * [[RewriteExactView]]. Any query whose Aggregate subtree is
     * `sameResult` with the definition reads the stored parquet instead
@@ -530,12 +521,21 @@ object Mv {
     * join + aggregation from the base tables in DuckDB.
     */
   def starDemo(spark: SparkSession, dir: String): DataFrame = {
-    RewriteTopK.enable(spark)
     val mvPath = Files.createTempDirectory("graft-mv-star").toString
     createExact(spark, "star_nation_rev", starQuery(spark, dir),
       s"$mvPath/mv.parquet")
-    starQuery(spark, dir)
+    scoped(spark, starQuery(spark, dir))(ViewCatalog.deregister("star_nation_rev"))
   }
+
+  /** A demo's catalog entry lives exactly as long as the demo: `query` is
+    * optimized (the rewrite fires) while the entry is registered, the
+    * entry is dropped, and the returned frame runs the rewritten plan. So
+    * no query built later — in any order — is rerouted by a demo's MV.
+    */
+  private def scoped(spark: SparkSession, query: => DataFrame)(
+      deregister: => Unit): DataFrame =
+    try GraftSqlBridge.ofRows(spark, query.queryExecution.optimizedPlan)
+    finally deregister
 
   /** The Q5-family supplier-side star aggregate (def and query both come
     * from here — exact view matching's contract is "the query IS the
@@ -725,29 +725,39 @@ object Mv {
     * base table.
     */
   def rollupDemo(spark: SparkSession, dir: String): DataFrame = {
-    RewriteTopK.enable(spark)
     val mvPath = Files.createTempDirectory("graft-mv-rollup").toString
     create(spark, "lineitem_rf_ls", s"$dir/lineitem.parquet", mvPath,
       groupCols = Seq("l_returnflag", "l_linestatus"),
       sumCols = Seq("l_quantity"))
-    spark.read.parquet(s"$dir/lineitem.parquet")
+    scoped(spark, spark.read.parquet(s"$dir/lineitem.parquet")
       .rollup("l_returnflag", "l_linestatus")
       .agg(sum(col("l_quantity")).as("sum_qty"),
         count(lit(1)).as("n_rows"),
-        favg(col("l_quantity")).as("avg_qty"))
+        favg(col("l_quantity")).as("avg_qty")))(
+      MvCatalog.deregister("lineitem_rf_ls"))
   }
 
+  /** #296 Registered query: build a (l_returnflag, l_linestatus) summary
+    * of lineitem, register it, then plan a filtered SUBSET-grouping
+    * aggregate written against the BASE table — the rule reroutes it to
+    * the summary, and the registration is dropped again ([[scoped]]).
+    * MvRewriteSpec pins the plan: the optimized scan reads the MV path,
+    * not lineitem. The driver's oracle runs the same SQL on the base
+    * table in DuckDB, so the hash match IS the rewrite's exactness
+    * proof. l_quantity is integer-valued, so its double sums are
+    * order-independent and bit-exact across engines and plans.
+    */
   def demoQuery(spark: SparkSession, dir: String): DataFrame = {
-    RewriteTopK.enable(spark)
     val mvPath = Files.createTempDirectory("graft-mv").toString
     create(spark, "lineitem_rf_ls", s"$dir/lineitem.parquet", mvPath,
       groupCols = Seq("l_returnflag", "l_linestatus"),
       sumCols = Seq("l_quantity"))
-    spark.read.parquet(s"$dir/lineitem.parquet")
+    scoped(spark, spark.read.parquet(s"$dir/lineitem.parquet")
       .filter(col("l_returnflag") =!= "N")
       .groupBy("l_linestatus")
       .agg(sum(col("l_quantity")).as("sum_qty"),
         count(lit(1)).as("n_rows"),
-        favg(col("l_quantity")).as("avg_qty"))
+        favg(col("l_quantity")).as("avg_qty")))(
+      MvCatalog.deregister("lineitem_rf_ls"))
   }
 }

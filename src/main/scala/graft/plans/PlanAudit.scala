@@ -20,7 +20,9 @@ object PlanAudit {
     * broadcast_hash_joins, nested_loop_joins, cartesian_products,
     * parquet_scans, pushed_filter_scans, codegen_eligible_nodes (AQE
     * collapses WholeStageCodegen per stage at execution, so the
-    * pre-execution audit counts nodes that will fuse, not the spans).
+    * pre-execution audit counts nodes that will fuse, not the spans),
+    * topk_exec (final TopKPerGroupExec instances: where the window →
+    * TopK rewrite fired).
     */
   def summarize(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
@@ -49,6 +51,10 @@ object PlanAudit {
         s.contains("PushedFilters: [") && !s.contains("PushedFilters: []")).toLong,
       "codegen_eligible_nodes" -> nodes.count {
         case c: org.apache.spark.sql.execution.CodegenSupport => c.supportCodegen
+        case _ => false
+      }.toLong,
+      "topk_exec" -> nodes.count {
+        case t: TopKPerGroupExec => !t.partial
         case _ => false
       }.toLong)
     metrics.toDF("metric", "value")

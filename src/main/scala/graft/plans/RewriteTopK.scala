@@ -1,13 +1,12 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 
 /** Optimizer rule: `Filter(row_number <= k)` over a single-row_number
   * Window collapses into TopKPerGroupPlan — users write the idiomatic
-  * window formulation and (when the graft extensions are attached) execute
+  * window formulation and execute
   * the bounded-heap operator instead of a full per-group sort.
   *
   * Deliberately narrow: exactly one window expression, it is row_number,
@@ -43,29 +42,5 @@ object RewriteTopK extends Rule[LogicalPlan] {
           TopKPerGroupPlan(part, order, k, child, alias.toAttribute)
         case _ => f
       }
-  }
-
-  /** Idempotently enable the rewrite + strategy on a session. */
-  def enable(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraOptimizations.contains(RewriteTopK)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewriteTopK
-    }
-    if (!spark.experimental.extraOptimizations.contains(RewriteAggToMv)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewriteAggToMv
-    }
-    if (!spark.experimental.extraOptimizations.contains(RewriteExactView)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewriteExactView
-    }
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
-    }
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-    }
   }
 }

@@ -152,15 +152,10 @@ case class TopKPerGroupExec(
 object TopK {
   /** User-facing: top `k` rows per group of `groupCols`, ordered by
     * `sortCols` ((name, descending)); appends an integer `rnk` column.
-    * Registers the planner strategy idempotently on the session.
     */
   def topKPerGroup(df: DataFrame, groupCols: Seq[String],
       sortCols: Seq[(String, Boolean)], k: Int): DataFrame = {
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
-    }
     val analyzed = df.queryExecution.analyzed
     def resolve(name: String): Expression =
       analyzed.output.find(_.name == name).getOrElse(

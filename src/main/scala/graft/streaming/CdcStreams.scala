@@ -925,9 +925,11 @@ object CdcStreams {
     override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
     override def onQueryProgress(e: QueryProgressEvent): Unit = {
       val p = e.progress
+      // triggerExecution is the whole trigger; every other durationMs
+      // entry (addBatch, walCommit, queryPlanning, ...) is a part of it
       buf.add(BatchMetric(Option(p.name).getOrElse(p.id.toString), p.batchId,
-        p.numInputRows, p.processedRowsPerSecond, p.durationMs.values().stream()
-          .mapToLong(l => l.longValue()).sum()))
+        p.numInputRows, p.processedRowsPerSecond,
+        Option(p.durationMs.get("triggerExecution")).fold(0L)(_.longValue)))
     }
     def snapshot: Seq[BatchMetric] =
       buf.toArray(Array.empty[BatchMetric]).toSeq

@@ -171,13 +171,21 @@ object Medallion {
       queryName = s"medallion_stats_${java.util.UUID.randomUUID()}")
     try { q.processAllAvailable() } finally q.stop()
     import spark.implicits._
-    def countOf(path: String): Long =
-      try spark.read.parquet(path).count() catch { case _: Exception => 0L }
     Seq(
       ("bronze", envelopes.length + 3L),
-      ("dlq", countOf(s"$root/dlq")),
-      ("quarantine", countOf(s"$root/quarantine")),
-      ("gold", countOf(s"$root/gold")))
+      ("dlq", layerCount(spark, s"$root/dlq")),
+      ("quarantine", layerCount(spark, s"$root/quarantine")),
+      ("gold", layerCount(spark, s"$root/gold")))
       .toDF("layer", "n_rows")
+  }
+
+  /** Rows in one parquet layer. A layer directory the run never wrote
+    * holds 0 rows; any other read failure (a corrupt file, a schema
+    * clash) propagates instead of reporting an empty layer.
+    */
+  private[graft] def layerCount(spark: SparkSession, path: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) 0L
+    else spark.read.parquet(path).count()
   }
 }

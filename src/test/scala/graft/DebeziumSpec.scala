@@ -170,6 +170,13 @@ class DebeziumSpec extends SparkSpec {
       while ({ total = counted; total < 4 } &&
           System.currentTimeMillis() < deadline) Thread.sleep(100)
       assert(total == 4, s"listener captured $total/4 rows")
+      // duration_ms is the whole trigger, not the sum of its phases
+      val trigger = q.recentProgress.filter(_.numInputRows > 0)
+        .map(p => p.batchId -> p.durationMs.get("triggerExecution").longValue).toMap
+      val durations = listener.snapshot
+        .filter(m => m.query_name == "metrics_probe" && m.event_count > 0)
+        .map(m => m.batch_id -> m.duration_ms).toMap
+      assert(durations == trigger)
       val df = graft.streaming.CdcStreams.metricsDF(spark, listener)
       assert(df.filter(col("duration_ms") < 0).count() == 0)
       assert(df.columns.contains("rows_per_sec"))

@@ -227,8 +227,7 @@ class DedupSpec extends SparkSpec {
     val sig = Tables.documents(spark, sf).limit(5)
       .select(GraftFunctions.minhashSig(col("text"), 16).as("sig"))
     sig.collect().foreach(r => assert(r.getSeq[Long](0).length == 16))
-    // SQL registration path
-    GraftFunctions.register(spark)
+    // the same functions from plain SQL (registered with the session)
     Tables.documents(spark, sf).limit(1).createOrReplaceTempView("t_docs")
     val viaSql = spark.sql(
       "SELECT simhash64(text) AS a, rolling_min_hash(text, 32) AS b, " +

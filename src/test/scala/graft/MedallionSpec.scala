@@ -16,6 +16,17 @@ class MedallionSpec extends SparkSpec {
   private def env(op: String, srcTs: Long, before: String, after: String): String =
     s"""{"before":$before,"after":$after,"source":{"version":"2.4.0","connector":"mysql","name":"g","ts_ms":$srcTs,"db":"d","table":"t"},"op":"$op","ts_ms":${srcTs + 5}}"""
 
+  test("layer counts: a never-written layer is 0 rows, a corrupt one raises") {
+    val root = Files.createTempDirectory("medallion_count").toString
+    assert(Medallion.layerCount(spark, s"$root/never_written") == 0L)
+    val gold = s"$root/gold"
+    spark.range(5).write.parquet(gold)
+    assert(Medallion.layerCount(spark, gold) == 5L)
+    Files.write(Paths.get(s"$gold/part-99999-corrupt.snappy.parquet"),
+      "not a parquet file".getBytes)
+    intercept[Exception](Medallion.layerCount(spark, gold))
+  }
+
   test("kill/restart from checkpoint keeps every layer consistent and exactly-once") {
     val root = Files.createTempDirectory("medallion_spec").toString
     val bronze = s"$root/bronze"

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.plans.{Mv, MvCatalog, RewriteTopK}
+import graft.plans.{Mv, MvCatalog}
 
 /** The aggregate-to-materialized-view rewrite: derivable aggregates over
   * the fact table must reroute to the registered summary scan with
@@ -12,7 +12,6 @@ import graft.plans.{Mv, MvCatalog, RewriteTopK}
 class MvRewriteSpec extends SparkSpec {
 
   private lazy val basePath = {
-    RewriteTopK.enable(spark)
     val root = java.nio.file.Files.createTempDirectory("mv-spec").toString
     val p = s"$root/fact.parquet"
     import spark.implicits._
@@ -254,7 +253,6 @@ class MvRewriteSpec extends SparkSpec {
     assert(plan.contains("graft-mv-star"), plan)
     assert(!plan.contains("lineitem"), s"still scans the fact table:\n$plan")
     val a = rewritten.collect().map(_.toSeq).toSet
-    graft.plans.ViewCatalog.deregister("star_nation_rev")
     val direct = Mv.starQuery(spark, sf)
     assert(direct.queryExecution.executedPlan.toString.contains("lineitem"))
     val b = direct.collect().map(_.toSeq).toSet
@@ -280,8 +278,6 @@ class MvRewriteSpec extends SparkSpec {
     assert(rewritten.queryExecution.executedPlan.toString.contains("graft-mv"),
       rewritten.queryExecution.executedPlan.toString)
     val a = rewritten.collect().map(_.toSeq).toSet
-    // drop the MV so the control query really runs on the base table
-    MvCatalog.deregister("lineitem_rf_ls")
     val direct = spark.read.parquet(s"$sf/lineitem.parquet")
       .filter(col("l_returnflag") =!= "N")
       .groupBy("l_linestatus")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only equivalence check (test scope — never ships): run one or more
   * declared queries against a small SF and exceptAll-compare the result
   * with a previously written `graft.Verify` dump of the SAME corpus —
@@ -14,10 +12,7 @@ object ScratchCmp {
     val dumpDir = args(0)
     val sfDir = args(1)
     val names = args(2).split(",").toSeq
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt)
     var bad = 0
     names.foreach { name =>
       val now = SparkEntry.queries(name)(spark, sfDir)

@@ -806,7 +806,6 @@ class TextOpsSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getAs[Long]("ratio_e4")).toMap
     assert(out.map { case (k, v) => k -> v._1 } === again)
     // SQL facade exposure
-    graft.functions.GraftFunctions.register(spark)
     val viaSql = spark.sql("SELECT deflate_size('spam spam spam')").head().getLong(0)
     assert(viaSql > 0L && viaSql < 15L)
   }

@@ -42,24 +42,18 @@ class TopKSpec extends SparkSpec {
   }
 
   test("RewriteTopK rule turns window row_number filters into the custom exec") {
-    graft.plans.RewriteTopK.enable(spark)
-    try {
-      val viaWindow = Tpch.qTopPartsPerBrand(spark, sf) // plain window formulation
-      val plan = viaWindow.queryExecution.executedPlan.toString
-      assert(plan.contains("TopKPerGroup"), s"rewrite did not fire:\n$plan")
-      assert(!plan.contains(" Window "), s"window exec should be gone:\n$plan")
-      // results identical to the unrewritten formulation
-      val ref = Tpch.qTopPartsPerBrandCustom(spark, sf)
-        .select("p_brand", "p_partkey", "revenue", "rnk")
-      val got = viaWindow.select("p_brand", "p_partkey", "revenue", "rnk")
-      assert(got.exceptAll(ref).count() == 0 && ref.exceptAll(got).count() == 0)
-      // scd1's compound filter (rn === 1 AND ...) must be left untouched
-      val scd1 = graft.cdc.Cdc.currentScd1(spark, sf)
-      assert(scd1.count() > 0)
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == graft.plans.RewriteTopK)
-    }
+    val viaWindow = Tpch.qTopPartsPerBrand(spark, sf) // plain window formulation
+    val plan = viaWindow.queryExecution.executedPlan.toString
+    assert(plan.contains("TopKPerGroup"), s"rewrite did not fire:\n$plan")
+    assert(!plan.contains(" Window "), s"window exec should be gone:\n$plan")
+    // results identical to the unrewritten formulation
+    val ref = Tpch.qTopPartsPerBrandCustom(spark, sf)
+      .select("p_brand", "p_partkey", "revenue", "rnk")
+    val got = viaWindow.select("p_brand", "p_partkey", "revenue", "rnk")
+    assert(got.exceptAll(ref).count() == 0 && ref.exceptAll(got).count() == 0)
+    // scd1's compound filter (rn === 1 AND ...) must be left untouched
+    val scd1 = graft.cdc.Cdc.currentScd1(spark, sf)
+    assert(scd1.count() > 0)
   }
 
   test("partial map-side top-k runs below the exchange") {

@@ -226,32 +226,6 @@ class UtilSpec extends SparkSpec {
     assert(snapshot.nonEmpty)
   }
 
-  test("GraftExtensions injects all custom functions") {
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions().apply(ext) // must not throw; registration exercised
-    // the attach() path registers the same functions on a live session
-    GraftSession.attach(spark)
-    val r = spark.sql(
-      "SELECT simhash64('a b c') AS s, cosine_sim(array(1.0F), array(1.0F)) AS c, " +
-        "hyperplane_bucket(array(1.0F, -2.0F), 8) AS b").first()
-    assert(r.getLong(0) != 0L && math.abs(r.getDouble(1) - 1.0) < 1e-12)
-    assert(r.getInt(2) >= 0 && r.getInt(2) < 256)
-    // the widened scalar surface: kernels callable from plain SQL
-    val r2 = spark.sql(
-      "SELECT ngram_jaccard('a b c d', 'a b c e', 2) AS nj, " +
-        "shingle_jaccard('a b c', 'a b c') AS sj, " +
-        "size(minhash_sig('a b c', 16)) AS k, " +
-        "size(bpe_encode(array('a','b','c'), array('a'), array('b'))) AS ntok").first()
-    assert(r2.getDouble(0) > 0.0 && r2.getDouble(0) < 1.0)
-    assert(math.abs(r2.getDouble(1) - 1.0) < 1e-12)
-    assert(r2.getInt(2) == 16 && r2.getInt(3) == 2) // ab fused, c alone
-    // aggregates resolve through SQL too (analyzer wraps AggregateFunction)
-    val r3 = spark.sql(
-      "SELECT size(minhash_agg(w, 8)) AS sig, quantile_sketch(x, array(0.5D), 50)[0] AS med " +
-        "FROM VALUES (10L, 1.0D), (20L, 2.0D), (30L, 3.0D) AS t(w, x)").first()
-    assert(r3.getInt(0) == 8 && math.abs(r3.getDouble(1) - 2.0) < 1e-9)
-  }
-
   test("multi-table merge applies mixed-table batches in one partitioned write") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("mtm_spec").toString + "/gold"
@@ -331,7 +305,6 @@ class UtilSpec extends SparkSpec {
   }
 
   test("registered views expose the whole surface to plain spark.sql") {
-    GraftSession.attach(spark)
     Tables.registerViews(spark, sf)
     // custom function + view in one SQL statement
     val sigs = spark.sql(

@@ -12,7 +12,8 @@ A metric change is a REGRESSION when it moves in the bad direction:
   worse when HIGHER: shuffle_exchanges, sort_merge_joins,
       nested_loop_joins, cartesian_products, unsafe_bnlj
   worse when LOWER:  broadcast_hash_joins, pushed_filter_scans,
-      codegen_eligible_nodes
+      codegen_eligible_nodes, topk_exec (a lost window -> TopKPerGroup
+      rewrite)
 
 Everything else (parquet_scans, broadcast_exchanges, scalar/bounded/
 filtered bnlj counts) is informational: reported when it changes, never
@@ -32,7 +33,7 @@ import sys
 WORSE_HIGHER = ["shuffle_exchanges", "sort_merge_joins", "nested_loop_joins",
                 "cartesian_products", "unsafe_bnlj"]
 WORSE_LOWER = ["broadcast_hash_joins", "pushed_filter_scans",
-               "codegen_eligible_nodes"]
+               "codegen_eligible_nodes", "topk_exec"]
 
 
 def main():
