@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Observation, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
 import scala.jdk.CollectionConverters._
 
@@ -36,7 +37,14 @@ import scala.jdk.CollectionConverters._
   *  - '''Query''' ([[read]]) = merge-on-read: latest-per-key over
   *    base ∪ deltas, tombstones drop. Identical window to
   *    `applyCdcBatch` ((ts_us, event_id) desc), so the visible state is
-  *    the same SCD1 answer, just assembled at read time.
+  *    the same SCD1 answer, just assembled at read time. The read lists
+  *    the base's and every delta's part files on the driver and scans
+  *    exactly those with the fixed [[stateSchema]]
+  *    ([[org.apache.spark.sql.GraftSqlBridge.parquetScan]]): building it
+  *    runs no schema-inference job and no parallel-listing job, however
+  *    many deltas are unfolded, so its fixed cost stays flat as they
+  *    multiply. A committed delta never changes after its rename, so a
+  *    listing taken at read time is the delta.
   *  - '''Compaction''' ([[compact]]) = fold the accumulated deltas into
   *    the base, rewriting ONLY the buckets the deltas touch (dynamic
   *    partition overwrite); runs inline every `compactEvery` commits, so
@@ -63,13 +71,20 @@ import scala.jdk.CollectionConverters._
   */
 object BucketedGold {
 
-  /** The normalized CDC state columns this target stores — the same frame
-    * [[CdcStreams.applyCdcBatch]] merges.
+  /** The normalized CDC state this target stores — the same frame
+    * [[CdcStreams.applyCdcBatch]] merges. Every delta is written with these
+    * types, so reads take the schema from here instead of inferring it.
     */
-  val stateCols: Seq[String] = Seq("user_id", "operation", "ts_us", "event_id", "value")
+  val stateSchema: StructType = StructType(Seq(
+    StructField("user_id", LongType), StructField("operation", StringType),
+    StructField("ts_us", LongType), StructField("event_id", LongType),
+    StructField("value", DoubleType)))
 
-  private def fs(spark: SparkSession): FileSystem =
-    FileSystem.get(spark.sparkContext.hadoopConfiguration)
+  val stateCols: Seq[String] = stateSchema.fieldNames.toSeq
+
+  /** The filesystem holding `root` — not the default one. */
+  private def fs(spark: SparkSession, root: String): FileSystem =
+    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def basePath(root: String) = s"$root/base"
   private def deltaDir(root: String) = s"$root/delta"
@@ -106,39 +121,45 @@ object BucketedGold {
   /** Sorted committed delta dirs (oldest first). Driver-side listing,
     * O(#deltas) ≤ compactEvery + in-flight.
     */
-  private def listDeltas(spark: SparkSession, root: String): Seq[String] = {
+  private def listDeltas(f: FileSystem, root: String): Seq[Path] = {
     val d = new Path(deltaDir(root))
-    val f = fs(spark)
     if (!f.exists(d)) Seq.empty
     else f.listStatus(d).filter(s => s.isDirectory && s.getPath.getName.startsWith("b"))
-      .map(_.getPath.toString).sorted.toSeq
+      .map(_.getPath).sortBy(_.toString).toSeq
   }
 
-  private def tryRead(spark: SparkSession, path: String): Option[DataFrame] =
-    // exists-precheck is safe here (no TOCTOU): base is only ever written
-    // by the single-threaded applier that is asking, and a dir that
-    // appears between probe and read would hold nothing to merge anyway
-    if (!fs(spark).exists(new Path(path))) None
-    else try {
-      val df = spark.read.parquet(path)
-      Some(df.select(stateCols.map(col): _*))
-    } catch {
-      // a base dir whose every bucket was GC'd away has no files left to
-      // infer a schema from — same thing as "no base yet"
-      case e: org.apache.spark.sql.AnalysisException
-        if e.getErrorClass == "UNABLE_TO_INFER_SCHEMA" => None
-      case e: Exception if CdcStreams.isMissingTarget(e) => None
-    }
+  /** The data files under `dir` at any depth, skipping what Spark's own
+    * listing skips: `_SUCCESS`, `.crc` sidecars, `_temporary` and
+    * `.spark-staging-*` dirs.
+    */
+  private def dataFiles(f: FileSystem, dir: Path): Array[FileStatus] =
+    f.listStatus(dir).filterNot { s =>
+      val n = s.getPath.getName
+      n.startsWith("_") || n.startsWith(".")
+    }.flatMap(s => if (s.isDirectory) dataFiles(f, s.getPath) else Array(s))
+
+  /** The state rows in the files under `dirs` (the base's `bucket` column
+    * included when a dir is the base), or None when there are no files —
+    * a base whose every bucket was GC'd away is the same as no base.
+    */
+  private def scan(spark: SparkSession, f: FileSystem, dirs: Seq[Path]): Option[DataFrame] = {
+    val listed = dirs.map(d => f.makeQualified(d)).map(d => d -> dataFiles(f, d))
+      .filter(_._2.nonEmpty)
+    if (listed.isEmpty) None else Some(GraftSqlBridge.parquetScan(spark, listed, stateSchema))
+  }
+
+  /** The base's rows, with its `bucket` column. An exists-precheck is safe
+    * (no TOCTOU): the base is only ever written by the single-threaded
+    * applier that is asking, and a dir that appears between probe and read
+    * would hold nothing to merge anyway.
+    */
+  private def readBase(spark: SparkSession, f: FileSystem, root: String): Option[DataFrame] = {
+    val base = new Path(basePath(root))
+    if (!f.exists(base)) None else scan(spark, f, Seq(base))
+  }
 
   private def emptyState(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("operation", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("ts_us", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("event_id", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("value", org.apache.spark.sql.types.DoubleType))))
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], stateSchema)
 
   // one compaction at a time per process; appends never wait on it. The
   // queue is the driver-side seam only — every heavy step inside compact()
@@ -193,8 +214,8 @@ object BucketedGold {
       batchId: Long, numBuckets: Int = 64, compactEvery: Int = 16,
       compactAsync: Boolean = false): Boolean = {
     // job-free, plan-free emptiness probe (analysis-level leaves only)
-    if (org.apache.spark.sql.GraftSqlBridge.isStaticallyEmpty(batch)) return false
-    val f = fs(spark)
+    if (GraftSqlBridge.isStaticallyEmpty(batch)) return false
+    val f = fs(spark, root)
     val appId = spark.sparkContext.applicationId
     val scratch = new Path(scratchPath(root, appId, batchId))
     val dst = new Path(deltaPath(root, appId, batchId))
@@ -203,7 +224,7 @@ object BucketedGold {
     // the commit's row count rides the write itself: an unnamed observation
     // (a replayed batch id would collide with a named one), so no footer pass
     val written = new Observation()
-    batch.select(stateCols.map(col): _*)
+    batch.select(stateSchema.map(c => col(c.name).cast(c.dataType)): _*)
       .observe(written, count(lit(1)).as("rows"))
       .write.mode("overwrite").parquet(scratch.toString)
     if (written.get("rows") == 0L) {
@@ -215,7 +236,7 @@ object BucketedGold {
     f.delete(dst, true)
     if (!f.rename(scratch, dst))
       throw new java.io.IOException(s"BucketedGold commit failed: $scratch -> $dst")
-    val unfolded = listDeltas(spark, root).size -
+    val unfolded = listDeltas(f, root).size -
       retired.getOrDefault(root, java.util.Collections.emptySet[String]()).size
     if (unfolded >= compactEvery) {
       if (!compactAsync) compact(spark, root, numBuckets)
@@ -257,11 +278,10 @@ object BucketedGold {
     * tail) — compaction's input and [[read]]'s pre-filter frame.
     */
   private def rawUnion(spark: SparkSession, root: String): DataFrame = {
-    val deltas = listDeltas(spark, root)
-    val base = tryRead(spark, basePath(root))
-    val parts = base.toSeq ++
-      (if (deltas.isEmpty) Seq.empty
-       else Seq(spark.read.parquet(deltas: _*).select(stateCols.map(col): _*)))
+    val f = fs(spark, root)
+    val deltas = listDeltas(f, root)
+    val parts = (readBase(spark, f, root).toSeq ++ scan(spark, f, deltas))
+      .map(_.select(stateCols.map(col): _*))
     if (parts.isEmpty) emptyState(spark)
     else parts.reduce(_.unionByName(_))
   }
@@ -290,7 +310,7 @@ object BucketedGold {
     */
   def compact(spark: SparkSession, root: String, numBuckets: Int = 64,
       gcTombstonesBeforeUs: Option[Long] = None): Unit = {
-    val f = fs(spark)
+    val f = fs(spark, root)
     // retire what the PREVIOUS compaction folded (grace period over)
     Option(retired.remove(root)).foreach(_.forEach { d =>
       f.delete(new Path(d), true); ()
@@ -312,19 +332,19 @@ object BucketedGold {
           && s.getModificationTime < cutoff)
         .foreach { s => f.delete(s.getPath, true); () }
     }
-    val deltas = listDeltas(spark, root)
-    if (deltas.isEmpty) return
-    val deltaRows = spark.read.parquet(deltas: _*).select(stateCols.map(col): _*)
-      .withColumn("bucket", pmod(xxhash64(col("user_id")), lit(numBuckets)))
+    val deltas = listDeltas(f, root)
+    val deltaRows = scan(spark, f, deltas) match {
+      case Some(d) => d.withColumn("bucket", pmod(xxhash64(col("user_id")), lit(numBuckets)))
+      case None => return
+    }
     // the buckets this compaction touches — bounded by numBuckets
     val touched = deltaRows.select("bucket").distinct()
       .collect().map(_.getLong(0))
-    val existing = tryRead(spark, basePath(root)) match {
-      case Some(_) =>
-        // re-read WITH the partition column so pruning hits the dirs
-        spark.read.parquet(basePath(root))
-          .filter(col("bucket").isInCollection(touched.toSeq))
-          .select((stateCols :+ "bucket").map(col): _*)
+    val existing = readBase(spark, f, root) match {
+      // the partition filter prunes the scan to the touched bucket dirs
+      case Some(base) => base
+        .filter(col("bucket").isInCollection(touched.toSeq))
+        .select((stateCols :+ "bucket").map(col): _*)
       case None => emptyState(spark).withColumn("bucket", lit(0L)).limit(0)
     }
     val w = Window.partitionBy("user_id").orderBy(col("ts_us").desc, col("event_id").desc)
@@ -358,7 +378,7 @@ object BucketedGold {
     // NEXT compaction (grace period — see `retired`); a crash before the
     // eventual delete re-merges them onto the new base, a no-op
     val set = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    deltas.foreach(set.add)
+    deltas.foreach(d => set.add(d.toString))
     retired.put(root, set)
   }
 

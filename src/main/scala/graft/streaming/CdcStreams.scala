@@ -798,7 +798,7 @@ object CdcStreams {
     * propagate: swallowing it as "empty" would silently merge the batch
     * against nothing and TRUNCATE the target to the batch's keys.
     */
-  private[streaming] def isMissingTarget(e: Throwable): Boolean = e match {
+  private def isMissingTarget(e: Throwable): Boolean = e match {
     case a: org.apache.spark.sql.AnalysisException =>
       a.getErrorClass == "PATH_NOT_FOUND" ||
         Option(a.getMessage).exists(_.contains("Path does not exist"))
@@ -808,8 +808,8 @@ object CdcStreams {
 
   def applyCdcBatch(spark: SparkSession, batch: DataFrame, targetPath: String): Unit = {
     val incoming = batch.select("user_id", "operation", "ts_us", "event_id", "value")
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     val dst = new org.apache.hadoop.fs.Path(targetPath)
+    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bakPath = targetPath + "_bak"
     val bak = new org.apache.hadoop.fs.Path(bakPath)
     // crash recovery: if a previous apply died between its two renames

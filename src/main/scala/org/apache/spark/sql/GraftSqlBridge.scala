@@ -39,4 +39,28 @@ object GraftSqlBridge {
       case _ => false
     }
   }
+
+  /** A parquet scan over files the caller has already listed: each root dir
+    * with the data files under it (`k=v` dirs between a root and its files
+    * become partition columns), read with `schema`. The scan's file index is
+    * seeded with those listings, so building the Dataset runs no Spark job —
+    * no schema inference and no parallel listing, however many roots.
+    */
+  def parquetScan(spark: SparkSession, listed: Seq[(org.apache.hadoop.fs.Path,
+      Array[org.apache.hadoop.fs.FileStatus])], schema: types.StructType): DataFrame = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation,
+      InMemoryFileIndex, LogicalRelation}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val files = listed.toMap
+    val cache = new FileStatusCache {
+      override def getLeafFiles(path: Path): Option[Array[FileStatus]] = files.get(path)
+      override def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
+    }
+    val index = new InMemoryFileIndex(spark, listed.map(_._1), Map.empty, Some(schema), cache)
+    val relation = HadoopFsRelation(index, index.partitionSchema, schema, None,
+      new ParquetFileFormat, Map.empty)(spark)
+    ofRows(spark, LogicalRelation(relation))
+  }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 import graft.streaming.{BucketedGold, CdcStreams}
 
@@ -20,6 +21,138 @@ class BucketedGoldSpec extends SparkSpec {
   private def stateSet(df: DataFrame): Set[(Long, String, Long, Long, Double)] =
     df.collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
       r.getLong(3), r.getDouble(4))).toSet
+
+  /** The jobs `body` starts, by call site: a listener sees every job start
+    * between two sentinel jobs, so the listener queue is drained on return.
+    */
+  private def jobsOf[T](body: => T): (T, Seq[String]) = {
+    val sc = spark.sparkContext
+    val (open, close) = (s"open-${System.nanoTime}", s"close-${System.nanoTime}")
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val closed = new java.util.concurrent.CountDownLatch(1)
+    @volatile var opened = false
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        val desc = props.map(_.getProperty("spark.job.description"))
+        if (desc.contains(open)) opened = true
+        else if (desc.contains(close)) closed.countDown()
+        else if (opened) seen.add(desc.flatMap(Option(_))
+          .orElse(props.flatMap(p => Option(p.getProperty("callSite.short")))).getOrElse(""))
+      }
+    }
+    def sentinel(d: String): Unit = {
+      sc.setJobDescription(d)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sentinel(open)
+      val r = body
+      sentinel(close)
+      assert(closed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (r, seen.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** The SCD1 state of `rows` computed directly: latest per key by
+    * (ts_us, event_id), deleted keys dropped.
+    */
+  private def expectedState(rows: Seq[(Long, String, Long, Long, Double)]) =
+    rows.groupBy(_._1).values.map(_.maxBy(r => (r._3, r._4)))
+      .filter(_._2 != "DELETE").toSet
+
+  private def keyBatch(i: Int) = (0 until 25).map { k =>
+    val key = (i * 7L + k * 13L) % 300
+    (key, if (k % 11 == 5) "DELETE" else "UPDATE", 1000L * i + k, 1000L * i + k, i + k / 10.0)
+  }
+
+  test("a read's fixed cost is flat in the delta count: no listing or schema-inference job") {
+    val root = Files.createTempDirectory("bg-flat").toString
+    val gold = s"$root/gold"
+    var rows = Seq.empty[(Long, String, Long, Long, Double)]
+    def appendUpTo(n: Int): Unit = (rows.size / 25 until n).foreach { i =>
+      BucketedGold.appendBatch(spark, batchDF(keyBatch(i): _*), gold, i.toLong,
+        compactEvery = 1000)
+      rows ++= keyBatch(i)
+    }
+    // a user's read: build the merged state, then collect it
+    def readJobs(): Seq[String] = {
+      val (df, built) = jobsOf(BucketedGold.read(spark, gold))
+      assert(built.isEmpty, s"building the read ran jobs: $built")
+      val (state, ran) = jobsOf(stateSet(df))
+      assert(state === expectedState(rows))
+      assert(!ran.exists(_.startsWith("Listing leaf files")), s"listing job: $ran")
+      ran
+    }
+    appendUpTo(8)
+    val at8 = readJobs()
+    appendUpTo(40) // past spark.sql.sources.parallelPartitionDiscovery.threshold (32)
+    assert(new java.io.File(s"$gold/delta").listFiles().count(_.isDirectory) === 40)
+    val at40 = readJobs()
+    assert(at8.size === at40.size, s"8 deltas: $at8; 40 deltas: $at40")
+  }
+
+  test("a compacted 64-bucket base plus deltas reads with no listing or schema-inference job") {
+    val root = Files.createTempDirectory("bg-flat-base").toString
+    val gold = s"$root/gold"
+    val seed = (0L until 600L).map(i => (i, "INSERT", i, i, i * 0.5))
+    BucketedGold.appendBatch(spark, batchDF(seed: _*), gold, 0L, compactEvery = 1000)
+    BucketedGold.compact(spark, gold) // the default 64 buckets
+    val buckets = new java.io.File(s"$gold/base").listFiles().count(_.getName.startsWith("bucket="))
+    assert(buckets === 64)
+    val later = (1 to 3).flatMap { i =>
+      val b = keyBatch(i).map { case (k, op, ts, id, v) => (k, op, ts + 1000, id + 1000, v) }
+      BucketedGold.appendBatch(spark, batchDF(b: _*), gold, i.toLong, compactEvery = 1000)
+      b
+    }
+    val (df, built) = jobsOf(BucketedGold.read(spark, gold))
+    assert(built.isEmpty, s"building the read ran jobs: $built")
+    val (state, ran) = jobsOf(stateSet(df))
+    assert(!ran.exists(_.startsWith("Listing leaf files")), s"listing job: $ran")
+    assert(state === expectedState(seed ++ later))
+    // a compaction onto that base lists nothing in parallel either
+    val (_, compacted) = jobsOf(BucketedGold.compact(spark, gold))
+    assert(!compacted.exists(_.startsWith("Listing leaf files")), s"listing job: $compacted")
+    assert(stateSet(BucketedGold.read(spark, gold)) === state)
+  }
+
+  test("a batch with other column types is stored in the fixed state schema") {
+    import spark.implicits._
+    val gold = s"${Files.createTempDirectory("bg-types")}/gold"
+    val other = Seq((1, "INSERT", 10, 1, BigDecimal("1.5")), (2, "INSERT", 11, 2, BigDecimal("2.5")))
+      .toDF("user_id", "operation", "ts_us", "event_id", "value")
+    BucketedGold.appendBatch(spark, other, gold, 0L)
+    BucketedGold.appendBatch(spark, batchDF((1L, "UPDATE", 20L, 3L, 3.0)), gold, 1L)
+    val read = BucketedGold.read(spark, gold)
+    assert(read.schema.map(f => f.name -> f.dataType) ===
+      BucketedGold.stateSchema.map(f => f.name -> f.dataType))
+    assert(stateSet(read) === Set((1L, "UPDATE", 20L, 3L, 3.0), (2L, "INSERT", 11L, 2L, 2.5)))
+  }
+
+  test("a non-file default filesystem does not redirect a file: gold root") {
+    val root = "file:" + Files.createTempDirectory("bg-defaultfs").toString
+    val conf = spark.sparkContext.hadoopConfiguration
+    val saved = Option(conf.get("fs.defaultFS", null))
+    // a scheme with no filesystem: any lookup of the default one fails loudly
+    conf.set("fs.defaultFS", "graftnofs:///")
+    try {
+      val b1 = batchDF((1L, "INSERT", 10L, 1L, 1.0), (2L, "INSERT", 11L, 2L, 2.0))
+      val b2 = batchDF((1L, "DELETE", 20L, 3L, 0.0), (3L, "INSERT", 21L, 4L, 3.0))
+      Seq(b1, b2).zipWithIndex.foreach { case (b, i) =>
+        BucketedGold.appendBatch(spark, b, s"$root/gold", i.toLong, numBuckets = 8)
+        CdcStreams.applyCdcBatch(spark, b, s"$root/flat")
+      }
+      BucketedGold.compact(spark, s"$root/gold", numBuckets = 8)
+      val want = Set((2L, "INSERT", 11L, 2L, 2.0), (3L, "INSERT", 21L, 4L, 3.0))
+      assert(stateSet(BucketedGold.read(spark, s"$root/gold")) === want)
+      assert(stateSet(spark.read.parquet(s"$root/flat")
+        .select("user_id", "operation", "ts_us", "event_id", "value")) === want)
+    } finally saved match {
+      case Some(v) => conf.set("fs.defaultFS", v)
+      case None => conf.unset("fs.defaultFS")
+    }
+  }
 
   test("append+read matches the full-rewrite applyCdcBatch state") {
     val root = Files.createTempDirectory("bg-eq").toString
@@ -147,11 +280,14 @@ class BucketedGoldSpec extends SparkSpec {
     val gold = s"$root/gold"
     BucketedGold.appendBatch(spark, batchDF((1L, "INSERT", 1L, 1L, 1.0)), gold, 0L,
       numBuckets = 8, compactEvery = 1000)
-    // a corrupt base part file: the compaction's base read fails
-    val bucket = new java.io.File(s"$gold/base/bucket=0")
-    bucket.mkdirs()
-    Files.write(new java.io.File(bucket, "part-00000-corrupt.parquet").toPath,
-      "not parquet".getBytes("UTF-8"))
+    // a corrupt part file in every base bucket: the compaction's base read
+    // fails whichever buckets its partition filter keeps
+    (0 until 8).foreach { b =>
+      val bucket = new java.io.File(s"$gold/base/bucket=$b")
+      bucket.mkdirs()
+      Files.write(new java.io.File(bucket, "part-00000-corrupt.parquet").toPath,
+        "not parquet".getBytes("UTF-8"))
+    }
     assert(BucketedGold.appendBatch(spark, batchDF((2L, "INSERT", 2L, 2L, 2.0)), gold, 1L,
       numBuckets = 8, compactEvery = 1, compactAsync = true),
       "the delta commit itself does not wait on the compaction")
