@@ -33,7 +33,7 @@ object ScaleUp {
   }
 
   def run(spark: SparkSession, src: String, dst: String, factor: Int): Unit = {
-    def tbl(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
+    def tbl(name: String): DataFrame = Tables.load(spark, src, name)
     def write(df: DataFrame, name: String): Unit =
       df.write.mode("overwrite").parquet(s"$dst/$name.parquet")
     def maxOf(df: DataFrame, c: String): Long =

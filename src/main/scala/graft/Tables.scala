@@ -1,17 +1,23 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.types._
 
-/** Parquet loaders for the driver-generated tables at /root/testdata/sf*.
+/** Parquet loaders for a corpus directory's tables (`<dir>/<table>.parquet`,
+  * a file or a directory of part files).
   *
   * Mirrors the reference's TPC-H data model
   * (reference: scripts/setup_tpch_database.py:84-245) plus the CDC stream
   * analog `events` and the LLM-pipeline tables `documents`/`embeddings`.
   *
-  * Scale note: plain `spark.read.parquet` keeps the scan pushdown-able
-  * (PushedFilters / ReadSchema reach the file source); at 100 TB these
-  * tables would be directory-partitioned and the same loaders apply.
+  * Every table opens as `spark.read.schema(s).parquet(path)` with `s` the
+  * schema a bare `spark.read.parquet(path)` would infer, read from one
+  * footer on the driver ([[org.apache.spark.sql.GraftSqlBridge.parquetSchema]]):
+  * building a query over these tables runs no Spark job, where inference
+  * would run a one-task job per table per query. The scan is the same
+  * plain file-source scan, so filters and column pruning still reach it;
+  * at 100 TB these tables would be directory-partitioned and the same
+  * loaders apply (partition columns are inferred from the `k=v` dirs).
   */
 object Tables {
 
@@ -19,11 +25,11 @@ object Tables {
     * (the TIMESTAMP(NANOS) files Spark's parquet reader rejects with
     * [PARQUET_TYPE_ILLEGAL] are written this way) and TIMESTAMP(MICROS).
     * Forcing INT64 reads the raw physical value either way; which unit
-    * that value carries is decided from the file's own logical type (one
-    * driver-side footer read), and micros are lifted ×1000 to the
-    * schema's nanosecond contract. Downstream `ts DIV 1000` then matches
-    * DuckDB's `epoch_us(ts)` truncation exactly — keeping the oracle
-    * comparable regardless of which generator wrote the file.
+    * that value carries is decided from the file's own logical type (the
+    * driver-side footer read every loader makes), and micros are lifted
+    * ×1000 to the schema's nanosecond contract. Downstream `ts DIV 1000`
+    * then matches DuckDB's `epoch_us(ts)` truncation exactly — keeping the
+    * oracle comparable regardless of which generator wrote the file.
     */
   val eventsSchema: StructType = StructType(Seq(
     StructField("event_id", LongType),
@@ -65,7 +71,7 @@ object Tables {
   def events(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     val path = s"$dir/events.parquet"
-    val tsIsMicros = spark.read.parquet(path).schema
+    val tsIsMicros = GraftSqlBridge.parquetSchema(spark, path)
       .find(_.name == "ts")
       .exists(f => f.dataType == TimestampType || f.dataType == TimestampNTZType)
     val raw = spark.read.schema(eventsSchema).parquet(path)
@@ -82,8 +88,13 @@ object Tables {
   def documents(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "embeddings")
 
-  private def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Table `name` of corpus `dir` as stored: `events` keeps its on-disk
+    * `ts` here, unlike [[events]].
+    */
+  private[graft] def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(GraftSqlBridge.parquetSchema(spark, path)).parquet(path)
+  }
 
   /** Scale-adaptive parallelism floor for heavy MAP-SIDE stages over a
     * scan (optimization guide §2: derive partitioning from the input,

@@ -1075,9 +1075,10 @@ object Similarity {
     * subspaces and k-means each independently — the standard compression
     * step past int8 ([[quantizeEmbeddings]]): 64 float dims → m code
     * bytes (32× here), with table-lookup (ADC) scoring instead of float
-    * dot products. Training runs `m` small KMeans fits (fixed seed); at
-    * 100 TB you fit on a sample — the codebook is O(m·k·d) floats
-    * regardless of corpus size — and only ENCODE touches every row.
+    * dot products. Training is one seeded Lloyd loop that fits all `m`
+    * subspaces together, one shuffle-free job per iteration; at 100 TB
+    * you fit on a sample — the codebook is O(m·k·d) floats regardless of
+    * corpus size — and only ENCODE touches every row.
     */
   /** Trained index artifacts, keyed by (corpus dir, hyperparameters).
     * Both trainers are seeded and deterministic in the corpus, so the
@@ -1097,51 +1098,76 @@ object Similarity {
     pqCbMemo.getOrElseUpdate((dir, Tables.snapshotFingerprint(dir), m, kCodes, iters),
       pqCodebookTrain(spark, dir, m, kCodes, iters))
 
-  private def pqCodebookTrain(spark: SparkSession, dir: String,
+  private[graft] def pqCodebookTrain(spark: SparkSession, dir: String,
       m: Int, kCodes: Int, iters: Int): Array[Float] = {
     val e = Tables.embeddings(spark, dir)
     val dim = e.select(size(col("embedding"))).head().getInt(0)
     val d = dim / m
-    def flat(c: Map[(Int, Int), Seq[Double]]): Array[Float] = {
-      val a = new Array[Float](m * kCodes * d)
-      c.foreach { case ((s, code), vs) =>
-        var j = 0
-        while (j < d) { a((s * kCodes + code) * d + j) = vs(j).toFloat; j += 1 }
-      }
-      a
-    }
+    // flat codebook, laid out [(sub·kCodes + code)·d + j] like the kernels'
+    val cb = new Array[Float](m * kCodes * d)
     // deterministic hash-sampled init: per subspace, the kCodes subvectors
     // with the smallest salted row hash (one job)
     val wInit = Window.partitionBy("sub")
       .orderBy(xxhash64(col("vec_id"), col("sub")), col("vec_id"))
-    var cents: Map[(Int, Int), Seq[Double]] = e.select(col("vec_id"), posexplode(expr(
+    e.select(col("vec_id"), posexplode(expr(
         s"transform(sequence(0, ${m - 1}), s -> transform(slice(embedding, s * $d + 1, $d), x -> CAST(x AS DOUBLE)))"))
         .as(Seq("sub", "sv")))
       .withColumn("r", row_number().over(wInit))
       .filter(col("r") <= kCodes)
       .select(col("sub"), (col("r") - 1).cast("int").as("code"), col("sv"))
-      .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2)).toMap
-    // Lloyd iterations: ONE shared corpus scan per iteration trains all m
-    // codebooks at once — assignment is the codegen'd PqCodes kernel (the
-    // exact expression encode uses; interpreted higher-order lambdas at
-    // k=256 cost ~100× per element, and m sequential MLlib fits would
-    // re-scan the corpus m times per iteration). The shuffle carries only
-    // the (sub, code, dim) partial means: O(m·k·d · partitions).
+      .collect().foreach { r =>
+        val sv = r.getSeq[Double](2)
+        var j = 0
+        while (j < d) { cb((r.getInt(0) * kCodes + r.getInt(1)) * d + j) = sv(j).toFloat; j += 1 }
+      }
+    // Lloyd iterations: ONE job per iteration trains all m codebooks at
+    // once, with no shuffle. Each partition assigns its rows with the
+    // PqCodes kernel (the exact function encode uses; interpreted
+    // higher-order lambdas at k=256 cost ~100× per element, and m
+    // sequential MLlib fits would re-scan the corpus m times per
+    // iteration) and returns one (sum, count) pair of m·k·d arrays — the
+    // driver collects O(m·k·d · partitions) numbers whatever the corpus
+    // size. A null element is left out of its dimension's sum and count.
+    // The driver merges the partials in partition order, so a given input
+    // always trains the same codebook.
+    val vectors = e.select(col("embedding")).queryExecution.toRdd
     for (_ <- 1 to iters) {
-      val codes = GraftFunctions.pqCodes(col("embedding"), flat(cents), m, kCodes, d)
-      val updated = e.select(col("embedding"), posexplode(codes).as(Seq("sub", "code")))
-        .select(col("sub"), col("code"),
-          slice(col("embedding"), col("sub") * lit(d) + lit(1), lit(d)).as("sv"))
-        .select(col("sub"), col("code"), posexplode(col("sv")).as(Seq("dim", "v")))
-        .groupBy("sub", "code", "dim").agg(avg(col("v").cast("double")).as("mv"))
-        .groupBy("sub", "code")
-        .agg(expr("transform(sort_array(collect_list(struct(dim, mv))), x -> x.mv)").as("cent"))
-        .collect()
-        .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2)).toMap
-      // codes that lost every member keep their previous centroid
-      cents = cents.map { case (key, old) => key -> updated.getOrElse(key, old) }
+      val prev = cb.clone()
+      val partials = vectors.mapPartitions { rows =>
+        val sum = new Array[Double](prev.length)
+        val cnt = new Array[Long](prev.length)
+        rows.foreach { row =>
+          if (!row.isNullAt(0)) {
+            val v = row.getArray(0)
+            val codes = TextHashes.pqCodes(v.toFloatArray(), prev, m, kCodes, d)
+            var s = 0
+            while (s < m) {
+              var j = 0
+              while (j < d) {
+                if (!v.isNullAt(s * d + j)) {
+                  val at = (s * kCodes + codes(s)) * d + j
+                  sum(at) += v.getFloat(s * d + j).toDouble
+                  cnt(at) += 1
+                }
+                j += 1
+              }
+              s += 1
+            }
+          }
+        }
+        Iterator.single((sum, cnt))
+      }.collect()
+      // a (code, dim) that lost every member keeps its previous centroid
+      var i = 0
+      while (i < cb.length) {
+        var sum = 0.0
+        var cnt = 0L
+        partials.foreach { case (ps, pc) => sum += ps(i); cnt += pc(i) }
+        if (cnt > 0) cb(i) = (sum / cnt).toFloat
+        i += 1
+      }
     }
-    flat(cents)
+    cb
   }
 
   // Round 11: the query-side ADC distance tables used to be built by
@@ -1171,9 +1197,8 @@ object Similarity {
   def annPqTopK(spark: SparkSession, dir: String, k: Int = DefaultK,
       m: Int = 8, kCodes: Int = 256): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    val dim = e.select(size(col("embedding"))).head().getInt(0)
-    val d = dim / m
     val cb = pqCodebook(spark, dir, m, kCodes)
+    val d = cb.length / (m * kCodes)
     // each query's flat m·k distance table (lambda math over the literal
     // codebook — fine at query-set size; the CORPUS side never touches it)
     val qtab = GraftFunctions.pqQueryTable(col("embedding"), cb, m, kCodes, d)
@@ -1219,13 +1244,12 @@ object Similarity {
     ivfPqMemo.getOrElseUpdate((dir, Tables.snapshotFingerprint(dir), nClusters, m, kCodes), {
       import org.apache.spark.ml.clustering.KMeans
       import org.apache.spark.ml.functions.array_to_vector
-      val e = Tables.embeddings(spark, dir)
-      val dim = e.select(size(col("embedding"))).head().getInt(0)
       val coarse = new KMeans().setK(nClusters).setSeed(7L).setMaxIter(5)
         .setFeaturesCol("fv").setPredictionCol("cluster")
-        .fit(e.withColumn("fv", array_to_vector(col("embedding"))).select("fv"))
-      IvfPqModel(coarse, pqCodebook(spark, dir, m, kCodes), nClusters, m,
-        kCodes, dim / m)
+        .fit(Tables.embeddings(spark, dir)
+          .withColumn("fv", array_to_vector(col("embedding"))).select("fv"))
+      val cb = pqCodebook(spark, dir, m, kCodes)
+      IvfPqModel(coarse, cb, nClusters, m, kCodes, cb.length / (m * kCodes))
     })
 
   def annIvfPqTopK(spark: SparkSession, dir: String, k: Int = DefaultK,
@@ -1399,12 +1423,13 @@ object Similarity {
       .select(col("vec_id"), vector_to_array(col("pc")).as("pc"))
     // whitening scales = per-component std of the PROJECTED corpus (k
     // driver-side scalars from one aggregate — exact, not the model's
-    // variance PROPORTIONS). The projection is a row-local matrix multiply,
+    // variance PROPORTIONS), put in component order on the driver: k rows
+    // need no sort job. The projection is a row-local matrix multiply,
     // so the second pass over it is cheaper than holding a cached copy.
     val stds = projected
       .select(posexplode(col("pc")).as(Seq("j", "v")))
       .groupBy("j").agg(stddev_samp(col("v")).as("s"))
-      .orderBy("j").collect().map(_.getDouble(1))
+      .collect().sortBy(_.getInt(0)).map(_.getDouble(1))
     val sLit = typedLit(stds.map(s => if (s < 1e-9) 1e-9 else s).toSeq)
     projected
       .withColumn("pc_r", expr("transform(pc, x -> round(x, 4))"))

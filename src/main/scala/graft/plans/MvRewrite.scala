@@ -1,6 +1,7 @@
 package graft.plans
 
 import java.nio.file.Files
+import graft.Tables
 
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
@@ -543,9 +544,9 @@ object Mv {
     * positions, and both sides' independent optimizer runs).
     */
   private[graft] def starQuery(spark: SparkSession, dir: String): DataFrame = {
-    val l = spark.read.parquet(s"$dir/lineitem.parquet")
-    val s = spark.read.parquet(s"$dir/supplier.parquet")
-    val n = spark.read.parquet(s"$dir/nation.parquet")
+    val l = Tables.lineitem(spark, dir)
+    val s = Tables.supplier(spark, dir)
+    val n = Tables.nation(spark, dir)
     import org.apache.spark.sql.functions.{broadcast, round, sum => fsum}
     l.join(broadcast(s), col("l_suppkey") === col("s_suppkey"))
       .join(broadcast(n), col("s_nationkey") === col("n_nationkey"))
@@ -601,7 +602,7 @@ object Mv {
     create(spark, "lineitem_ivm", s"$dir/lineitem.parquet", s"$root/mv0",
       groupCols = Seq("l_returnflag", "l_linestatus"),
       sumCols = Seq("l_quantity"))
-    val base = spark.read.parquet(s"$dir/lineitem.parquet")
+    val base = Tables.lineitem(spark, dir)
       .select(col("l_orderkey"), col("l_returnflag"), col("l_linestatus"),
         col("l_quantity"))
     val deletes = base.filter(col("l_orderkey") % 100 === 0)
@@ -707,8 +708,8 @@ object Mv {
     * recomputes each candidate's sizing row in plain SQL.
     */
   def advisorDemo(spark: SparkSession, dir: String): DataFrame = {
-    val li = spark.read.parquet(s"$dir/lineitem.parquet")
-    val ords = spark.read.parquet(s"$dir/orders.parquet")
+    val li = Tables.lineitem(spark, dir)
+    val ords = Tables.orders(spark, dir)
     advise(spark, Seq(
       li.groupBy("l_returnflag", "l_linestatus")
         .agg(sum(col("l_quantity")).as("s")),
@@ -729,7 +730,7 @@ object Mv {
     create(spark, "lineitem_rf_ls", s"$dir/lineitem.parquet", mvPath,
       groupCols = Seq("l_returnflag", "l_linestatus"),
       sumCols = Seq("l_quantity"))
-    scoped(spark, spark.read.parquet(s"$dir/lineitem.parquet")
+    scoped(spark, Tables.lineitem(spark, dir)
       .rollup("l_returnflag", "l_linestatus")
       .agg(sum(col("l_quantity")).as("sum_qty"),
         count(lit(1)).as("n_rows"),
@@ -752,7 +753,7 @@ object Mv {
     create(spark, "lineitem_rf_ls", s"$dir/lineitem.parquet", mvPath,
       groupCols = Seq("l_returnflag", "l_linestatus"),
       sumCols = Seq("l_quantity"))
-    scoped(spark, spark.read.parquet(s"$dir/lineitem.parquet")
+    scoped(spark, Tables.lineitem(spark, dir)
       .filter(col("l_returnflag") =!= "N")
       .groupBy("l_linestatus")
       .agg(sum(col("l_quantity")).as("sum_qty"),

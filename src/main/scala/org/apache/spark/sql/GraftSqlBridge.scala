@@ -40,6 +40,49 @@ object GraftSqlBridge {
     }
   }
 
+  /** The schema `spark.read.parquet(path)` infers, without its Spark job.
+    * Spark's non-merging inference reads one footer — `_common_metadata`,
+    * else `_metadata`, else the first data file in path order — but always
+    * in a one-task job. This reads that same footer on the driver, decodes
+    * it the same way (the footer's Spark-schema key when present, else the
+    * session conf's parquet type mapping) and appends the inferred `k=v`
+    * partition columns. The listing goes through the session's shared file
+    * status cache, as the read's own listing does, so a following
+    * `spark.read.schema(s).parquet(path)` lists nothing again. A missing
+    * path raises the read's own `PATH_NOT_FOUND`; with schema merging on,
+    * this is the read's inference itself.
+    */
+  def parquetSchema(spark: SparkSession, path: String): types.StructType = {
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.parquet.hadoop.ParquetFileWriter.{PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE}
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.errors.QueryCompilationErrors
+    import org.apache.spark.sql.execution.datasources.{DataSource, FileStatusCache,
+      InMemoryFileIndex, PartitioningUtils}
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+      ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val conf = spark.sessionState.conf
+    if (conf.isParquetSchemaMergingEnabled) return spark.read.parquet(path).schema
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val roots = DataSource.checkAndGlobPathIfNecessary(Seq(path), hadoopConf,
+      checkEmptyGlobPath = true, checkFilesExist = true, enableGlobbing = true)
+    val index = new InMemoryFileIndex(spark, roots, Map.empty, None,
+      FileStatusCache.getOrCreate(spark))
+    val files = index.allFiles().sortBy(_.getPath.toString)
+    def named(n: String) = files.find(_.getPath.getName == n)
+    val summary = Set(PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE)
+    val footer = named(PARQUET_COMMON_METADATA_FILE).orElse(named(PARQUET_METADATA_FILE))
+      .orElse(files.find(f => !summary(f.getPath.getName)))
+      .getOrElse(throw QueryCompilationErrors.dataSchemaNotSpecifiedError("Parquet"))
+    val meta = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(footer, hadoopConf),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    val data = ParquetFileFormat.readSchemaFromFooter(new Footer(footer.getPath, meta),
+      new ParquetToSparkSchemaConverter(conf))
+    PartitioningUtils.mergeDataAndPartitionSchema(data.asNullable, index.partitionSchema,
+      conf.caseSensitiveAnalysis)._1
+  }
+
   /** A parquet scan over files the caller has already listed: each root dir
     * with the data files under it (`k=v` dirs between a root and its files
     * become partition columns), read with `schema`. The scan's file index is

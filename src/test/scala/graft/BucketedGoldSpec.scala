@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 import graft.streaming.{BucketedGold, CdcStreams}
 
@@ -21,39 +20,6 @@ class BucketedGoldSpec extends SparkSpec {
   private def stateSet(df: DataFrame): Set[(Long, String, Long, Long, Double)] =
     df.collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
       r.getLong(3), r.getDouble(4))).toSet
-
-  /** The jobs `body` starts, by call site: a listener sees every job start
-    * between two sentinel jobs, so the listener queue is drained on return.
-    */
-  private def jobsOf[T](body: => T): (T, Seq[String]) = {
-    val sc = spark.sparkContext
-    val (open, close) = (s"open-${System.nanoTime}", s"close-${System.nanoTime}")
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val closed = new java.util.concurrent.CountDownLatch(1)
-    @volatile var opened = false
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val props = Option(e.properties)
-        val desc = props.map(_.getProperty("spark.job.description"))
-        if (desc.contains(open)) opened = true
-        else if (desc.contains(close)) closed.countDown()
-        else if (opened) seen.add(desc.flatMap(Option(_))
-          .orElse(props.flatMap(p => Option(p.getProperty("callSite.short")))).getOrElse(""))
-      }
-    }
-    def sentinel(d: String): Unit = {
-      sc.setJobDescription(d)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sentinel(open)
-      val r = body
-      sentinel(close)
-      assert(closed.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      (r, seen.asScala.toSeq)
-    } finally sc.removeSparkListener(listener)
-  }
 
   /** The SCD1 state of `rows` computed directly: latest per key by
     * (ts_us, event_id), deleted keys dropped.
