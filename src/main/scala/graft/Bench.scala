@@ -4,8 +4,12 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // warmup: absorb JVM/session/codegen init so the first timed query
-    // isn't charged ~3s of one-time cost
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
+    // isn't charged ~3s of one-time cost; a failure goes to stderr and the
+    // run goes on (stdout's last line stays the JSON)
+    try SparkEntry.entry(spark).count() catch {
+      case e: Throwable => System.err.println(s"[bench] warm-up failed: " +
+        s"${e.getClass.getName}: ${String.valueOf(e.getMessage).takeWhile(_ != '\n')}")
+    }
     // optional dev-only subset (args(0): comma-separated names); the
     // driver invokes with no args and times everything
     val subset = if (args.nonEmpty) Some(args(0).split(",").toSet) else None

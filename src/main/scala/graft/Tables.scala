@@ -42,8 +42,7 @@ object Tables {
 
   /** Cheap corpus-snapshot fingerprint: a hash over the sorted
     * (relative path, size, mtime) listing of every regular file under
-    * `dir`. The in-process memo caches (near-dup pair/cluster artifacts,
-    * kNN graph, PQ/IVF codebooks, CC base labels) key on this alongside
+    * `dir`. [[Artifacts]] keys every memoized artifact on this alongside
     * the path, so a corpus REGENERATED under the same directory — the
     * round-4 testdata-regeneration incident, or any same-JVM append —
     * rebuilds its artifacts instead of silently serving stale ones.
@@ -409,19 +408,15 @@ object Tables {
     rows.toSeq.toDF("group_id", "n_files", "group_bytes", "fill_e4", "files")
   }
 
-  private val compactDemoMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
   /** Demo: lineitem deliberately shattered into 12 small files (memoized
     * per corpus snapshot), then planned against a 4 MB target.
     */
   def compactionPlanDemo(spark: SparkSession, dir: String): DataFrame = {
-    val path = compactDemoMemo.getOrElseUpdate(
-      (dir, snapshotFingerprint(dir)), {
-      val p = java.nio.file.Files.createTempDirectory("cplan").toString + "/t"
+    val path = Artifacts.memo(dir, "compaction-demo") { a =>
+      val p = a.root() + "/t"
       lineitem(spark, dir).repartition(12).write.parquet(p)
       p
-    })
+    }
     compactionPlan(spark, path, targetFileMB = 4)
   }
 }

@@ -1,18 +1,19 @@
 package graft
 
-/** Dev-only equivalence check (test scope — never ships): run one or more
-  * declared queries against a small SF and exceptAll-compare the result
-  * with a previously written `graft.Verify` dump of the SAME corpus —
-  * the fast per-change oracle-parity probe used between full Verify runs.
+/** Oracle-parity probe between full [[Verify]] runs: runs the named
+  * queries against a corpus and exceptAll-compares each result (rows and
+  * schema) with a `graft.Verify` dump of the SAME corpus. Exits non-zero
+  * if any query differs.
   *
-  * Run: sbt "Test/runMain graft.ScratchCmp <dumpDir> <sfDir> <q1,q2,...>"
+  * Run: `sbt "runMain graft.VerifyCompare <dumpDir> <sfDir> <q1,q2,...>"`
+  * (cores from `SPARK_GRAFT_CPUS`, default 4, as in [[Bench]]).
   */
-object ScratchCmp {
+object VerifyCompare {
   def main(args: Array[String]): Unit = {
     val dumpDir = args(0)
     val sfDir = args(1)
     val names = args(2).split(",").toSeq
-    val spark = GraftSession.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt)
+    val spark = GraftSession.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     var bad = 0
     names.foreach { name =>
       val now = SparkEntry.queries(name)(spark, sfDir)

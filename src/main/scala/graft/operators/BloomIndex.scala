@@ -86,25 +86,22 @@ object BloomIndex {
     (matches, total, hits.length.toLong)
   }
 
-  private val demoMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), (String, String)]
-
   /** #237 Driver demo: stage events as a multi-file table (memoized per
     * corpus snapshot), index user_id, probe a deterministic key set;
     * report the skipping rate and the (exactly correct) hit mass.
     */
   def pruneDemo(spark: SparkSession, dir: String): DataFrame = {
-    val (store, idx) = demoMemo.getOrElseUpdate(
-      (dir, graft.Tables.snapshotFingerprint(dir)), {
-      val root = java.nio.file.Files.createTempDirectory("bloomidx").toString
+    val root = graft.Artifacts.memo(dir, "bloom-demo") { a =>
+      val r = a.root()
       graft.Tables.events(spark, dir)
         .repartition(16, col("user_id"))
-        .write.parquet(s"$root/store")
-      build(spark, s"$root/store", "user_id", s"$root/idx")
-      (s"$root/store", s"$root/idx")
-    })
+        .write.parquet(s"$r/store")
+      build(spark, s"$r/store", "user_id", s"$r/idx")
+      r
+    }
     val probes = (1L to 3L).toSeq
-    val (m, total, read) = lookup(spark, store, idx, "user_id", probes)
+    val (m, total, read) =
+      lookup(spark, s"$root/store", s"$root/idx", "user_id", probes)
     val found = m.agg(count(lit(1)).as("n")).head().getLong(0)
     import spark.implicits._
     Seq((total, read, found, probes.length.toLong))

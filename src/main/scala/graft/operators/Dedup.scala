@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Artifacts, Tables}
 import graft.functions.GraftFunctions
 
 /** Near-duplicate detection for LLM training-data curation.
@@ -123,63 +123,14 @@ object Dedup {
     * builds once per snapshot and every consumer reads the artifact (the
     * [[graft.operators.Similarity.knnGraph]] lifecycle).
     */
-  // keyed on (dir, SNAPSHOT FINGERPRINT, threshold): a corpus regenerated
-  // under the same path rebuilds instead of serving the stale artifact
-  // (Tables.snapshotFingerprint; DedupSpec pins the invalidation)
-  private val pairsMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Double), String]
-
-  /** Temp roots created by the memo builders, deleted on JVM exit — a
-    * long test/REPL session no longer accumulates parquet artifacts in
-    * /tmp for the OS sweeper to find (which could ALSO reap them
-    * mid-session; [[validatedArtifact]] handles that). */
-  private val tmpArtifactRoots =
-    new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  sys.addShutdownHook {
-    tmpArtifactRoots.forEach(r =>
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(r)))
-  }
-
-  private def newArtifactRoot(prefix: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(prefix).toString
-    tmpArtifactRoots.add(p)
-    p
-  }
-
-  /** Memoized-artifact lookup that survives tmp reaping: a hit is only
-    * served if every expected parquet commit marker is still on disk —
-    * a long-lived JVM whose /tmp sweeper deleted the artifact drops the
-    * stale pointer and rebuilds instead of throwing on a vanished path.
-    */
-  private def validatedArtifact[K](
-      memo: scala.collection.concurrent.TrieMap[K, String], key: K,
-      subdirs: Seq[String])(build: => String): String = {
-    def ok(root: String): Boolean = subdirs.forall { s =>
-      val parts = (Seq(root) ++ Seq(s).filter(_.nonEmpty)) :+ "_SUCCESS"
-      java.nio.file.Files.exists(java.nio.file.Paths.get(parts.head, parts.tail: _*))
-    }
-    val p = memo.getOrElseUpdate(key, build)
-    if (ok(p)) p
-    else { memo.remove(key); memo.getOrElseUpdate(key, build) }
-  }
-
   def minhashLsh(spark: SparkSession, dir: String, threshold: Double = 0.5): DataFrame = {
-    val fp = Tables.snapshotFingerprint(dir)
-    val path = validatedArtifact(pairsMemo, (dir, fp, threshold), Seq("")) {
-      val p = newArtifactRoot("graft-minhash-pairs")
+    val path = Artifacts.memo(dir, "minhash-pairs", threshold) { a =>
+      val p = a.root()
       minhashLshCompute(spark, dir, threshold)
         .write.mode("overwrite").parquet(p)
       p
     }
     spark.read.parquet(path)
-  }
-
-  /** Drop every in-process memoized artifact (tests / long-lived REPLs —
-    * the artifacts themselves are temp-dir parquet, deleted by the JVM
-    * shutdown hook; this just forgets the pointers).
-    */
-  private[graft] def clearMemos(): Unit = {
-    pairsMemo.clear(); clustersMemo.clear(); lshFunnelMemo.clear()
   }
 
   // private[graft]: doubles as the PLAN PROBE for `dedup_minhash`
@@ -367,19 +318,14 @@ object Dedup {
   }
 
   /** #60 (query form) clusters from the minhash near-dup graph: one row per
-    * clustered doc with its cluster id and the survivor flag.
+    * clustered doc with its cluster id and the survivor flag. Memoized
+    * per corpus snapshot (written parquet, like the pair list): the CC
+    * loop runs once; the three consumers (cluster census, fuzzy curation,
+    * cluster keywords) read the artifact.
     */
-  /** Cluster assignments memoized per corpus snapshot (written parquet,
-    * like the pair list): the CC loop runs once; the three consumers
-    * (cluster census, fuzzy curation, cluster keywords) read the artifact.
-    */
-  private val clustersMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
   def dedupClusters(spark: SparkSession, dir: String): DataFrame = {
-    val path = validatedArtifact(clustersMemo,
-        (dir, Tables.snapshotFingerprint(dir)), Seq("")) {
-      val p = newArtifactRoot("graft-dedup-clusters")
+    val path = Artifacts.memo(dir, "dedup-clusters") { a =>
+      val p = a.root()
       // the memoized pair artifact is a plain parquet scan, so the CC
       // loop's repeated reads re-scan a tiny file instead of re-running
       // the minhash pipeline
@@ -522,15 +468,10 @@ object Dedup {
     * maintained per crawl, not a per-query recomputation (the
     * incremental twin is [[buildDedupIndex]]).
     */
-  private val lshFunnelMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Double, Int, Int), String]
-
   private def lshFunnelArtifacts(spark: SparkSession, dir: String,
       tau: Double, planes: Int, tables: Int): (String, String) = {
-    val root = validatedArtifact(lshFunnelMemo,
-        (dir, Tables.snapshotFingerprint(dir), tau, planes, tables),
-        Seq("pairs", "counts")) {
-      val r = newArtifactRoot("graft-lsh-funnel")
+    val root = Artifacts.memo(dir, "lsh-funnel", tau, planes, tables) { a =>
+      val r = a.root()
       val (e, banded, cand0) = lshStages(
         Tables.embeddings(spark, dir), planes, tables)
       val cand = cand0.persist(

@@ -344,16 +344,6 @@ object Graph {
     * recompute — mismatch comes from Spark's own two paths and must be
     * 0; the histogram is the component-size census after the delta fold.
     */
-  // memoized as a written parquet PATH, not a live DataFrame: checkpointed
-  // blocks are bound to the SparkSession/executors, so a cached frame dies
-  // with a session restart or executor loss — a path survives both and each
-  // invocation re-reads it (the zone-map/compaction memos' lifecycle)
-  private val ccBaseMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Int), String]
-
-  /** Forget the memoized base-label artifact (tests / long-lived REPLs). */
-  private[graft] def clearMemos(): Unit = ccBaseMemo.clear()
-
   def ccDelta(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
     // knnGraph is itself an eagerly-checkpointed memo; the projection is
     // free, so a second checkpoint here would only buy another blocking job
@@ -366,18 +356,17 @@ object Graph {
     val base = edges.filter(col("src") % 10 =!= 0 && col("dst") % 10 =!= 0)
     val delta = edges.filter(col("src") % 10 === 0 || col("dst") % 10 === 0)
     // the base labels are the STORED artifact the incremental fold exists
-    // to avoid recomputing — memoized per corpus snapshot (the knnMemo
-    // lifecycle); only the fold and its audit run per invocation
-    val oldPath = ccBaseMemo.getOrElseUpdate(
-      (dir, graft.Tables.snapshotFingerprint(dir), k), {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft-cc-base").toString
+    // to avoid recomputing — memoized per corpus snapshot as a written
+    // parquet path, which (unlike a checkpointed frame) survives a session
+    // restart; only the fold and its audit run per invocation
+    val oldPath = graft.Artifacts.memo(dir, "cc-base", k) { a =>
+      val p = a.root()
       Dedup.connectedComponents(
           base.select(col("src").as("doc_a"), col("dst").as("doc_b")))
         .select(col("doc_id").as("id"), col("cluster_id").as("comp"))
         .write.mode("overwrite").parquet(p)
       p
-    })
+    }
     val old = spark.read.parquet(oldPath)
     // read thrice below (histogram + two audit joins): materialize once
     val inc = incrementalComponentsFrom(old, delta).localCheckpoint(true)

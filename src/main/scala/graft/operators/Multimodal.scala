@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Artifacts, Tables}
 
 /** Multimodal-column plumbing: media treated as opaque `binary` payloads
   * with typed metadata, decoded/feature-extracted in partition-sized
@@ -235,21 +235,15 @@ object Multimodal {
     }
   }
 
-  // per-(session, corpus-snapshot) decoded-raster cache — same contract
-  // as pcmCache below: first consumer materializes (≤1 KB/doc), the rest
-  // derive; keyed by app id + snapshot fingerprint, cleared by clearMemos.
-  private val rasterCache =
-    new scala.collection.concurrent.TrieMap[String, DataFrame]()
-
-  /** Decode-once raster substrate for the registered image queries. */
+  /** Decode-once raster substrate for the registered image queries —
+    * same contract as [[sharedPcm]]: the first consumer materializes
+    * (≤1 KB/doc), the rest derive.
+    */
   def sharedRasters(spark: SparkSession, dir: String): Dataset[ImageRaster] = {
     implicit val enc = Encoders.product[ImageRaster]
-    val fp = Tables.snapshotFingerprint(dir)
-    rasterCache.getOrElseUpdate(
-      s"${spark.sparkContext.applicationId}:$dir:$fp",
-      decodeRasters(imagePayloads(spark, dir)).toDF()
-        .localCheckpoint(eager = true)
-    ).as[ImageRaster]
+    Artifacts.memo(dir, "image-rasters")(a => a.frame(
+      decodeRasters(imagePayloads(spark, dir)).toDF().localCheckpoint(eager = true)))
+      .as[ImageRaster]
   }
 
   /** Rebuild the BufferedImage a raster row was decoded from —
@@ -718,21 +712,15 @@ object Multimodal {
     }
   }
 
-  // per-(session, corpus-snapshot) video-profile cache — same contract as
-  // rasterCache/pcmCache: decode once, derive many.
-  private val videoProfileCache =
-    new scala.collection.concurrent.TrieMap[String, DataFrame]()
-
-  /** Decode-once profile substrate for the registered video queries. */
+  /** Decode-once profile substrate for the registered video queries —
+    * same contract as [[sharedPcm]]: decode once, derive many.
+    */
   def sharedVideoProfiles(spark: SparkSession,
       dir: String): Dataset[VideoProfiles] = {
     implicit val enc = Encoders.product[VideoProfiles]
-    val fp = Tables.snapshotFingerprint(dir)
-    videoProfileCache.getOrElseUpdate(
-      s"${spark.sparkContext.applicationId}:$dir:$fp",
-      videoProfiles(videoPayloads(spark, dir)).toDF()
-        .localCheckpoint(eager = true)
-    ).as[VideoProfiles]
+    Artifacts.memo(dir, "video-profiles")(a => a.frame(
+      videoProfiles(videoPayloads(spark, dir)).toDF().localCheckpoint(eager = true)))
+      .as[VideoProfiles]
   }
 
   /** #290 Registered query: per-video frame/keyframe census. */
@@ -842,30 +830,18 @@ object Multimodal {
     }
   }
 
-  // per-(session, corpus-snapshot) decoded-PCM cache: the three
-  // registered audio rows run in one driver session over the same
-  // synthesized WAVs — the first materializes the substrate
-  // (localCheckpoint: PCM is ~400 B/doc, block-manager memory+disk),
-  // the rest derive. Keyed by applicationId so a stopped session's
-  // entry can never leak into a new one, and by the corpus snapshot
-  // fingerprint (same convention as knnMemo/shardMemo) so a corpus
-  // regenerated at the same path never serves stale PCM.
-  private val pcmCache =
-    new scala.collection.concurrent.TrieMap[String, DataFrame]()
-
-  /** Forget memoized substrates (tests / long-lived REPLs). */
-  private[graft] def clearMemos(): Unit = {
-    pcmCache.clear(); rasterCache.clear(); videoProfileCache.clear()
-  }
-
-  /** Decode-once substrate for the registered corpus queries. */
+  /** Decode-once substrate for the registered corpus queries: the three
+    * registered audio rows run in one driver session over the same
+    * synthesized WAVs — the first materializes the substrate
+    * (localCheckpoint: PCM is ~400 B/doc, block-manager memory+disk), the
+    * rest derive. A [[graft.Artifacts]] frame: rebuilt for a regenerated
+    * corpus or a new SparkContext.
+    */
   def sharedPcm(spark: SparkSession, dir: String): Dataset[AudioPcm] = {
     implicit val enc = Encoders.product[AudioPcm]
-    val fp = Tables.snapshotFingerprint(dir)
-    pcmCache.getOrElseUpdate(
-      s"${spark.sparkContext.applicationId}:$dir:$fp",
-      decodePcm(audioPayloads(spark, dir)).toDF().localCheckpoint(eager = true)
-    ).as[AudioPcm]
+    Artifacts.memo(dir, "audio-pcm")(a => a.frame(
+      decodePcm(audioPayloads(spark, dir)).toDF().localCheckpoint(eager = true)))
+      .as[AudioPcm]
   }
 
   /** Amplitude features from the decoded substrate: RMS and peak over

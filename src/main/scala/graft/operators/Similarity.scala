@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
-import graft.Tables
+import graft.{Artifacts, Tables}
 import graft.functions.{GraftFunctions, TextHashes}
 
 /** Approximate-nearest-neighbor search over the `embeddings` table.
@@ -62,21 +62,6 @@ object Similarity {
         col("n_matches"))
   }
 
-  /** Approximate k-NN GRAPH over the whole corpus — every vector's top-k
-    * neighbours, the substrate graph-based curation builds on (SemDeDup
-    * clusters it, connected-components dedup walks it, label-propagation
-    * audits diffuse over it). All-pairs is O(n²) and dead at corpus
-    * scale; here candidate edges come from multi-table hyperplane-LSH
-    * blocking (same machinery as the near-dup path): each vector lands in
-    * `tables` buckets, bucket equi-joins carry ONLY id pairs, exact
-    * cosine scores just the candidates after an id join, and per-node
-    * top-k runs through the two-phase TopKPerGroupExec. Fewer planes →
-    * bigger buckets → higher recall at more candidate work: planes
-    * trades compute for recall explicitly.
-    */
-  private val knnMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Int, Int, Int), DataFrame]
-
   /** Default hyperplane count grows with the corpus so expected bucket
     * size stays ≈[[TargetBucket]]: planes = max(4, ⌈log₂(n/target)⌉).
     * Fixed planes would make buckets grow LINEARLY with the corpus and
@@ -91,31 +76,40 @@ object Similarity {
     math.max(4, math.ceil(math.log(math.max(1.0, n.toDouble / TargetBucket))
       / math.log(2.0)).toInt)
 
+  /** Approximate k-NN GRAPH over the whole corpus — every vector's top-k
+    * neighbours, the substrate graph-based curation builds on (SemDeDup
+    * clusters it, connected-components dedup walks it, label-propagation
+    * audits diffuse over it). All-pairs is O(n²) and dead at corpus
+    * scale; here candidate edges come from multi-table hyperplane-LSH
+    * blocking (same machinery as the near-dup path): each vector lands in
+    * `tables` buckets, bucket equi-joins carry ONLY id pairs, exact
+    * cosine scores just the candidates after an id join, and per-node
+    * top-k runs through the two-phase TopKPerGroupExec. Fewer planes →
+    * bigger buckets → higher recall at more candidate work: planes
+    * trades compute for recall explicitly.
+    */
   def knnGraph(spark: SparkSession, dir: String, k: Int = 5,
       planes: Int = -1, tables: Int = 8): DataFrame = {
     // the graph is the shared substrate of four audits (adjacency query,
     // PageRank, LPA communities, LOF) — build it once per corpus snapshot
     // + hyperparameters; eager localCheckpoint materializes node-sized
-    // blocks and truncates the LSH-join lineage for every reuse. Snapshot
-    // fingerprint in the key: a regenerated corpus rebuilds the graph.
+    // blocks and truncates the LSH-join lineage for every reuse
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    val fp = Tables.snapshotFingerprint(dir)
-    val p = if (planes > 0) planes
-      else autoPlanes(corpusCountMemo.getOrElseUpdate((dir, fp), e.count()))
-    knnMemo.getOrElseUpdate((dir, fp, k, p, tables), {
-      val local = knnLocalFor(spark, dir, e, fp, k, p, tables)
+    val p = if (planes > 0) planes else autoPlanes(corpusCount(dir, e))
+    Artifacts.memo(dir, "knn-graph", k, p, tables) { a =>
+      val local = knnLocalFor(dir, e, k, p, tables)
       // same undirected pair from several shared buckets carries an
       // identical score (same kernel, same inputs) — one row survives
       val deduped = local.groupBy("src", "dst").agg(max("cos").as("cos"))
-      graft.plans.TopK.topKPerGroup(deduped, Seq("src"),
+      a.frame(graft.plans.TopK.topKPerGroup(deduped, Seq("src"),
         Seq(("cos", true), ("dst", false)), k)
         .select(col("src"), col("dst"), round(col("cos"), 4).as("cos"), col("rnk"))
-        .localCheckpoint(eager = true)
-    })
+        .localCheckpoint(eager = true))
+    }
   }
 
-  private val corpusCountMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Long]
+  private def corpusCount(dir: String, e: DataFrame): Long =
+    Artifacts.memo(dir, "embeddings-count")(_ => e.count())
 
   // spreadScan / tableBytes (the scale-adaptive parallelism floor for
   // heavy map-side stages over few-split scans) live in [[graft.Tables]]
@@ -132,19 +126,10 @@ object Similarity {
   // sweep flagged as the worst growth ratio precisely because it re-ran
   // this stage. Edge-sized (n·tables·k rows), so the checkpoint is cheap
   // to hold; the banded frame (which carries embeddings) is NOT memoized.
-  private val knnLocalMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Int, Int, Int), DataFrame]
-
-  private def knnLocalFor(spark: SparkSession, dir: String, e: DataFrame,
-      fp: String, k: Int, p: Int, tables: Int): DataFrame =
-    knnLocalMemo.getOrElseUpdate((dir, fp, k, p, tables),
-      knnLocalEdges(knnBanded(e, p, tables), k).localCheckpoint(eager = true))
-
-  /** Forget memoized models/graphs (tests / long-lived REPLs). */
-  private[graft] def clearMemos(): Unit = {
-    knnMemo.clear(); knnLocalMemo.clear(); pqCbMemo.clear(); ivfPqMemo.clear()
-    pcaMemo.clear()
-  }
+  private def knnLocalFor(dir: String, e: DataFrame,
+      k: Int, p: Int, tables: Int): DataFrame =
+    Artifacts.memo(dir, "knn-local", k, p, tables)(a => a.frame(
+      knnLocalEdges(knnBanded(e, p, tables), k).localCheckpoint(eager = true)))
 
   /** [[knnGraph]] over any (vec_id, embedding) frame.
     *
@@ -256,15 +241,14 @@ object Similarity {
     // here would silently diverge from the pinned SQL, so there are none
     val (k, tables) = (5, 8)
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    val fp = Tables.snapshotFingerprint(dir)
-    val p = autoPlanes(corpusCountMemo.getOrElseUpdate((dir, fp), e.count()))
+    val p = autoPlanes(corpusCount(dir, e))
     // the census re-runs only the (cheap) banding; the all-pairs scoring
     // stage is the SHARED memoized local-edge frame — when the graph
     // substrate is already built this row pays one banding pass + four
     // edge-sized aggregates, not a second scoring pass
     val banded = knnBanded(e, p, tables)
     val census = banded.groupBy("tbl", "bucket").agg(count(lit(1)).as("m"))
-    val local = knnLocalFor(spark, dir, e, fp, k, p, tables)
+    val local = knnLocalFor(dir, e, k, p, tables)
     val cand = local.select("src", "dst").distinct()
     val g = knnGraph(spark, dir, k)
     e.agg(count(lit(1)).as("n_vectors"))
@@ -442,47 +426,6 @@ object Similarity {
       .agg(round(sum(col("v").cast("double")) / count(lit(1)), 4).as("centroid_v"),
         count(lit(1)).as("n"))
       .withColumn("pos", col("pos") + 1) // 1-based, matching SQL subscripts
-
-  /** #52 IVF (inverted-file) ANN: k-means centroids partition the corpus;
-    * each query scans only the `nProbe` nearest clusters. MLlib KMeans with
-    * a fixed seed keeps it deterministic. At 100 TB the corpus is stored
-    * cluster-partitioned, so a query touches nProbe/k of the data — the
-    * standard trade of recall for a ~k/nProbe scan cut.
-    */
-  def annIvfTopK(spark: SparkSession, dir: String, k: Int = DefaultK,
-      nClusters: Int = 16, nProbe: Int = 4): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    import org.apache.spark.ml.linalg.Vector
-    val e = Tables.embeddings(spark, dir)
-      .withColumn("fv", array_to_vector(col("embedding")))
-    val model = new KMeans().setK(nClusters).setSeed(42L).setMaxIter(5)
-      .setFeaturesCol("fv").setPredictionCol("cluster")
-      .fit(e.select("fv"))
-    val assigned = model.transform(e).select(col("vec_id"), col("embedding"), col("cluster"))
-    // query → its nProbe nearest centroids, fully declarative: the tiny
-    // centroid set becomes a broadcast frame and the probe ranking is a
-    // codegen'd cosine + row_number (queries × nClusters rows)
-    val centroids: Seq[(Int, Array[Float])] =
-      model.clusterCenters.toSeq.map((v: Vector) => v.toArray.map(_.toFloat)).zipWithIndex.map(_.swap)
-    val cdf = spark.createDataFrame(centroids).toDF("cluster", "centroid")
-    val wProbe = Window.partitionBy("qid").orderBy(col("csim").desc, col("cluster"))
-    val q = assigned.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      .crossJoin(broadcast(cdf))
-      .withColumn("csim", GraftFunctions.cosineSim(col("qe"), col("centroid")))
-      .withColumn("prnk", row_number().over(wProbe))
-      .filter(col("prnk") <= nProbe)
-      .select(col("qid"), col("qe"), col("cluster"))
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("nid"))
-    assigned.select(col("vec_id").as("nid"), col("embedding"), col("cluster"))
-      .join(broadcast(q), Seq("cluster"))
-      .filter(col("nid") =!= col("qid"))
-      .withColumn("cos", GraftFunctions.cosineSim(col("qe"), col("embedding")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("nid"), round(col("cos"), 4).as("cos"), col("rnk"))
-  }
 
   /** #305 IVF tuning curve — recall@k vs nProbe, the measurement that
     * actually sets the probe budget in production (guessing nProbe is
@@ -716,9 +659,6 @@ object Similarity {
       .select(col("qid"), col("nid"), round(col("cos"), 4).as("cos"), col("rnk"))
   }
 
-  private val ivfIdxMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Int), String]
-
   /** Registered #411 demo: build on the even half of the corpus, add the
     * odd half as a delta (the crawl-over-crawl shape), search the standard
     * query set through the persisted artifact. Memoized per corpus
@@ -726,15 +666,13 @@ object Similarity {
     */
   def annIndexLifecycle(spark: SparkSession, dir: String, k: Int = DefaultK,
       nClusters: Int = 16, nProbe: Int = 4): DataFrame = {
-    val idxDir = ivfIdxMemo.getOrElseUpdate(
-      (dir, Tables.snapshotFingerprint(dir), nClusters), {
-        val p = java.nio.file.Files
-          .createTempDirectory("graft-ivf-index").toString
-        val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
-        buildIvfIndex(spark, e.filter(col("vec_id") % 2 === 0), p, nClusters)
-        ivfIndexAdd(spark, e.filter(col("vec_id") % 2 =!= 0), p)
-        p
-      })
+    val idxDir = Artifacts.memo(dir, "ivf-index", nClusters) { a =>
+      val p = a.root()
+      val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
+      buildIvfIndex(spark, e.filter(col("vec_id") % 2 === 0), p, nClusters)
+      ivfIndexAdd(spark, e.filter(col("vec_id") % 2 =!= 0), p)
+      p
+    }
     val queries = Tables.embeddings(spark, dir)
       .filter(col("vec_id") < NQueries).select("vec_id", "embedding")
     ivfIndexSearch(spark, idxDir, queries, k, nProbe)
@@ -1080,22 +1018,18 @@ object Similarity {
     * you fit on a sample — the codebook is O(m·k·d) floats regardless of
     * corpus size — and only ENCODE touches every row.
     */
-  /** Trained index artifacts, keyed by (corpus dir, hyperparameters).
-    * Both trainers are seeded and deterministic in the corpus, so the
+  /** Trained PQ codebook, memoized per corpus snapshot + hyperparameters
+    * in [[graft.Artifacts]]. Both trainers ([[pqCodebookTrain]],
+    * [[trainIvfPq]]) are seeded and deterministic in the corpus, so the
     * artifact is a pure function of the key — the production lifecycle
     * is train ONCE per corpus snapshot, serve every query batch from
     * the same model ([[saveIvfPq]]/[[loadIvfPq]] is the cross-session
     * form of the same thing). Registered audit queries hit these memos
     * so repeated invocations pay encode+scan, not retraining.
     */
-  private val pqCbMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Int, Int, Int), Array[Float]]
-  private val ivfPqMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Int, Int, Int), IvfPqModel]
-
   private[graft] def pqCodebook(spark: SparkSession, dir: String,
       m: Int, kCodes: Int, iters: Int = 5): Array[Float] =
-    pqCbMemo.getOrElseUpdate((dir, Tables.snapshotFingerprint(dir), m, kCodes, iters),
+    Artifacts.memo(dir, "pq-codebook", m, kCodes, iters)(_ =>
       pqCodebookTrain(spark, dir, m, kCodes, iters))
 
   private[graft] def pqCodebookTrain(spark: SparkSession, dir: String,
@@ -1237,11 +1171,11 @@ object Similarity {
       codebook: Array[Float], nClusters: Int, m: Int, kCodes: Int, d: Int)
 
   /** Train the coarse quantizer + PQ codebook (seeded, deterministic;
-    * memoized per corpus+hyperparameters — see [[pqCbMemo]]).
+    * memoized per corpus+hyperparameters — see [[pqCodebook]]).
     */
   def trainIvfPq(spark: SparkSession, dir: String, nClusters: Int = 16,
       m: Int = 8, kCodes: Int = 256): IvfPqModel =
-    ivfPqMemo.getOrElseUpdate((dir, Tables.snapshotFingerprint(dir), nClusters, m, kCodes), {
+    Artifacts.memo(dir, "ivf-pq", nClusters, m, kCodes) { _ =>
       import org.apache.spark.ml.clustering.KMeans
       import org.apache.spark.ml.functions.array_to_vector
       val coarse = new KMeans().setK(nClusters).setSeed(7L).setMaxIter(5)
@@ -1250,7 +1184,7 @@ object Similarity {
           .withColumn("fv", array_to_vector(col("embedding"))).select("fv"))
       val cb = pqCodebook(spark, dir, m, kCodes)
       IvfPqModel(coarse, cb, nClusters, m, kCodes, cb.length / (m * kCodes))
-    })
+    }
 
   def annIvfPqTopK(spark: SparkSession, dir: String, k: Int = DefaultK,
       nClusters: Int = 16, nProbe: Int = 4, m: Int = 8,
@@ -1385,21 +1319,34 @@ object Similarity {
       .selectExpr("label", "n_a", "n_b",
         "CASE WHEN nrm0 = 0 OR nrm1 = 0 THEN NULL ELSE round(CAST(dot AS DOUBLE) / (sqrt(CAST(nrm0 AS DOUBLE)) * sqrt(CAST(nrm1 AS DOUBLE))), 6) END AS centroid_cos")
 
-  /** Trained PCA models, keyed by (corpus dir, k) — same train-once
-    * lifecycle as [[pqCbMemo]].
+  /** Trained PCA basis plus its whitening scales — same train-once
+    * lifecycle as [[pqCodebook]]. The scales are the per-component std of
+    * the PROJECTED corpus (k driver-side scalars from one aggregate —
+    * exact, not the model's variance PROPORTIONS), in component order.
     */
-  private val pcaMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Int), org.apache.spark.ml.feature.PCAModel]
-
-  private[graft] def pcaModel(spark: SparkSession, dir: String,
-      k: Int): org.apache.spark.ml.feature.PCAModel =
-    pcaMemo.getOrElseUpdate((dir, Tables.snapshotFingerprint(dir), k), {
+  private def pcaModel(spark: SparkSession, dir: String,
+      k: Int): (org.apache.spark.ml.feature.PCAModel, Array[Double]) =
+    Artifacts.memo(dir, "pca", k) { _ =>
       import org.apache.spark.ml.functions.array_to_vector
-      new org.apache.spark.ml.feature.PCA().setK(k)
+      val model = new org.apache.spark.ml.feature.PCA().setK(k)
         .setInputCol("fv").setOutputCol("pc")
         .fit(Tables.embeddings(spark, dir)
           .withColumn("fv", array_to_vector(col("embedding"))).select("fv"))
-    })
+      // k rows need no sort job: put in component order on the driver
+      val stds = pcaProject(spark, dir, model)
+        .select(posexplode(col("pc")).as(Seq("j", "v")))
+        .groupBy("j").agg(stddev_samp(col("v")).as("s"))
+        .collect().sortBy(_.getInt(0)).map(_.getDouble(1))
+      (model, stds)
+    }
+
+  private def pcaProject(spark: SparkSession, dir: String,
+      model: org.apache.spark.ml.feature.PCAModel): DataFrame = {
+    import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
+    model.transform(Tables.embeddings(spark, dir)
+        .withColumn("fv", array_to_vector(col("embedding"))))
+      .select(col("vec_id"), vector_to_array(col("pc")).as("pc"))
+  }
 
   /** #193 PCA projection + whitening of the embedding corpus — the
     * dimensionality-reduction pass a training pipeline runs before
@@ -1416,20 +1363,8 @@ object Similarity {
     * rows-only entry, invariants spec'd).
     */
   def embPca(spark: SparkSession, dir: String, k: Int = 8): DataFrame = {
-    import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
-    val model = pcaModel(spark, dir, k)
-    val projected = model.transform(Tables.embeddings(spark, dir)
-        .withColumn("fv", array_to_vector(col("embedding"))))
-      .select(col("vec_id"), vector_to_array(col("pc")).as("pc"))
-    // whitening scales = per-component std of the PROJECTED corpus (k
-    // driver-side scalars from one aggregate — exact, not the model's
-    // variance PROPORTIONS), put in component order on the driver: k rows
-    // need no sort job. The projection is a row-local matrix multiply,
-    // so the second pass over it is cheaper than holding a cached copy.
-    val stds = projected
-      .select(posexplode(col("pc")).as(Seq("j", "v")))
-      .groupBy("j").agg(stddev_samp(col("v")).as("s"))
-      .collect().sortBy(_.getInt(0)).map(_.getDouble(1))
+    val (model, stds) = pcaModel(spark, dir, k)
+    val projected = pcaProject(spark, dir, model)
     val sLit = typedLit(stds.map(s => if (s < 1e-9) 1e-9 else s).toSeq)
     projected
       .withColumn("pc_r", expr("transform(pc, x -> round(x, 4))"))
@@ -1469,7 +1404,7 @@ object Similarity {
     * Exact within the filtered subset (it IS the brute baseline there);
     * ScaleSpec pins parity against filter-then-brute. At lower
     * selectivity one swaps to the IVF probe with an over-fetch — the
-    * composition [[annIvfTopK]] ∘ filter — but label-equality at ~10% is
+    * composition [[ivfIndexSearch]] ∘ filter — but label-equality at ~10% is
     * firmly on the pre-filter side.
     */
   def annFilteredTopK(spark: SparkSession, dir: String,

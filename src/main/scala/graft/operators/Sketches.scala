@@ -123,9 +123,6 @@ object Sketches {
         count(lit(1)).as("n_days"),
         sum(col("n_events")).as("n_events"))
 
-  private val hllIdxMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), (String, Long, Long)]
-
   /** Demo query: build (memoized per corpus snapshot) + range-query the
     * middle two weeks of the observation window.
     */
@@ -140,15 +137,14 @@ object Sketches {
     // invocation in the same JVM goes straight to the range query
     // (exactly the production lifecycle: the index catalog stores its
     // own day domain).
-    val (path, d0, d1) = hllIdxMemo.getOrElseUpdate(
-      (dir, graft.Tables.snapshotFingerprint(dir)), {
-      val p = java.nio.file.Files.createTempDirectory("hllidx").toString + "/idx"
+    val (path, d0, d1) = graft.Artifacts.memo(dir, "hll-index") { a =>
+      val p = a.root() + "/idx"
       buildHllIndex(spark, dir, p)
       val span = spark.read.parquet(p)
         .agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
         .head()
       (p, span.getLong(0), span.getLong(1))
-    })
+    }
     val mid = (d1 - d0) / 4
     // exact distinct over the same range — the audit cost that makes the
     // row hash-gateable: the oracle replays n_days/n_events/exact_users

@@ -903,11 +903,8 @@ object Text {
     * corpus snapshot, every encode pass reuses the table. Without it,
     * each encode invocation silently re-runs the whole training loop.
     */
-  private val bpeMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Int), Array[(String, String)]]
-
   private def bpeTableFor(spark: SparkSession, dir: String, merges: Int): Array[(String, String)] =
-    bpeMemo.getOrElseUpdate((dir, graft.Tables.snapshotFingerprint(dir), merges),
+    graft.Artifacts.memo(dir, "bpe-merges", merges)(_ =>
       bpeTrain(spark, dir, merges).collect().sortBy(_.getInt(0))
         .map(r => (r.getString(1), r.getString(2))))
 
@@ -1051,18 +1048,14 @@ object Text {
         min(col("digest")).as("first_digest"))
   }
 
-  private val shardMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
   /** Driver demo: shard the documents table at 32 KiB and return the
     * manifest (write memoized per corpus snapshot).
     */
   def writeShardsDemo(spark: SparkSession, dir: String): DataFrame =
-    shardMemo.getOrElseUpdate((dir, graft.Tables.snapshotFingerprint(dir)), {
-      val out = java.nio.file.Files.createTempDirectory("shards").toString + "/corpus"
-      writeShards(spark, Tables.documents(spark, dir).select("doc_id", "text"),
-        out, targetBytes = 32768L)
-    })
+    graft.Artifacts.memo(dir, "doc-shards") { a =>
+      a.frame(writeShards(spark, Tables.documents(spark, dir).select("doc_id", "text"),
+        a.root() + "/corpus", targetBytes = 32768L))
+    }
 
   /** #263 Compression-ratio quality gate (the RefinedWeb/Dolma-style
     * cheap filter): deflate bytes ÷ raw UTF-8 bytes per document, in e4
@@ -1509,16 +1502,13 @@ object Text {
     buf.toSeq
   }
 
-  private val unigramMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Int), Map[String, Double]]
-
   private def unigramTableFor(spark: SparkSession, dir: String,
       vocabSize: Int): Map[String, Double] =
-    unigramMemo.getOrElseUpdate((dir, graft.Tables.snapshotFingerprint(dir), vocabSize), {
+    graft.Artifacts.memo(dir, "unigram-lm", vocabSize) { _ =>
       val rows = unigramTrain(spark, dir, vocabSize).collect()
       val tot = rows.map(_.getLong(2)).sum.toDouble
       rows.map(r => r.getString(1) -> math.log(r.getLong(2) / tot)).toMap
-    })
+    }
 
   /** #337 Tokenizer shootout — whitespace vs BPE vs unigram-LM on the
     * SAME corpus, one comparable row each: total pieces, fertility

@@ -355,15 +355,22 @@ class DedupSpec extends SparkSpec {
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     // corpusWithPlants perturbs every 20th doc (last token dropped) →
     // one near-dup pair per planted doc; pair count tracks corpus size
+    def artifactRoot(): java.nio.file.Path = java.nio.file.Paths.get(
+      new java.net.URI(Dedup.minhashLsh(spark, dir).inputFiles.head)).getParent
     writeCorpus(40)
     val first = Dedup.minhashLsh(spark, dir).count()
     assert(first === 2L, s"40-doc corpus should plant 2 pairs, got $first")
+    val firstRoot = artifactRoot()
     // REGENERATE the corpus in place (the round-4 incident): the memo must
     // rebuild off the new snapshot, not serve the 40-doc artifact
     writeCorpus(100)
     val second = Dedup.minhashLsh(spark, dir).count()
     assert(second === 5L,
       s"stale memo served after in-place regeneration: got $second, want 5")
+    // and the superseded artifact is released, not left behind in tmp
+    assert(artifactRoot() !== firstRoot)
+    assert(!java.nio.file.Files.exists(firstRoot),
+      s"superseded artifact root $firstRoot still on disk")
     // and the fingerprint itself moves only when content does
     val fpA = Tables.snapshotFingerprint(dir)
     assert(Tables.snapshotFingerprint(dir) === fpA)
