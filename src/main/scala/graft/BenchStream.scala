@@ -29,7 +29,7 @@ import graft.streaming.CdcStreams
   * JSON continuously (rate-unbounded, backlog-capped so disk stays
   * bounded and the consumer is never starved — the stream is always
   * admission-controlled by `maxOffsetsPerTrigger`, never input-limited);
-  * a StreamingQueryListener stamps every micro-batch with (rows,
+  * [[CdcStreams.MetricsListener]] stamps every micro-batch with (rows,
   * trigger duration, wall end time). Batches completing inside the
   * first `warmupSec` are discarded (JIT + codegen + first gold write);
   * throughput = measured rows / measured wall window. p50/p95 batch
@@ -108,7 +108,7 @@ object BenchStream {
       .option("maxOffsetsPerTrigger", maxPerTrigger.toString)
       .load()
     silver(raw).writeStream
-      .queryName("bench_stream_gold")
+      .queryName(goldQuery)
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // bucketed-delta commit: O(batch) append, async compaction — an
@@ -120,8 +120,48 @@ object BenchStream {
       .start()
   }
 
-  private case class BatchStat(batchId: Long, rows: Long, durMs: Long,
-      endNanos: Long)
+  private val goldQuery = "bench_stream_gold"
+  private val produceChunk = 25000
+
+  /** The backlog-capped produce loop of the throughput and recovery arms.
+    * Construction seeds block 0 so batch 0 has data; [[start]] runs
+    * `nThreads` threads that append `produceChunk`-event blocks while
+    * the backlog (produced − the gold query's consumed input rows) is at
+    * most `backlogCap` — the consumer is never input-starved, disk stays
+    * bounded, and throughput is consumer-limited by construction. Threads
+    * own disjoint alternating id blocks; produce() itself serializes per
+    * topic, so segment offsets never race. Cross-thread interleaving can
+    * reorder APPENDS but not SCD1 semantics: ts_ms = id and the gold
+    * window orders by (ts_us, event_id). With one thread the ids form
+    * exactly [0, produced).
+    */
+  private final class Producers(logRoot: String, topic: String,
+      keySpace: Int, partitions: Int, nThreads: Int, backlogCap: Long,
+      listener: CdcStreams.MetricsListener) {
+    val produced = new AtomicLong(EmbeddedTopicLog.produce(logRoot, topic,
+      chunk(0L, produceChunk, keySpace), partitions))
+    private val stop = new AtomicBoolean(false)
+    private val threads = (0 until nThreads).map { t =>
+      val th = new Thread(() => {
+        var block = 1L + t // block 0 was the seed
+        while (!stop.get()) {
+          if (backlog > backlogCap) Thread.sleep(5)
+          else {
+            EmbeddedTopicLog.produce(logRoot, topic,
+              chunk(block * produceChunk, produceChunk, keySpace), partitions)
+            block += nThreads
+            produced.addAndGet(produceChunk)
+          }
+        }
+      }, s"benchstream-producer-$t")
+      th.setDaemon(true)
+      th
+    }
+    def consumed: Long = listener.inputRows(goldQuery)
+    def backlog: Long = produced.get() - consumed
+    def start(): Unit = threads.foreach(_.start())
+    def stopAndJoin(): Unit = { stop.set(true); threads.foreach(_.join(5000)) }
+  }
 
   /** LATENCY mode (`SPARK_GRAFT_STREAM_MODE=latency`) — the reference's
     * remaining envelope number is "87 ms average end-to-end latency"
@@ -163,19 +203,8 @@ object BenchStream {
     val inFlight = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
     val samples = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     val cutoff = new AtomicLong(Long.MaxValue)
-    // engine-phase decomposition: per-batch durationMs components so the
-    // residual floor is MEASURED (addBatch = commit job + delta rename;
-    // the rest is trigger machinery: offset resolution, planning, WAL)
-    val phases = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]()
-    val phaseListener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      import org.apache.spark.sql.streaming.StreamingQueryListener._
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit =
-        if (System.nanoTime() >= cutoff.get())
-          e.progress.durationMs.forEach((k, v) => phases.add((k, v.longValue())))
-    }
-    spark.streams.addListener(phaseListener)
+    val listener = new CdcStreams.MetricsListener
+    spark.streams.addListener(listener)
 
     EmbeddedTopicLog.produce(logRoot, topic, chunk(0L, chunkN, keySpace),
       partitions)
@@ -201,8 +230,9 @@ object BenchStream {
       .option("path", logRoot).option("topic", topic)
       .option("startingOffsets", "earliest")
       .load()
+    val latencyQuery = "bench_stream_latency_gold"
     val writer0 = silver(raw).writeStream
-      .queryName("bench_stream_latency_gold")
+      .queryName(latencyQuery)
       .option("checkpointLocation", ckpt)
     val writer = if (triggerMs < 0) writer0
       else writer0.trigger(org.apache.spark.sql.streaming.Trigger
@@ -254,7 +284,7 @@ object BenchStream {
     q.stop(); q.awaitTermination(30000)
     graft.streaming.BucketedGold.awaitCompactions()
 
-    spark.streams.removeListener(phaseListener)
+    spark.streams.removeListener(listener)
 
     val lats = samples.toArray(Array.empty[java.lang.Long])
       .map(_.longValue() / 1000000L).sorted // ms
@@ -262,8 +292,12 @@ object BenchStream {
       if (lats.isEmpty) -1L
       else lats(math.min(lats.length - 1, math.ceil(p * lats.length).toInt - 1))
     val avg = if (lats.isEmpty) -1L else lats.sum / lats.length
-    val phaseMedians = phases.toArray(Array.empty[(String, Long)])
-      .groupBy(_._1).toSeq
+    // engine-phase decomposition: per-batch durationMs components so the
+    // residual floor is MEASURED (addBatch = commit job + delta rename;
+    // the rest is trigger machinery: offset resolution, planning, WAL)
+    val phaseMedians = listener.snapshot
+      .filter(m => m.query_name == latencyQuery && m.received_nanos >= cutoff.get())
+      .flatMap(_.phases_ms).groupBy(_._1).toSeq
       .map { case (k, vs) =>
         val s = vs.map(_._2).sorted; k -> s(s.length / 2)
       }
@@ -353,49 +387,21 @@ object BenchStream {
       partitions: Int = sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "16").toInt,
       maxPerTrigger: Long = sys.env.getOrElse("SPARK_GRAFT_STREAM_TRIGGER", "250000").toLong,
       outPath: String = "BENCH_STREAM_RECOVERY.json"): Unit = {
-    val produceChunk = 25000
     val root = Files.createTempDirectory("graft-benchstream-rec").toString
     val (logRoot, topic) = (s"$root/log", "bench_cdc_rec")
     val (gold, ckpt) = (s"$root/gold", s"$root/ckpt")
 
-    val produced = new AtomicLong(0L)
-    val consumed = new AtomicLong(0L)
-    val stop = new AtomicBoolean(false)
-    val backlogCap = 4 * maxPerTrigger
-    val stats = new java.util.concurrent.ConcurrentLinkedQueue[BatchStat]()
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      import org.apache.spark.sql.streaming.StreamingQueryListener._
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit = {
-        val p = e.progress
-        consumed.addAndGet(p.numInputRows)
-        val dur = Option(p.durationMs.get("triggerExecution"))
-          .map(_.longValue()).getOrElse(0L)
-        stats.add(BatchStat(p.batchId, p.numInputRows, dur, System.nanoTime()))
-      }
-    }
+    val listener = new CdcStreams.MetricsListener
     spark.streams.addListener(listener)
+    def batches: Seq[CdcStreams.BatchMetric] =
+      listener.snapshot.filter(_.query_name == goldQuery)
 
     // SINGLE producer: contiguous blocks -> ids form [0, produced) exactly
-    produced.addAndGet(EmbeddedTopicLog.produce(logRoot, topic,
-      chunk(0L, produceChunk, keySpace), partitions))
-    val producer = new Thread(() => {
-      var block = 1L
-      while (!stop.get()) {
-        if (produced.get() - consumed.get() > backlogCap) Thread.sleep(5)
-        else {
-          EmbeddedTopicLog.produce(logRoot, topic,
-            chunk(block * produceChunk, produceChunk, keySpace), partitions)
-          block += 1
-          produced.addAndGet(produceChunk)
-        }
-      }
-    }, "benchstream-recovery-producer")
-    producer.setDaemon(true)
+    val producer = new Producers(logRoot, topic, keySpace, partitions,
+      nThreads = 1, backlogCap = 4 * maxPerTrigger, listener)
 
-    def commitsAfter(t: Long): Seq[BatchStat] =
-      stats.toArray(Array.empty[BatchStat]).filter(s => s.endNanos >= t && s.rows > 0)
+    def commitsAfter(t: Long): Seq[CdcStreams.BatchMetric] =
+      batches.filter(b => b.received_nanos >= t && b.event_count > 0)
 
     var q = startGoldQuery(spark, logRoot, topic, gold, ckpt, maxPerTrigger)
     producer.start()
@@ -404,12 +410,12 @@ object BenchStream {
     // pre-kill sustained rate over the trailing window of committed
     // batches — the re-ramp arm's "back to normal" yardstick
     def recentRate(): Double = {
-      val recent = stats.toArray(Array.empty[BatchStat])
-        .filter(_.rows > 0).sortBy(_.endNanos).takeRight(8)
+      val recent = batches.filter(_.event_count > 0)
+        .sortBy(_.received_nanos).takeRight(8)
       if (recent.length < 2) 0.0
       else {
-        val wall = (recent.last.endNanos - recent.head.endNanos) / 1e9
-        if (wall <= 0) 0.0 else recent.drop(1).map(_.rows).sum / wall
+        val wall = (recent.last.received_nanos - recent.head.received_nanos) / 1e9
+        if (wall <= 0) 0.0 else recent.drop(1).map(_.event_count).sum / wall
       }
     }
 
@@ -418,11 +424,11 @@ object BenchStream {
       if (midBatch) {
         // align the stop inside a running batch: wait for a fresh commit,
         // then sleep ~40% of the median batch wall before stopping
-        val before = stats.size()
+        val before = batches.size
         val deadline = System.nanoTime() + 10000000000L
-        while (stats.size() == before && System.nanoTime() < deadline)
+        while (batches.size == before && System.nanoTime() < deadline)
           Thread.sleep(20)
-        val durs = stats.toArray(Array.empty[BatchStat]).map(_.durMs).sorted
+        val durs = batches.map(_.duration_ms).sorted
         val med = if (durs.isEmpty) 500L else durs(durs.length / 2)
         Thread.sleep(math.max(50L, (med * 2) / 5))
       }
@@ -431,7 +437,7 @@ object BenchStream {
       q.stop(); q.awaitTermination(30000)
       val stopMs = (System.nanoTime() - tStop0) / 1000000L
       Thread.sleep(outageSec * 1000L) // producer keeps running
-      val backlog = produced.get() - consumed.get()
+      val backlog = producer.backlog
       val tRestart = System.nanoTime()
       q = startGoldQuery(spark, logRoot, topic, gold, ckpt, maxPerTrigger)
       val deadline = System.nanoTime() + 120000000000L
@@ -439,7 +445,7 @@ object BenchStream {
         Thread.sleep(20)
       val firstCommit = commitsAfter(tRestart).headOption
       val recSec = firstCommit
-        .map(s => (s.endNanos - tRestart) / 1e9).getOrElse(-1.0)
+        .map(b => (b.received_nanos - tRestart) / 1e9).getOrElse(-1.0)
       // re-ramp: seconds from restart until the trailing-window rate is
       // back to ≥90% of the pre-kill sustained rate (the producer never
       // paused, so the query is catching up a growing backlog here — the
@@ -451,10 +457,10 @@ object BenchStream {
         while (ramped < 0 && System.nanoTime() < rampDeadline) {
           val post = commitsAfter(tRestart)
           if (post.length >= 2) {
-            val wall = (post.last.endNanos - post.head.endNanos) / 1e9
-            val rate = if (wall <= 0) 0.0 else post.drop(1).map(_.rows).sum / wall
+            val wall = (post.last.received_nanos - post.head.received_nanos) / 1e9
+            val rate = if (wall <= 0) 0.0 else post.drop(1).map(_.event_count).sum / wall
             if (rate >= 0.9 * preKillRate)
-              ramped = (post.last.endNanos - tRestart) / 1e9
+              ramped = (post.last.received_nanos - tRestart) / 1e9
           }
           if (ramped < 0) Thread.sleep(50)
         }
@@ -476,11 +482,11 @@ object BenchStream {
       measureReramp = true)
 
     // drain: stop producing, measure catch-up from the second recovery
-    stop.set(true); producer.join(5000)
-    val producedTotal = produced.get()
+    producer.stopAndJoin()
+    val producedTotal = producer.produced.get()
     val tDrain0 = System.nanoTime()
     val drainDeadline = System.nanoTime() + 300000000000L
-    while (consumed.get() < producedTotal && System.nanoTime() < drainDeadline)
+    while (producer.consumed < producedTotal && System.nanoTime() < drainDeadline)
       Thread.sleep(50)
     val drainSec = (System.nanoTime() - tDrain0) / 1e9
     q.stop(); q.awaitTermination(30000)
@@ -525,17 +531,79 @@ object BenchStream {
         s"exactly-once violated across kill/restart: $mismatches mismatching rows")
   }
 
-  def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val warmupSec = sys.env.getOrElse("SPARK_GRAFT_STREAM_WARMUP", "20").toInt
-    val measureSec = sys.env.getOrElse("SPARK_GRAFT_STREAM_SEC", "60").toInt
-    val keySpace = sys.env.getOrElse("SPARK_GRAFT_STREAM_KEYS", "100000").toInt
-    val partitions = sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "16").toInt
-    val maxPerTrigger =
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_TRIGGER", "250000").toLong
-    val produceChunk = 25000
+  /** THROUGHPUT mode (the default): two backlog-capped producer threads
+    * (one thread builds envelopes at ~180K/s — below what the consumer
+    * drains; two keep the bench consumer-limited, the quantity under
+    * test) against the gold query for `warmupSec + measureSec`; writes
+    * `BENCH_STREAM.json`. A failed gold read fails the run.
+    */
+  def throughputMain(spark: SparkSession,
+      warmupSec: Int = sys.env.getOrElse("SPARK_GRAFT_STREAM_WARMUP", "20").toInt,
+      measureSec: Int = sys.env.getOrElse("SPARK_GRAFT_STREAM_SEC", "60").toInt,
+      keySpace: Int = sys.env.getOrElse("SPARK_GRAFT_STREAM_KEYS", "100000").toInt,
+      partitions: Int = sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "16").toInt,
+      maxPerTrigger: Long = sys.env.getOrElse("SPARK_GRAFT_STREAM_TRIGGER", "250000").toLong,
+      outPath: String = "BENCH_STREAM.json"): Unit = {
+    val root = Files.createTempDirectory("graft-benchstream").toString
+    val (logRoot, topic) = (s"$root/log", "bench_cdc")
+    val (gold, ckpt) = (s"$root/gold", s"$root/ckpt")
 
-    val spark = GraftSession.build(cpus)
+    val listener = new CdcStreams.MetricsListener
+    spark.streams.addListener(listener)
+    // backlog cap: the producers stay 2-4 triggers ahead (~4 triggers of
+    // ~350-byte envelopes on disk)
+    val producers = new Producers(logRoot, topic, keySpace, partitions,
+      nThreads = 2, backlogCap = 4 * maxPerTrigger, listener)
+
+    val q = startGoldQuery(spark, logRoot, topic, gold, ckpt, maxPerTrigger)
+    val t0 = System.nanoTime()
+    producers.start()
+    val cutoffNanos = t0 + warmupSec * 1000000000L
+    Thread.sleep((warmupSec + measureSec) * 1000L)
+    producers.stopAndJoin()
+    val backlogEnd = producers.backlog
+    q.stop()
+    q.awaitTermination(30000)
+    graft.streaming.BucketedGold.awaitCompactions()
+    spark.streams.removeListener(listener)
+
+    val measured = listener.snapshot
+      .filter(b => b.query_name == goldQuery && b.received_nanos >= cutoffNanos &&
+        b.event_count > 0)
+      .sortBy(_.batch_id)
+    val tEnd = measured.lastOption.map(_.received_nanos).getOrElse(cutoffNanos)
+    val wallSec = math.max((tEnd - cutoffNanos) / 1e9, 1e-9)
+    val nEvents = measured.map(_.event_count).sum
+    val evPerSec = nEvents / wallSec
+    val durs = measured.map(_.duration_ms).sorted
+    def pct(p: Double): Long =
+      if (durs.isEmpty) 0L
+      else durs(math.min(durs.length - 1, math.ceil(p * durs.length).toInt - 1))
+    val procPerSec =
+      if (measured.isEmpty) 0.0
+      else nEvents.toDouble * 1000.0 / math.max(measured.map(_.duration_ms).sum, 1L)
+    val goldRows = graft.streaming.BucketedGold.read(spark, gold).count()
+
+    val json =
+      s"""{"metric":"stream_events_per_sec","value":${evPerSec.round},""" +
+        s""""unit":"events/sec","sustained_sec":${"%.1f".format(wallSec)},""" +
+        s""""events_measured":$nEvents,"batches_measured":${measured.length},""" +
+        s""""p50_batch_ms":${pct(0.50)},"p95_batch_ms":${pct(0.95)},""" +
+        s""""processing_events_per_sec":${procPerSec.round},""" +
+        s""""warmup_sec":$warmupSec,"max_offsets_per_trigger":$maxPerTrigger,""" +
+        s""""partitions":$partitions,"key_space":$keySpace,""" +
+        s""""gold_rows":$goldRows,"produced_total":${producers.produced.get()},""" +
+        s""""backlog_end":$backlogEnd,""" +
+        s""""pipeline":"kafkalog -> debezium silver parse -> bucketed-delta SCD1 gold commit",""" +
+        s""""reference_envelope":"10000-50000 ev/s sustained, 45000 peak, 87ms avg latency (COMPARISON.md:33-34,139-143)"}"""
+    Files.writeString(Paths.get(outPath), json)
+    println(json)
+    // the embedded log/checkpoint/gold are scratch — delete like lagDemo
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+  }
+
+  def main(args: Array[String]): Unit = {
+    val spark = GraftSession.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // committer v2: task files move to the output dir at TASK commit —
     // one fewer sequential rename pass per micro-batch commit. Safety
     // here: delta writes land in a scratch dir that only becomes
@@ -546,120 +614,10 @@ object BenchStream {
     // retired a full cycle later (re-fold is a no-op).
     spark.sparkContext.hadoopConfiguration
       .set("mapreduce.fileoutputcommitter.algorithm.version", "2")
-
-    if (sys.env.get("SPARK_GRAFT_STREAM_MODE").contains("latency")) {
-      try latencyMain(spark) finally spark.stop()
-      return
-    }
-    if (sys.env.get("SPARK_GRAFT_STREAM_MODE").contains("recovery")) {
-      try recoveryMain(spark) finally spark.stop()
-      return
-    }
-
-    val root = Files.createTempDirectory("graft-benchstream").toString
-    val (logRoot, topic) = (s"$root/log", "bench_cdc")
-    val (gold, ckpt) = (s"$root/gold", s"$root/ckpt")
-
-    val produced = new AtomicLong(0L)
-    val consumed = new AtomicLong(0L)
-    val stop = new AtomicBoolean(false)
-    // backlog cap: the producer stays 2-4 triggers ahead — the consumer
-    // is never input-starved, disk usage stays bounded (~4 triggers of
-    // ~350-byte envelopes), and throughput is consumer-limited by
-    // construction (the quantity under test)
-    val backlogCap = 4 * maxPerTrigger
-
-    val stats = new java.util.concurrent.ConcurrentLinkedQueue[BatchStat]()
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      import org.apache.spark.sql.streaming.StreamingQueryListener._
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit = {
-        val p = e.progress
-        consumed.addAndGet(p.numInputRows)
-        // triggerExecution is the batch's total wall; the other durationMs
-        // entries (addBatch, getBatch, walCommit, …) are its COMPONENTS —
-        // summing the map double-counts
-        val dur = Option(p.durationMs.get("triggerExecution"))
-          .map(_.longValue()).getOrElse(0L)
-        stats.add(BatchStat(p.batchId, p.numInputRows, dur, System.nanoTime()))
-      }
-    }
-    spark.streams.addListener(listener)
-
-    // seed the topic so batch 0 has data, then sustain from TWO producer
-    // threads (a single thread builds envelopes at ~180K/s — below what
-    // the consumer drains; two keep the bench consumer-limited, which is
-    // the quantity under test). Threads own disjoint alternating id
-    // blocks; produce() itself serializes per topic, so segment offsets
-    // never race. Cross-thread interleaving can reorder APPENDS but not
-    // SCD1 semantics: ts_ms = id and the gold window orders by
-    // (ts_us, event_id), so latest-per-key is append-order independent.
-    val nProducers = 2
-    produced.addAndGet(EmbeddedTopicLog.produce(logRoot, topic,
-      chunk(0L, produceChunk, keySpace), partitions))
-    val producers = (0 until nProducers).map { t =>
-      val th = new Thread(() => {
-        var block = 1L + t // block 0 was the seed
-        while (!stop.get()) {
-          if (produced.get() - consumed.get() > backlogCap) Thread.sleep(5)
-          else {
-            EmbeddedTopicLog.produce(logRoot, topic,
-              chunk(block * produceChunk, produceChunk, keySpace), partitions)
-            block += nProducers
-            produced.addAndGet(produceChunk)
-          }
-        }
-      }, s"benchstream-producer-$t")
-      th.setDaemon(true)
-      th
-    }
-
-    val q = startGoldQuery(spark, logRoot, topic, gold, ckpt, maxPerTrigger)
-    val t0 = System.nanoTime()
-    producers.foreach(_.start())
-    val cutoffNanos = t0 + warmupSec * 1000000000L
-    Thread.sleep((warmupSec + measureSec) * 1000L)
-    stop.set(true)
-    producers.foreach(_.join(5000))
-    val backlogEnd = produced.get() - consumed.get()
-    q.stop()
-    q.awaitTermination(30000)
-    graft.streaming.BucketedGold.awaitCompactions()
-
-    val all = stats.toArray(Array.empty[BatchStat]).sortBy(_.batchId)
-    val measured = all.filter(s => s.endNanos >= cutoffNanos && s.rows > 0)
-    val tEnd = measured.lastOption.map(_.endNanos).getOrElse(cutoffNanos)
-    val wallSec = math.max((tEnd - cutoffNanos) / 1e9, 1e-9)
-    val nEvents = measured.map(_.rows).sum
-    val evPerSec = nEvents / wallSec
-    val durs = measured.map(_.durMs).sorted
-    def pct(p: Double): Long =
-      if (durs.isEmpty) 0L
-      else durs(math.min(durs.length - 1, math.ceil(p * durs.length).toInt - 1))
-    val procPerSec =
-      if (measured.isEmpty) 0.0
-      else nEvents.toDouble * 1000.0 / math.max(measured.map(_.durMs).sum, 1L)
-    val goldRows =
-      try graft.streaming.BucketedGold.read(spark, gold).count()
-      catch { case _: Exception => -1L }
-
-    val json =
-      s"""{"metric":"stream_events_per_sec","value":${evPerSec.round},""" +
-        s""""unit":"events/sec","sustained_sec":${"%.1f".format(wallSec)},""" +
-        s""""events_measured":$nEvents,"batches_measured":${measured.length},""" +
-        s""""p50_batch_ms":${pct(0.50)},"p95_batch_ms":${pct(0.95)},""" +
-        s""""processing_events_per_sec":${procPerSec.round},""" +
-        s""""warmup_sec":$warmupSec,"max_offsets_per_trigger":$maxPerTrigger,""" +
-        s""""partitions":$partitions,"key_space":$keySpace,""" +
-        s""""gold_rows":$goldRows,"produced_total":${produced.get()},""" +
-        s""""backlog_end":$backlogEnd,""" +
-        s""""pipeline":"kafkalog -> debezium silver parse -> bucketed-delta SCD1 gold commit",""" +
-        s""""reference_envelope":"10000-50000 ev/s sustained, 45000 peak, 87ms avg latency (COMPARISON.md:33-34,139-143)"}"""
-    Files.writeString(Paths.get("BENCH_STREAM.json"), json)
-    println(json)
-    // the embedded log/checkpoint/gold are scratch — delete like lagDemo
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    spark.stop()
+    try sys.env.get("SPARK_GRAFT_STREAM_MODE") match {
+      case Some("latency")  => latencyMain(spark)
+      case Some("recovery") => recoveryMain(spark)
+      case _                => throughputMain(spark)
+    } finally spark.stop()
   }
 }

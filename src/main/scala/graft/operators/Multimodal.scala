@@ -621,19 +621,6 @@ object Multimodal {
   case class VideoFrameFeat(doc_id: Long, frame_no: Int, n_frames: Int,
       diff_e4: Long, is_keyframe: Boolean)
 
-  /** #290 Keyframe selection over REAL decoded video frames: demux the
-    * container, ImageIO-decode every frame, reduce each to a 16-bin
-    * gray profile, and mark a keyframe wherever the mean absolute
-    * profile change from the previous frame exceeds the threshold (the
-    * shot-boundary detector a frame-sampling pipeline runs before
-    * feature extraction, so near-identical frames don't all get
-    * embedded). Row-local partition pass — frames of one video never
-    * cross executors; state is one profile, not the video.
-    */
-  def videoKeyframes(payloads: Dataset[MediaIn],
-      thresholdE4: Long = 1000L): Dataset[VideoFrameFeat] =
-    keyframesFromProfiles(videoProfiles(payloads), thresholdE4)
-
   /** The decoded-VIDEO substrate row: ONE demux+decode pass reduced to
     * per-frame 16-bin gray profiles (flattened frame-major, stride 16) —
     * everything the keyframe detector needs, at 16 doubles/frame instead
@@ -684,10 +671,13 @@ object Multimodal {
     }
   }
 
-  /** The shot-boundary detector over the profile substrate — pure
-    * arithmetic, bit-identical to the fused round-9 path (same profile
-    * bins, same |Δ| mean, same ×10⁴ rounding). Thresholds can be re-swept
-    * without touching a codec.
+  /** #290 Keyframe selection over REAL decoded video frames, from the
+    * [[videoProfiles]] substrate: mark a keyframe wherever the mean
+    * absolute 16-bin profile change from the previous frame (a share of
+    * full scale, ×10⁴, rounded) exceeds the threshold — the shot-boundary
+    * detector a frame-sampling pipeline runs before feature extraction,
+    * so near-identical frames don't all get embedded. Pure arithmetic:
+    * thresholds can be re-swept without touching a codec.
     */
   def keyframesFromProfiles(profiles: Dataset[VideoProfiles],
       thresholdE4: Long = 1000L): Dataset[VideoFrameFeat] = {

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.avro.Schema
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.avro.io.{BinaryDecoder, BinaryEncoder, DecoderFactory, EncoderFactory}
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -30,11 +30,13 @@ import graft.cdc.Debezium
   * Avro schema is DERIVED from [[Debezium.envelopeSchema]] so the two
   * ingestion paths (JSON text, Avro binary) can never drift apart.
   *
-  * Scale shape: both directions are `mapPartitions` with the encoder,
-  * writer, and output buffer REUSED across every row of a partition
-  * (Avro's factory API is designed for exactly this); no shuffle, no
-  * driver involvement, arbitrary parallelism. This is the same
-  * per-partition-amortized pattern spark-avro's own AvroSerializer uses.
+  * Scale shape: each direction is ONE codegen'd expression
+  * ([[AvroEncodeEnvelope]], [[AvroDecodeSilver]]) with the writer or
+  * reader, encoder and output buffer REUSED per thread across rows (Avro's
+  * factory API is designed for exactly this); no shuffle, no driver
+  * involvement, arbitrary parallelism. The decode is the only Avro-record
+  * → Spark-row mapping: [[SchemaRegistry.decodeRegistered]] resolves other
+  * generations to current-envelope bytes and hands them to it.
   */
 object AvroEnvelope extends Serializable {
 
@@ -73,20 +75,19 @@ object AvroEnvelope extends Serializable {
       s.getTypes.asScala.find(_.getType != Schema.Type.NULL).get
     else s
 
-  /** Per-partition conversion plan: field positions, unwrapped union
+  /** Per-thread conversion plan: field positions, unwrapped union
     * schemas and nesting resolved ONCE instead of per row. The naive
     * per-row walk (`getFields.asScala` + a union scan per field) allocated
     * a wrapper and a closure per field per row — ~25 fields deep for the
     * envelope, measured ~20% of the encode stage at sf0.1.
     */
   private final class FieldPlan(val pos: Int, val nested: RecordPlan,
-      val isString: Boolean, val kind: Int)
+      val kind: Int)
   private final class RecordPlan(val schema: Schema) {
     val fields: Array[FieldPlan] = schema.getFields.asScala.toArray.map { f =>
       val fs = nonNull(f.schema())
       new FieldPlan(f.pos(),
         if (fs.getType == Schema.Type.RECORD) new RecordPlan(fs) else null,
-        fs.getType == Schema.Type.STRING,
         fs.getType match {
           case Schema.Type.RECORD => 0
           case Schema.Type.LONG   => 1
@@ -96,97 +97,6 @@ object AvroEnvelope extends Serializable {
         })
     }
   }
-
-  private def rowToRecord(row: Row, plan: RecordPlan): GenericRecord = {
-    val rec = new GenericData.Record(plan.schema)
-    var i = 0
-    while (i < plan.fields.length) {
-      val fp = plan.fields(i)
-      if (!row.isNullAt(fp.pos)) {
-        val v = row.get(fp.pos)
-        rec.put(fp.pos,
-          if (fp.nested != null) rowToRecord(v.asInstanceOf[Row], fp.nested)
-          else v)
-      }
-      i += 1
-    }
-    rec
-  }
-
-  private def recordToRow(rec: GenericRecord, plan: RecordPlan): Row = {
-    val arr = new Array[Any](plan.fields.length)
-    var i = 0
-    while (i < plan.fields.length) {
-      val fp = plan.fields(i)
-      arr(i) = rec.get(fp.pos) match {
-        case null                  => null
-        case nested: GenericRecord => recordToRow(nested, fp.nested)
-        case s if fp.isString      => s.toString
-        case prim                  => prim
-      }
-      i += 1
-    }
-    Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(arr))
-  }
-
-  private val encodedSchema = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("avro_bytes", BinaryType)))
-
-  /** Envelope JSON text column → Avro binary column (event_id, avro_bytes).
-    * The JSON is parsed once (codegen'd `from_json`), then each partition
-    * serializes with one reused writer/encoder/buffer.
-    */
-  def encode(df: DataFrame, eventCol: String, idCol: String = "event_id"): DataFrame = {
-    val in = df.select(col(idCol).cast("long").as("event_id"),
-      from_json(col(eventCol), Debezium.envelopeSchema).as("parsed"))
-    val schemaJson = avroSchema.toString // Schema itself is not serializable-stable; ship text
-    in.mapPartitions { it =>
-      val schema = new Schema.Parser().parse(schemaJson)
-      val plan = new RecordPlan(schema)
-      val writer = new GenericDatumWriter[GenericRecord](schema)
-      val baos = new ByteArrayOutputStream(1024)
-      var enc: BinaryEncoder = null
-      it.map { r =>
-        baos.reset()
-        enc = EncoderFactory.get().binaryEncoder(baos, enc)
-        writer.write(rowToRecord(r.getStruct(1), plan), enc)
-        enc.flush()
-        Row(r.getLong(0), baos.toByteArray)
-      }
-    }(Encoders.row(encodedSchema))
-  }
-
-  private val decodedSchema = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("parsed", Debezium.envelopeSchema)))
-
-  /** Avro binary column → parsed envelope struct (`parsed`), ready for
-    * [[Debezium.extractFields]]. One reused reader/decoder per partition.
-    */
-  def decode(df: DataFrame, bytesCol: String, idCol: String = "event_id"): DataFrame = {
-    val in = df.select(col(idCol).cast("long").as("event_id"), col(bytesCol).as("b"))
-    val schemaJson = avroSchema.toString
-    in.mapPartitions { it =>
-      val schema = new Schema.Parser().parse(schemaJson)
-      val plan = new RecordPlan(schema)
-      val reader = new GenericDatumReader[GenericRecord](schema)
-      var dec: BinaryDecoder = null
-      var rec: GenericRecord = null
-      it.map { r =>
-        dec = DecoderFactory.get().binaryDecoder(r.getAs[Array[Byte]](1), dec)
-        rec = reader.read(rec, dec)
-        Row(r.getLong(0), recordToRow(rec, plan))
-      }
-    }(Encoders.row(decodedSchema))
-  }
-
-  /** Avro-path silver parse: decode + the SAME field extraction as the
-    * JSON path — so `cdc_avro_parse` is byte-parity comparable with
-    * `cdc_debezium_parse` and shares its DuckDB oracle.
-    */
-  def parseAvro(df: DataFrame, bytesCol: String, idCol: String = "event_id"): DataFrame =
-    Debezium.extractFields(decode(df, bytesCol, idCol))
 
   /** The envelope fields [[Debezium.extractFields]] actually reads —
     * the reader-schema side of the pruned decode. Same field names as
@@ -211,8 +121,10 @@ object AvroEnvelope extends Serializable {
     StructField("transaction", StructType(Seq(
       StructField("id", StringType))))))
 
-  private val silverFlatSchema = StructType(Seq(
-    StructField("event_id", LongType),
+  /** Struct type [[decodeSilverKernel]] emits: the flat silver columns
+    * [[Debezium.extractFields]] produces, minus the pass-through event_id.
+    */
+  val silverStruct: StructType = StructType(Seq(
     StructField("cdc_operation_raw", StringType),
     StructField("before_image", StringType),
     StructField("after_image", StringType),
@@ -226,81 +138,15 @@ object AvroEnvelope extends Serializable {
     StructField("transaction_id", StringType),
     StructField("event_ts_ms", LongType)))
 
-  /** Column-pruned fused decode: Avro binary → the exact flat columns
-    * [[Debezium.extractFields]] emits, in one object pass. Why it exists:
-    * a `mapPartitions` is opaque to Catalyst, so the composed
-    * `decode → extractFields` pays (a) full-envelope allocation at the
-    * Avro reader, (b) a nested-struct RowEncoder conversion, and (c) a
-    * projection Catalyst cannot push back through the object boundary.
-    * This decoder does the pruning manually — the reader schema drops
-    * unread fields inside Avro's skip path, and the emitted row is
-    * already flat. At 100 TB this is the difference between shipping
-    * 20 decoded columns per event through two conversion layers and
-    * shipping 12 through one. AvroEnvelopeSpec pins bit-parity against
-    * the composed path on every operation arm.
-    */
-  def decodeSilver(df: DataFrame, bytesCol: String, idCol: String = "event_id"): DataFrame = {
-    val in = df.select(col(idCol).cast("long").as("event_id"), col(bytesCol).as("b"))
-    val writerJson = avroSchema.toString
-    val readerJson = toAvroRecord(silverEnvelopeStruct, "envelope").toString
-    in.mapPartitions { it =>
-      val writerSch = new Schema.Parser().parse(writerJson)
-      val readerSch = new Schema.Parser().parse(readerJson)
-      val reader = new GenericDatumReader[GenericRecord](writerSch, readerSch)
-      val pBefore = readerSch.getField("before").pos()
-      val pAfter = readerSch.getField("after").pos()
-      val pSource = readerSch.getField("source").pos()
-      val pOp = readerSch.getField("op").pos()
-      val pTsMs = readerSch.getField("ts_ms").pos()
-      val pTxn = readerSch.getField("transaction").pos()
-      val srcSch = nonNull(readerSch.getField("source").schema())
-      val pSrcTs = srcSch.getField("ts_ms").pos()
-      val pSnap = srcSch.getField("snapshot").pos()
-      val pDb = srcSch.getField("db").pos()
-      val pTable = srcSch.getField("table").pos()
-      val pGtid = srcSch.getField("gtid").pos()
-      val pFile = srcSch.getField("file").pos()
-      val pPos = srcSch.getField("pos").pos()
-      val txnSch = nonNull(readerSch.getField("transaction").schema())
-      val pTxnId = txnSch.getField("id").pos()
-      var dec: BinaryDecoder = null
-      var rec: GenericRecord = null
-      def str(v: AnyRef): String = if (v == null) null else v.toString
-      it.map { r =>
-        dec = DecoderFactory.get().binaryDecoder(r.getAs[Array[Byte]](1), dec)
-        rec = reader.read(rec, dec)
-        val src = rec.get(pSource).asInstanceOf[GenericRecord]
-        val txn = rec.get(pTxn).asInstanceOf[GenericRecord]
-        Row(r.getLong(0),
-          str(rec.get(pOp)),
-          str(rec.get(pBefore)),
-          str(rec.get(pAfter)),
-          if (src == null) null else str(src.get(pDb)),
-          if (src == null) null else str(src.get(pTable)),
-          if (src == null) null else src.get(pSrcTs),
-          if (src == null) null else str(src.get(pSnap)),
-          if (src == null) null else str(src.get(pFile)),
-          if (src == null) null else src.get(pPos),
-          if (src == null) null else str(src.get(pGtid)),
-          if (txn == null) null else str(txn.get(pTxnId)),
-          rec.get(pTsMs))
-      }
-    }(Encoders.row(silverFlatSchema))
-  }
-
-  // ---- Expression-form codec (round 11, guide §1.2 step 2 / §4) --------
+  // ---- The codec: two whole-stage-codegen expressions ------------------
   //
-  // The mapPartitions codec above is OPAQUE to Catalyst: each direction
-  // pays a full RowEncoder boundary (25-field nested external Rows on
-  // encode, another on decode) and blocks column pruning through the
-  // pipeline — exactly what spark-avro avoids by making from_avro/to_avro
-  // EXPRESSIONS. These are that, for the envelope wire format: codegen'd
-  // static calls (no CodegenFallback, no object boundary) producing the
-  // same bytes / the same silver fields, with the writer/reader/buffer
-  // reused per THREAD (expressions are shared across a plan's tasks; a
-  // per-thread state is the per-partition reuse of the mapPartitions
-  // form, made safe under concurrency). DebeziumSpec pins byte parity
-  // with the mapPartitions encoder and row parity for the decode.
+  // Encode and decode are EXPRESSIONS (the shape spark-avro gives
+  // from_avro/to_avro), so the wire round-trip has no RowEncoder boundary
+  // and Catalyst can prune through it. The writer/reader/buffer are reused
+  // per THREAD: expressions are shared across a plan's tasks, so per-thread
+  // state is what makes the reuse safe under concurrency. DebeziumSpec
+  // pins the bytes against Avro's own GenericDatumWriter and the decoded
+  // rows against the JSON parse.
 
   private final class EncState {
     val schema: Schema = new Schema.Parser().parse(avroSchema.toString)
@@ -332,9 +178,9 @@ object AvroEnvelope extends Serializable {
     rec
   }
 
-  /** Codegen entry: parsed envelope struct (InternalRow) → Avro binary.
-    * Same bytes as [[encode]]'s per-row write — same writer schema, same
-    * field walk, same reused encoder.
+  /** Codegen entry: parsed envelope struct (InternalRow) → Avro binary
+    * under [[avroSchema]] — the bytes Avro's own `GenericDatumWriter`
+    * writes for the same record.
     */
   def encodeKernel(row: InternalRow): Array[Byte] = {
     val st = encState.get()
@@ -373,10 +219,10 @@ object AvroEnvelope extends Serializable {
     override def initialValue(): DecState = new DecState
   }
 
-  /** Codegen entry: Avro binary → the 12 silver fields (everything
-    * [[decodeSilver]] emits except the pass-through event_id), as one
-    * InternalRow. Pruned reader schema — unread envelope fields are
-    * skipped as bytes at the decoder, never allocated.
+  /** Codegen entry: Avro binary (written under [[avroSchema]]) → the 12
+    * [[silverStruct]] fields, as one InternalRow. Pruned reader schema —
+    * unread envelope fields are skipped as bytes at the decoder, never
+    * allocated.
     */
   def decodeSilverKernel(bytes: Array[Byte]): InternalRow = {
     val st = decState.get()
@@ -404,10 +250,6 @@ object AvroEnvelope extends Serializable {
     out(11) = rec.get(st.pTsMs)
     new GenericInternalRow(out)
   }
-
-  /** Struct type [[decodeSilverKernel]] emits (silver fields, no id). */
-  val silverStruct: StructType = StructType(silverFlatSchema.fields.filter(
-    _.name != "event_id"))
 
   /** envelope struct → Avro binary, as a whole-stage-codegen expression. */
   case class AvroEncodeEnvelope(child: Expression) extends UnaryExpression {
@@ -448,15 +290,12 @@ object AvroEnvelope extends Serializable {
     * [[Debezium.silverParsed]], proving the Avro wire round-trip loses
     * nothing the silver layer reads).
     *
-    * Round 11: the round-trip runs as the EXPRESSION codec — one
-    * whole-stage-codegen pipeline (parse → encode → decode → project),
-    * no RowEncoder boundaries, prunable by Catalyst like any expression
-    * (the JSON-path twin [[Debezium.silverParsed]] has always had that
-    * property; the opaque mapPartitions form denied it to this row).
-    * The per-field extraction of the decoded struct is subexpression-
-    * eliminated to ONE decode per row inside codegen — the same
-    * mechanism extractFields relies on for from_json. Bytes and rows
-    * are pinned identical to the mapPartitions codec by DebeziumSpec.
+    * The round-trip is one whole-stage-codegen pipeline (parse → encode
+    * → decode → project), no RowEncoder boundaries, prunable by Catalyst
+    * like any expression. The per-field extraction of the decoded struct
+    * is subexpression-eliminated to ONE decode per row inside codegen —
+    * the same mechanism extractFields relies on for from_json.
+    * DebeziumSpec pins the rows against [[Debezium.silverParsed]].
     */
   def avroSilverParsed(spark: SparkSession, dir: String): DataFrame = {
     val env = Debezium.synthEnvelope(spark, dir)

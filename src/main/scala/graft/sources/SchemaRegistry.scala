@@ -7,13 +7,11 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 import org.apache.avro.Schema
-import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
+import org.apache.avro.generic.{GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.avro.io.{BinaryDecoder, BinaryEncoder, DecoderFactory, EncoderFactory}
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-
-import graft.cdc.Debezium
 
 /** Versioned Avro schema registry + Confluent wire framing — the analog
   * of the schema-registry service in the reference's Kafka stack
@@ -29,10 +27,11 @@ import graft.cdc.Debezium
   *  - schemas register under a (topic, version) key and get a global id;
   *  - messages carry the 5-byte Confluent frame `[0x00][int32 id]` before
   *    the Avro body, so every message names its own WRITER schema;
-  *  - decode resolves writer→reader with Avro schema resolution (fields
-  *    the writer lacked surface as null, exactly how a v2 consumer reads
-  *    v1 messages), and unknown ids divert to a DLQ column instead of
-  *    failing the stream.
+  *  - decode resolves writer→current envelope with Avro schema resolution
+  *    (fields the writer lacked surface as null, exactly how a v2 consumer
+  *    reads v1 messages) and hands the resolved bytes to the envelope's one
+  *    codec; unknown ids divert to a DLQ column instead of failing the
+  *    stream.
   *
   * The registry state itself is a plain (topic, version, id, schema) table
   * — saved/loaded as parquet like [[graft.cdc.TableRegistry]], so a
@@ -61,8 +60,6 @@ object SchemaRegistry {
         e
       }
   }
-
-  def byId(id: Int): Option[Entry] = entries.get(id)
 
   def latest(topic: String): Option[Entry] =
     entries.values.filter(_.topic == topic).toSeq.sortBy(_.version).lastOption
@@ -211,127 +208,69 @@ object SchemaRegistry {
 
   // ---- Confluent wire framing ------------------------------------------
 
-  private def frame(id: Int, body: Array[Byte]): Array[Byte] = {
-    val out = new Array[Byte](5 + body.length)
-    out(0) = 0 // magic
-    ByteBuffer.wrap(out, 1, 4).putInt(id)
-    System.arraycopy(body, 0, out, 5, body.length)
-    out
-  }
-
-  /** Populate an Avro record from a Row BY NAME — the writer schema may
-    * be any registered generation, so positions cannot be assumed.
-    */
-  private def rowToRecordByName(row: Row, rowSchema: StructType,
-      avro: Schema): GenericRecord = {
-    val rec = new GenericData.Record(avro)
-    avro.getFields.asScala.foreach { f =>
-      val idx = try rowSchema.fieldIndex(f.name) catch { case _: IllegalArgumentException => -1 }
-      if (idx >= 0 && !row.isNullAt(idx)) {
-        val fs = nonNull(f.schema())
-        rec.put(f.pos(), row.get(idx) match {
-          case nested: Row =>
-            rowToRecordByName(nested,
-              rowSchema(idx).dataType.asInstanceOf[StructType], fs)
-          case prim => prim
-        })
-      }
-    }
-    rec
-  }
-
-  private def nonNull(s: Schema): Schema =
-    if (s.getType == Schema.Type.UNION)
-      s.getTypes.asScala.find(_.getType != Schema.Type.NULL).get
-    else s
-
-  private def recordToRow(rec: GenericRecord, avro: Schema): Row =
-    Row.fromSeq(avro.getFields.asScala.toSeq.map { f =>
-      val fs = nonNull(f.schema())
-      rec.get(f.pos()) match {
-        case null                  => null
-        case nested: GenericRecord => recordToRow(nested, fs)
-        case s if fs.getType == Schema.Type.STRING => s.toString
-        case prim                  => prim
-      }
-    })
-
-  private val encodedSchema = StructType(Seq(
+  private val resolvedSchema = StructType(Seq(
     StructField("event_id", LongType),
-    StructField("framed_bytes", BinaryType)))
-
-  /** Encode envelope JSON text as a specific registered GENERATION: the
-    * json is parsed against `writerStruct` (the generation's Spark-side
-    * shape), Avro-encoded with the generation's schema, and framed with
-    * its registry id — exactly what a producer built against that
-    * generation puts on the topic.
-    */
-  def encodeAs(df: DataFrame, eventCol: String, entry: Entry,
-      writerStruct: StructType, idCol: String = "event_id"): DataFrame = {
-    val in = df.select(col(idCol).cast("long").as("event_id"),
-      from_json(col(eventCol), writerStruct).as("parsed"))
-    val schemaJson = entry.schemaJson
-    val schemaId = entry.id
-    in.mapPartitions { it =>
-      val schema = new Schema.Parser().parse(schemaJson)
-      val writer = new GenericDatumWriter[GenericRecord](schema)
-      val baos = new ByteArrayOutputStream(1024)
-      var enc: BinaryEncoder = null
-      val struct = writerStruct
-      it.map { r =>
-        baos.reset()
-        enc = EncoderFactory.get().binaryEncoder(baos, enc)
-        writer.write(rowToRecordByName(r.getStruct(1), struct, schema), enc)
-        enc.flush()
-        Row(r.getLong(0), frame(schemaId, baos.toByteArray))
-      }
-    }(Encoders.row(encodedSchema))
-  }
-
-  private val decodedSchema = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("parsed", Debezium.envelopeSchema),
     StructField("writer_schema_id", IntegerType),
-    StructField("decode_error", StringType)))
+    StructField("decode_error", StringType),
+    StructField("envelope_bytes", BinaryType)))
 
-  /** Decode Confluent-framed messages of MIXED generations against the
-    * current envelope reader schema: each message's id resolves its
-    * writer schema from the registry snapshot taken at plan time; Avro
-    * schema resolution nulls fields the writer lacked. Unknown ids and
-    * malformed frames land with `decode_error` set and a null `parsed`
-    * struct — the DLQ contract of [[Debezium.parseEnvelopeWithDlq]].
+  /** Decode Confluent-framed messages of MIXED generations into the silver
+    * columns. Each message's 5-byte frame names its writer schema, looked
+    * up in the registry snapshot taken at plan time; Avro schema
+    * resolution reads the body as the current envelope
+    * ([[AvroEnvelope.avroSchema]] — fields the writer lacked come out
+    * null, exactly how a v2 consumer reads v1 messages); the resolved
+    * record is re-encoded as current-envelope bytes and decoded by
+    * [[AvroEnvelope.decodeSilverCol]], the one Avro → row mapping.
+    *
+    * Output: `event_id`, `writer_schema_id`, `decode_error`, then the
+    * [[AvroEnvelope.silverStruct]] fields. Unknown ids, malformed frames
+    * and bodies that fail to decode land with `decode_error` set and null
+    * silver fields (the DLQ contract of
+    * [[graft.cdc.Debezium.parseEnvelopeWithDlq]]) instead of failing the
+    * stream.
     */
   def decodeRegistered(df: DataFrame, bytesCol: String,
       idCol: String = "event_id"): DataFrame = {
-    val readerJson = AvroEnvelope.avroSchema.toString
+    val currentJson = AvroEnvelope.avroSchema.toString
     // snapshot of the registry rides to the executors as plain strings
     val writers: Map[Int, String] = all.map(e => e.id -> e.schemaJson).toMap
     val in = df.select(col(idCol).cast("long").as("event_id"), col(bytesCol).as("b"))
-    in.mapPartitions { it =>
-      val reader = new Schema.Parser().parse(readerJson)
-      val parsed = scala.collection.mutable.HashMap.empty[Int, Schema]
+    val resolved = in.mapPartitions { it =>
+      val current = new Schema.Parser().parse(currentJson)
       val readers = scala.collection.mutable.HashMap.empty[Int, GenericDatumReader[GenericRecord]]
+      val writer = new GenericDatumWriter[GenericRecord](current)
+      val baos = new ByteArrayOutputStream(1024)
       var dec: BinaryDecoder = null
+      var enc: BinaryEncoder = null
       it.map { r =>
         val bytes = r.getAs[Array[Byte]](1)
         if (bytes == null || bytes.length < 5 || bytes(0) != 0)
-          Row(r.getLong(0), null, null, "malformed frame")
+          Row(r.getLong(0), null, "malformed frame", null)
         else {
           val id = ByteBuffer.wrap(bytes, 1, 4).getInt
           writers.get(id) match {
-            case None => Row(r.getLong(0), null, id, s"unknown schema id $id")
+            case None => Row(r.getLong(0), id, s"unknown schema id $id", null)
             case Some(wj) =>
-              val w = parsed.getOrElseUpdate(id, new Schema.Parser().parse(wj))
-              val rd = readers.getOrElseUpdate(id,
-                new GenericDatumReader[GenericRecord](w, reader))
-              dec = DecoderFactory.get().binaryDecoder(bytes, 5, bytes.length - 5, dec)
-              try Row(r.getLong(0), recordToRow(rd.read(null, dec), reader), id, null)
-              catch { case e: Exception =>
-                Row(r.getLong(0), null, id, s"decode failed: ${e.getMessage}")
+              val rd = readers.getOrElseUpdate(id, new GenericDatumReader[GenericRecord](
+                new Schema.Parser().parse(wj), current))
+              try {
+                dec = DecoderFactory.get().binaryDecoder(bytes, 5, bytes.length - 5, dec)
+                val rec = rd.read(null, dec)
+                baos.reset()
+                enc = EncoderFactory.get().binaryEncoder(baos, enc)
+                writer.write(rec, enc)
+                enc.flush()
+                Row(r.getLong(0), id, null, baos.toByteArray)
+              } catch { case e: Exception =>
+                Row(r.getLong(0), id, s"decode failed: ${e.getMessage}", null)
               }
           }
         }
       }
-    }(Encoders.row(decodedSchema))
+    }(Encoders.row(resolvedSchema))
+    resolved.select(col("event_id"), col("writer_schema_id"), col("decode_error"),
+        AvroEnvelope.decodeSilverCol(col("envelope_bytes")).as("s"))
+      .select("event_id", "writer_schema_id", "decode_error", "s.*")
   }
 }

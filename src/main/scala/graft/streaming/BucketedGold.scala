@@ -163,10 +163,14 @@ object BucketedGold {
 
   // one compaction at a time per process; appends never wait on it. The
   // queue is the driver-side seam only — every heavy step inside compact()
-  // is still a distributed Spark job.
+  // is still a distributed Spark job. The thread inherits no thread-locals:
+  // Spark's local properties would otherwise carry the job group of the
+  // first committing thread — a streaming query's, which stopping that
+  // query cancels — into every later compaction.
   private val compactPool = java.util.concurrent.Executors.newSingleThreadExecutor(
     (r: Runnable) => {
-      val t = new Thread(r, "bucketed-gold-compactor"); t.setDaemon(true); t
+      val t = new Thread(null, r, "bucketed-gold-compactor", 0L, false)
+      t.setDaemon(true); t
     })
   private val compactInFlight =
     new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.Future[_]]()

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -913,26 +915,43 @@ object CdcStreams {
     * path: the listener taps the engine's own progress events, so
     * metrics cost nothing on the data plane. `toDF` snapshots the
     * collected batches for analysis/alerting.
+    *
+    * `duration_ms` is `triggerExecution`, the whole trigger; `phases_ms`
+    * is the engine's full `durationMs` map, whose other entries
+    * (addBatch, walCommit, queryPlanning, ...) are parts of it.
+    * `received_nanos` is the `System.nanoTime` at which the progress
+    * event reached the listener, and `rows_total` the query's input rows
+    * summed over its batches up to and including this one.
     */
   case class BatchMetric(query_name: String, batch_id: Long, event_count: Long,
-      rows_per_sec: Double, duration_ms: Long)
+      rows_per_sec: Double, duration_ms: Long, phases_ms: Map[String, Long],
+      received_nanos: Long, rows_total: Long)
 
   final class MetricsListener
       extends org.apache.spark.sql.streaming.StreamingQueryListener {
     import org.apache.spark.sql.streaming.StreamingQueryListener._
     private val buf = new java.util.concurrent.ConcurrentLinkedQueue[BatchMetric]()
+    private val totals =
+      new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
+    private def total(name: String) =
+      totals.computeIfAbsent(name, _ => new java.util.concurrent.atomic.AtomicLong)
     override def onQueryStarted(e: QueryStartedEvent): Unit = ()
     override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
     override def onQueryProgress(e: QueryProgressEvent): Unit = {
+      val received = System.nanoTime()
       val p = e.progress
-      // triggerExecution is the whole trigger; every other durationMs
-      // entry (addBatch, walCommit, queryPlanning, ...) is a part of it
-      buf.add(BatchMetric(Option(p.name).getOrElse(p.id.toString), p.batchId,
-        p.numInputRows, p.processedRowsPerSecond,
-        Option(p.durationMs.get("triggerExecution")).fold(0L)(_.longValue)))
+      val name = Option(p.name).getOrElse(p.id.toString)
+      val phases = p.durationMs.asScala.map { case (k, v) => k -> v.longValue }.toMap
+      buf.add(BatchMetric(name, p.batchId, p.numInputRows, p.processedRowsPerSecond,
+        phases.getOrElse("triggerExecution", 0L), phases, received,
+        total(name).addAndGet(p.numInputRows)))
     }
     def snapshot: Seq[BatchMetric] =
       buf.toArray(Array.empty[BatchMetric]).toSeq
+    /** Input rows the named query has consumed so far — what a
+      * backlog-capped producer polls.
+      */
+    def inputRows(queryName: String): Long = total(queryName).get
   }
 
   /** Snapshot a listener's collected metrics as a DataFrame. */

@@ -262,6 +262,34 @@ class BucketedGoldSpec extends SparkSpec {
     BucketedGold.awaitCompactions()
   }
 
+  test("an async compaction runs outside the committing thread's job group") {
+    // a streaming query commits from a thread in its own job group, and
+    // stopping the query cancels that group: a compaction carrying it dies
+    val gold = Files.createTempDirectory("bg-async-group").toString + "/gold"
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val committer = new Thread(() => {
+        spark.sparkContext.setJobGroup("bg-committer", "commits a stopped query cancels")
+        (0 until 3).foreach(i => BucketedGold.appendBatch(spark, batchDF(keyBatch(i): _*),
+          gold, i.toLong, numBuckets = 8, compactEvery = 3, compactAsync = true))
+      })
+      committer.start(); committer.join()
+      BucketedGold.awaitCompactions()
+      // listener events are async: wait for the compaction's jobs to land
+      val deadline = System.currentTimeMillis() + 10000
+      while (!groups.contains(None) && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      assert(groups.contains(Some("bg-committer")), s"commit jobs: $groups")
+      assert(groups.contains(None), s"compaction jobs ran in a job group: $groups")
+      assert(stateSet(BucketedGold.read(spark, gold)) ==
+        expectedState((0 until 3).flatMap(keyBatch)))
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("compact sweeps stale foreign-app scratch dirs, keeps own and fresh ones") {
     val root = Files.createTempDirectory("bg-scratch").toString
     val gold = s"$root/gold"

@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.avro.Schema
+import org.apache.avro.generic.{GenericDatumReader, GenericDatumWriter, GenericRecord}
+import org.apache.avro.io.{DecoderFactory, EncoderFactory}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.cdc.Debezium
 
@@ -18,6 +22,32 @@ class DebeziumSpec extends SparkSpec {
     """{"before":{"id":3},"after":null,"source":{"version":"2.4.0","connector":"mysql","name":"srv","ts_ms":1700000002000,"snapshot":"false","db":"shop","table":"orders","server_id":17,"gtid":"0-1-100","file":"binlog.000042","pos":6000,"row":1,"thread":3,"query":null},"op":"d","ts_ms":1700000002002,"transaction":{"id":"tx-10","total_order":1,"data_collection_order":1}}""",
     // unknown op code must map to UNKNOWN, not crash
     """{"before":null,"after":null,"source":null,"op":"z","ts_ms":5,"transaction":null}""")
+
+  // Avro's own reader and writer over the binary encoding — the reference
+  // the expression codec's bytes are checked against
+  private def avroRead(writer: Schema, reader: Schema, bytes: Array[Byte]): GenericRecord =
+    new GenericDatumReader[GenericRecord](writer, reader)
+      .read(null, DecoderFactory.get().binaryDecoder(bytes, null))
+
+  private def avroWrite(schema: Schema, rec: GenericRecord): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    val enc = EncoderFactory.get().binaryEncoder(out, null)
+    new GenericDatumWriter[GenericRecord](schema).write(rec, enc)
+    enc.flush()
+    out.toByteArray
+  }
+
+  /** Confluent wire frame: magic 0, big-endian int32 schema id, body. */
+  private def frame(id: Int, body: Array[Byte]): Array[Byte] =
+    java.nio.ByteBuffer.allocate(5 + body.length).put(0.toByte).putInt(id).put(body).array()
+
+  /** An envelope encoded by [[graft.sources.AvroEnvelope.encodeEnvelopeCol]]:
+    * (event_id, parsed JSON envelope, avro_bytes).
+    */
+  private def encodedEnvelope(env: DataFrame): DataFrame =
+    env.select(col("event_id").cast("long").as("event_id"),
+        from_json(col("cdc_event"), Debezium.envelopeSchema).as("parsed"))
+      .withColumn("avro_bytes", graft.sources.AvroEnvelope.encodeEnvelopeCol(col("parsed")))
 
   test("parseEnvelope extracts the full nested Debezium schema") {
     val df = Debezium.parseEnvelope(handwritten.toDF("cdc_event"), "cdc_event")
@@ -177,6 +207,13 @@ class DebeziumSpec extends SparkSpec {
         .filter(m => m.query_name == "metrics_probe" && m.event_count > 0)
         .map(m => m.batch_id -> m.duration_ms).toMap
       assert(durations == trigger)
+      // every batch carries its phase map (triggerExecution = duration_ms)
+      // and the query's running input-row total
+      val probe = listener.snapshot.filter(_.query_name == "metrics_probe")
+      probe.filter(_.event_count > 0).foreach(m =>
+        assert(m.phases_ms.get("triggerExecution").contains(m.duration_ms), s"$m"))
+      assert(probe.map(_.rows_total) == probe.scanLeft(0L)(_ + _.event_count).tail)
+      assert(listener.inputRows("metrics_probe") == probe.map(_.event_count).sum)
       val df = graft.streaming.CdcStreams.metricsDF(spark, listener)
       assert(df.filter(col("duration_ms") < 0).count() == 0)
       assert(df.columns.contains("rows_per_sec"))
@@ -246,54 +283,43 @@ class DebeziumSpec extends SparkSpec {
     assert(viaAvro.exceptAll(viaJson).count() == 0)
     // binary payloads are stable: encoding twice produces identical bytes
     val env = Debezium.synthEnvelope(spark, sf).limit(64)
-    val a = AvroEnvelope.encode(env, "cdc_event").orderBy("event_id")
-      .collect().map(r => (r.getLong(0), r.getAs[Array[Byte]](1).toSeq))
-    val b = AvroEnvelope.encode(env, "cdc_event").orderBy("event_id")
-      .collect().map(r => (r.getLong(0), r.getAs[Array[Byte]](1).toSeq))
-    assert(a.sameElements(b))
+    def bytes = encodedEnvelope(env).orderBy("event_id").collect()
+      .map(r => (r.getLong(0), r.getAs[Array[Byte]]("avro_bytes").toSeq))
+    val a = bytes
+    assert(a.nonEmpty && a.sameElements(bytes))
     // null images survive the union encoding (DELETE has null after)
     val del = AvroEnvelope.avroSilverParsed(spark, sf)
       .filter(col("operation") === "DELETE")
     assert(del.count() > 0 && del.filter(col("after_image").isNotNull).count() == 0)
-    // the pruned fused decoder (reader-schema column skip, flat rows) is
-    // bit-identical to the composed decode → extractFields path
-    val encoded = AvroEnvelope.encode(Debezium.synthEnvelope(spark, sf), "cdc_event")
-    val fused = AvroEnvelope.decodeSilver(encoded, "avro_bytes")
-    val composed = AvroEnvelope.parseAvro(encoded, "avro_bytes")
-      .drop("operation") // readableOp is applied above the fused decoder
-      .select(fused.columns.map(col): _*)
-    assert(fused.schema == composed.schema)
-    assert(fused.exceptAll(composed).count() == 0)
-    assert(composed.exceptAll(fused).count() == 0)
   }
 
-  test("expression codec is byte- and row-identical to the mapPartitions codec") {
+  test("expression codec matches Avro's own reader and writer on every op arm") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Row
     import graft.sources.AvroEnvelope
-    val env = Debezium.synthEnvelope(spark, sf)
-    // encode parity: the codegen'd expression writes the same bytes the
-    // per-partition writer does, for every operation arm
-    val viaExpr = env
-      .select(col("event_id").cast("long").as("event_id"),
-        AvroEnvelope.encodeEnvelopeCol(
-          from_json(col("cdc_event"), Debezium.envelopeSchema)).as("avro_bytes"))
-      .orderBy("event_id").collect()
-      .map(r => (r.getLong(0), r.getAs[Array[Byte]](1).toSeq))
-    val viaMap = AvroEnvelope.encode(env, "cdc_event")
-      .orderBy("event_id").collect()
-      .map(r => (r.getLong(0), r.getAs[Array[Byte]](1).toSeq))
-    assert(viaExpr.sameElements(viaMap))
-    // decode parity: expression decode of those bytes reproduces the
-    // fused mapPartitions decode row-for-row
-    val encoded = AvroEnvelope.encode(env, "cdc_event")
-    val exprDec = encoded
-      .select(col("event_id"),
-        AvroEnvelope.decodeSilverCol(col("avro_bytes")).as("s"))
-      .select(col("event_id") +:
-        AvroEnvelope.silverStruct.fields.map(f => col(s"s.${f.name}").as(f.name)): _*)
-    val mapDec = AvroEnvelope.decodeSilver(encoded, "avro_bytes")
-      .select(exprDec.columns.map(col): _*)
-    assert(exprDec.exceptAll(mapDec).count() == 0)
-    assert(mapDec.exceptAll(exprDec).count() == 0)
+    val schema = AvroEnvelope.avroSchema
+    def rowVals(r: Row): Seq[Any] = r.toSeq.map {
+      case n: Row => rowVals(n)
+      case v      => v
+    }
+    def recVals(g: GenericRecord): Seq[Any] = g.getSchema.getFields.asScala.toSeq.map { f =>
+      g.get(f.pos) match {
+        case n: GenericRecord => recVals(n)
+        case s: CharSequence  => s.toString
+        case v                => v
+      }
+    }
+    val rows = encodedEnvelope(Debezium.synthEnvelope(spark, sf)).collect()
+    assert(rows.map(_.getAs[Row]("parsed").getAs[String]("op")).toSet ==
+      Set("c", "u", "d", "r"))
+    rows.foreach { r =>
+      val bytes = r.getAs[Array[Byte]]("avro_bytes")
+      // Avro's reader sees exactly the from_json parse in the expression's bytes...
+      val rec = avroRead(schema, schema, bytes)
+      assert(recVals(rec) == rowVals(r.getAs[Row]("parsed")), s"event ${r.getLong(0)}")
+      // ...and Avro's writer reproduces those bytes from that record
+      assert(avroWrite(schema, rec).sameElements(bytes), s"event ${r.getLong(0)}")
+    }
   }
 
   test("readEnvelopeStream text arm feeds the silver parse end-to-end") {
@@ -328,13 +354,15 @@ class DebeziumSpec extends SparkSpec {
     try {
       val binDir = new java.io.File(dir, "bin").getAbsolutePath
       val env = Debezium.synthEnvelope(spark, sf).limit(300)
-      val encoded = AvroEnvelope.encode(env, "cdc_event")
+      val encoded = encodedEnvelope(env).select("event_id", "avro_bytes")
       encoded.write.mode("overwrite").parquet(binDir)
       // a micro-batch source of Avro BINARY payloads (what a Kafka value
       // column carries), decoded + silver-parsed inside the stream
       val stream = spark.readStream.schema(encoded.schema).parquet(binDir)
-      val q = AvroEnvelope.parseAvro(stream, "avro_bytes")
-        .select("event_id", "operation", "table_name", "event_ts_ms")
+      val q = stream
+        .select(col("event_id"), AvroEnvelope.decodeSilverCol(col("avro_bytes")).as("s"))
+        .select(col("event_id"), Debezium.readableOp(col("s.cdc_operation_raw")).as("operation"),
+          col("s.table_name").as("table_name"), col("s.event_ts_ms").as("event_ts_ms"))
         .writeStream.format("memory").queryName("avro_stream_t")
         .outputMode("append").start()
       try q.processAllAvailable() finally q.stop()
@@ -379,11 +407,18 @@ class DebeziumSpec extends SparkSpec {
     assert(SchemaRegistry.register(topic, AvroEnvelope.avroSchema) == v2)
 
     val env = Debezium.synthEnvelope(spark, sf).filter(col("event_id") <= 200)
-    val fromV1 = SchemaRegistry.encodeAs(
-      env.filter(col("event_id") % 2 === 0), "cdc_event", v1, v1Struct)
-    val fromV2 = SchemaRegistry.encodeAs(
-      env.filter(col("event_id") % 2 === 1), "cdc_event", v2, Debezium.envelopeSchema)
-    val mixed = fromV1.unionByName(fromV2)
+    // producers of both generations: v2 bytes are the expression codec's;
+    // a v1 producer's bytes are those records resolved to v1 by Avro and
+    // written with v1's own writer
+    val v1Schema = AvroEnvelope.avroSchemaFor(v1Struct)
+    val v2Bytes = encodedEnvelope(env).select("event_id", "avro_bytes").collect()
+      .map(r => r.getLong(0) -> r.getAs[Array[Byte]](1))
+    import spark.implicits._
+    val mixed = v2Bytes.toSeq.map { case (id, b) =>
+      if (id % 2 == 0)
+        id -> frame(v1.id, avroWrite(v1Schema, avroRead(AvroEnvelope.avroSchema, v1Schema, b)))
+      else id -> frame(v2.id, b)
+    }.toDF("event_id", "framed_bytes")
     val out = SchemaRegistry.decodeRegistered(mixed, "framed_bytes").cache()
 
     val n = env.count()
@@ -394,22 +429,28 @@ class DebeziumSpec extends SparkSpec {
     val v1Rows = out.filter(col("writer_schema_id") === v1.id)
     val v2Rows = out.filter(col("writer_schema_id") === v2.id)
     assert(v1Rows.count() > 0 && v2Rows.count() > 0)
-    assert(v1Rows.filter(col("parsed.transaction").isNotNull).count() == 0)
-    assert(v2Rows.filter(col("parsed.transaction.id").isNull).count() == 0)
+    assert(v1Rows.filter(col("transaction_id").isNotNull).count() == 0)
+    assert(v2Rows.filter(col("transaction_id").isNull).count() == 0)
     // the generation-independent fields decode identically to the JSON
     // parse on BOTH generations
     val silver = Debezium.parseEnvelope(env, "cdc_event")
       .select(col("event_id"), col("operation"), col("source_ts_ms"))
     val avroSide = out.select(col("event_id"),
-      Debezium.readableOp(col("parsed.op")).as("operation"),
-      col("parsed.source.ts_ms").as("source_ts_ms"))
+      Debezium.readableOp(col("cdc_operation_raw")).as("operation"),
+      col("source_ts_ms"))
     assert(avroSide.exceptAll(silver).count() == 0)
     assert(silver.exceptAll(avroSide).count() == 0)
-    // unknown id -> DLQ row, not a stream failure
-    import spark.implicits._
-    val rogue = Seq((9999L, Array[Byte](0, 0, 0, 3, 57, 1, 2))).toDF("event_id", "framed_bytes")
-    val dlq = SchemaRegistry.decodeRegistered(rogue, "framed_bytes").head()
-    assert(dlq.getString(3) != null && dlq.getString(3).contains("unknown schema id"))
+    // unknown id and a known id with a truncated body -> DLQ rows with
+    // null silver fields, not a stream failure
+    val body = v2Bytes.head._2
+    val rogue = Seq((9999L, Array[Byte](0, 0, 0, 3, 57, 1, 2)),
+      (9998L, frame(v2.id, body.take(body.length / 2)))).toDF("event_id", "framed_bytes")
+    val dlq = SchemaRegistry.decodeRegistered(rogue, "framed_bytes").collect()
+      .map(r => r.getLong(0) -> r).toMap
+    def dlqError(id: Long): String = dlq(id).getAs[String]("decode_error")
+    assert(dlqError(9999L) != null && dlqError(9999L).contains("unknown schema id"))
+    assert(dlqError(9998L) != null && dlqError(9998L).contains("decode failed"))
+    assert(dlq.values.forall(_.isNullAt(dlq(9998L).fieldIndex("cdc_operation_raw"))))
     // registry table round-trips through parquet
     val p = java.nio.file.Files.createTempDirectory("schemareg").toString + "/reg"
     SchemaRegistry.save(spark, p)
@@ -423,7 +464,6 @@ class DebeziumSpec extends SparkSpec {
   test("schema registry enforces compatibility modes on registration") {
     import graft.sources.SchemaRegistry
     import graft.sources.SchemaRegistry.CompatMode
-    import org.apache.avro.Schema
     SchemaRegistry.clear()
     def rec(fields: String): Schema = new Schema.Parser().parse(
       s"""{"type":"record","name":"E","fields":[$fields]}""")
