@@ -1,7 +1,8 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.locks.ReentrantLock
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import scala.jdk.CollectionConverters._
@@ -33,9 +34,11 @@ import scala.jdk.CollectionConverters._
   *
   * '''Release.''' The bound is one live snapshot per (dir, name, params):
   * a lookup under a new fingerprint releases the superseded entry before
-  * building. Releasing unpersists every checkpoint RDD in the entry's
-  * frames and deletes its temp roots; roots still held at JVM exit are
-  * deleted by one shutdown hook.
+  * building, and every lookup first releases the entries whose corpus dir
+  * no longer exists (a deleted corpus is never looked up again). Releasing
+  * unpersists every checkpoint RDD in the entry's frames and deletes its
+  * temp roots; roots still held at JVM exit are deleted by one shutdown
+  * hook.
   */
 object Artifacts {
 
@@ -83,9 +86,11 @@ object Artifacts {
   }
 
   private final class Entry {
+    val lock = new ReentrantLock
     var fp: String = _
     var value: Any = _
     var owner: Owner = _
+    def clear(): Unit = { owner.release(); owner = null; value = null }
   }
 
   private val entries = new ConcurrentHashMap[(String, String, Seq[Any]), Entry]()
@@ -99,12 +104,11 @@ object Artifacts {
     */
   private[graft] def memo[V](dir: String, name: String, params: Any*)(
       build: Owner => V): V = {
+    sweepDeletedDirs()
     val fp = Tables.snapshotFingerprint(dir)
     val e = entries.computeIfAbsent((dir, name, params), _ => new Entry)
-    e.synchronized {
-      if (e.owner != null && (e.fp != fp || !e.owner.valid)) {
-        e.owner.release(); e.owner = null; e.value = null
-      }
+    locked(e) {
+      if (e.owner != null && (e.fp != fp || !e.owner.valid)) e.clear()
       if (e.owner == null) {
         val o = new Owner(name)
         val v = try { val v = build(o); o.seal(); v }
@@ -115,8 +119,26 @@ object Artifacts {
     }
   }
 
+  private def locked[T](e: Entry)(body: => T): T = {
+    e.lock.lock()
+    try body finally e.lock.unlock()
+  }
+
+  /** Releases and drops the entries whose corpus dir is gone. An entry
+    * that is mid-build (its lock held) is left for a later sweep, so the
+    * sweep never waits on a lock while its caller may hold one.
+    */
+  private def sweepDeletedDirs(): Unit =
+    entries.forEach { (key, e) =>
+      if (!Files.exists(Paths.get(key._1)) && !e.lock.isHeldByCurrentThread &&
+          e.lock.tryLock()) {
+        try { if (e.owner != null) e.clear(); entries.remove(key, e) }
+        finally e.lock.unlock()
+      }
+    }
+
   /** Temp roots owned by the entry held for (dir, name, params). */
   private[graft] def roots(dir: String, name: String, params: Any*): Seq[String] =
     Option(entries.get((dir, name, params))).toSeq
-      .flatMap(e => e.synchronized(Option(e.owner).toSeq.flatMap(_.rootPaths)))
+      .flatMap(e => locked(e)(Option(e.owner).toSeq.flatMap(_.rootPaths)))
 }

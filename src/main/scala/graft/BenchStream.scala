@@ -295,8 +295,8 @@ object BenchStream {
     // engine-phase decomposition: per-batch durationMs components so the
     // residual floor is MEASURED (addBatch = commit job + delta rename;
     // the rest is trigger machinery: offset resolution, planning, WAL)
-    val phaseMedians = listener.snapshot
-      .filter(m => m.query_name == latencyQuery && m.received_nanos >= cutoff.get())
+    val phaseMedians = listener.batches(latencyQuery)
+      .filter(_.received_nanos >= cutoff.get())
       .flatMap(_.phases_ms).groupBy(_._1).toSeq
       .map { case (k, vs) =>
         val s = vs.map(_._2).sorted; k -> s(s.length / 2)
@@ -393,8 +393,7 @@ object BenchStream {
 
     val listener = new CdcStreams.MetricsListener
     spark.streams.addListener(listener)
-    def batches: Seq[CdcStreams.BatchMetric] =
-      listener.snapshot.filter(_.query_name == goldQuery)
+    def batches: Seq[CdcStreams.BatchMetric] = listener.batches(goldQuery)
 
     // SINGLE producer: contiguous blocks -> ids form [0, produced) exactly
     val producer = new Producers(logRoot, topic, keySpace, partitions,
@@ -424,9 +423,9 @@ object BenchStream {
       if (midBatch) {
         // align the stop inside a running batch: wait for a fresh commit,
         // then sleep ~40% of the median batch wall before stopping
-        val before = batches.size
-        val deadline = System.nanoTime() + 10000000000L
-        while (batches.size == before && System.nanoTime() < deadline)
+        val t = System.nanoTime()
+        val deadline = t + 10000000000L
+        while (!batches.exists(_.received_nanos >= t) && System.nanoTime() < deadline)
           Thread.sleep(20)
         val durs = batches.map(_.duration_ms).sorted
         val med = if (durs.isEmpty) 500L else durs(durs.length / 2)
@@ -567,9 +566,8 @@ object BenchStream {
     graft.streaming.BucketedGold.awaitCompactions()
     spark.streams.removeListener(listener)
 
-    val measured = listener.snapshot
-      .filter(b => b.query_name == goldQuery && b.received_nanos >= cutoffNanos &&
-        b.event_count > 0)
+    val measured = listener.batches(goldQuery)
+      .filter(b => b.received_nanos >= cutoffNanos && b.event_count > 0)
       .sortBy(_.batch_id)
     val tEnd = measured.lastOption.map(_.received_nanos).getOrElse(cutoffNanos)
     val wallSec = math.max((tEnd - cutoffNanos) / 1e9, 1e-9)

@@ -304,6 +304,23 @@ object TextHashes {
     codes
   }
 
+  /** PCA projection: component i of the result is the dot product of the
+    * vector with row i of the flat `k`×`d` basis [i·d + j], in doubles —
+    * uncentered, like MLlib's `PCAModel.transform`.
+    */
+  def pcaProject(v: Array[Float], basis: Array[Double], k: Int, d: Int): Array[Double] = {
+    val out = new Array[Double](k)
+    var i = 0
+    while (i < k) {
+      var acc = 0.0
+      var j = 0
+      while (j < d) { acc += basis(i * d + j) * v(j); j += 1 }
+      out(i) = acc
+      i += 1
+    }
+    out
+  }
+
   /** All word-n-gram md5 fingerprints of a token array in one compiled
     * pass: element i = md5 hex of tokens i..i+n-1 joined by a single
     * space — byte-identical to the interpreted

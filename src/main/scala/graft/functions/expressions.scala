@@ -229,6 +229,28 @@ case class PqQueryTable(child: Expression, cb: Array[Float], m: Int, k: Int, d: 
   override def prettyName: String = "pq_query_table"
 }
 
+/** PCA projection: ARRAY<FLOAT> vector → ARRAY<DOUBLE> of its `k`
+  * component scores under a trained flat basis (expression data via
+  * addReferenceObj, like [[PqCodes]]).
+  */
+case class PcaProject(child: Expression, basis: Array[Double], k: Int, d: Int)
+    extends UnaryExpression {
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+  override def nullIntolerant: Boolean = true
+  override protected def nullSafeEval(input: Any): Any =
+    ArrayData.toArrayData(
+      TextHashes.pcaProject(input.asInstanceOf[ArrayData].toFloatArray(), basis, k, d))
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val bRef = ctx.addReferenceObj("pcaBasis", basis, "double[]")
+    defineCodeGen(ctx, ev, c =>
+      s"org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(" +
+        s"graft.functions.TextHashes.pcaProject($c.toFloatArray(), $bRef, $k, $d))")
+  }
+  override protected def withNewChildInternal(newChild: Expression): PcaProject =
+    copy(child = newChild)
+  override def prettyName: String = "pca_project"
+}
+
 /** One corpus-wide BPE merge: ARRAY<STRING> symbols with every adjacent
   * (left, right) pair fused — the per-rank rewrite of byte-pair-encoding
   * training. The pair is per-merge data, carried as expression fields.
@@ -333,6 +355,8 @@ object GraftFunctions {
     ExpressionUtils.column(PqCodes(ExpressionUtils.expression(c), cb, m, k, d))
   def pqQueryTable(c: Column, cb: Array[Float], m: Int, k: Int, d: Int): Column =
     ExpressionUtils.column(PqQueryTable(ExpressionUtils.expression(c), cb, m, k, d))
+  def pcaProject(c: Column, basis: Array[Double], k: Int, d: Int): Column =
+    ExpressionUtils.column(PcaProject(ExpressionUtils.expression(c), basis, k, d))
   def pqAdcScore(codes: Column, tab: Column, k: Int): Column =
     ExpressionUtils.column(PqAdcScore(
       ExpressionUtils.expression(codes), ExpressionUtils.expression(tab), k))

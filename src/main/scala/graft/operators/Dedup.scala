@@ -614,31 +614,24 @@ object Dedup {
     * emit within-cluster dup pairs with the drop decision per pair. */
   private def semanticPairs(e: DataFrame, tau: Double,
       nClusters: Int): (DataFrame, DataFrame) = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    import org.apache.spark.ml.linalg.Vector
     val spark = e.sparkSession
-    val fv = e.select(col("vec_id"), col("embedding"))
-      .withColumn("fv", array_to_vector(col("embedding")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materializes the cache; the same count feeds the auto-k rule
-    val k = if (nClusters > 0) nClusters else autoClusters(fv.count())
+    val vecs = e.select(col("vec_id"), col("embedding"))
+    val k = if (nClusters > 0) nClusters else autoClusters(vecs.count())
     // centroids train on a seeded SAMPLE — Lloyd cost is O(n·k·d·iter) and
     // cluster geometry converges long before the full corpus is seen; the
     // full corpus only pays the one-pass assignment (standard at 100 TB)
-    val model = new KMeans().setK(k).setSeed(42L).setMaxIter(5)
-      .setFeaturesCol("fv").setPredictionCol("cluster")
-      .fit(fv.select("fv").sample(withReplacement = false, 0.25, 42L))
-    val centroids: Seq[(Int, Array[Float])] = model.clusterCenters.toSeq
-      .map((v: Vector) => v.toArray.map(_.toFloat)).zipWithIndex.map(_.swap)
-    val cdf = spark.createDataFrame(centroids).toDF("cluster", "centroid")
-    val assigned = model.transform(fv)
+    val centroids = Train.kmeans(
+      vecs.sample(withReplacement = false, 0.25, 42L), 1, k, 5)
+    val dim = centroids.length / k
+    val cdf = spark.createDataFrame(centroids.grouped(dim).toSeq.zipWithIndex.map(_.swap))
+      .toDF("cluster", "centroid")
+    val assigned = vecs
+      .withColumn("cluster",
+        GraftFunctions.pqCodes(col("embedding"), centroids, 1, k, dim).getItem(0))
       .join(broadcast(cdf), "cluster")
       .withColumn("c_sim", GraftFunctions.cosineSim(col("embedding"), col("centroid")))
       .select("cluster", "vec_id", "embedding", "c_sim")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    assigned.count() // materialize so the upstream feature cache can go now
-    fv.unpersist()
     val a = assigned.select(col("cluster"), col("vec_id").as("id_a"),
       col("embedding").as("emb_a"), col("c_sim").as("csim_a"))
     val b = assigned.select(col("cluster"), col("vec_id").as("id_b"),

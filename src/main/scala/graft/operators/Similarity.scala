@@ -1013,10 +1013,11 @@ object Similarity {
     * subspaces and k-means each independently — the standard compression
     * step past int8 ([[quantizeEmbeddings]]): 64 float dims → m code
     * bytes (32× here), with table-lookup (ADC) scoring instead of float
-    * dot products. Training is one seeded Lloyd loop that fits all `m`
-    * subspaces together, one shuffle-free job per iteration; at 100 TB
-    * you fit on a sample — the codebook is O(m·k·d) floats regardless of
-    * corpus size — and only ENCODE touches every row.
+    * dot products. Training is [[Train.kmeans]]: a seeded init job, then
+    * one Lloyd loop that fits all `m` subspaces together, one
+    * shuffle-free job per iteration; at 100 TB you fit on a sample — the
+    * codebook is O(m·k·d) floats regardless of corpus size — and only
+    * ENCODE touches every row.
     */
   /** Trained PQ codebook, memoized per corpus snapshot + hyperparameters
     * in [[graft.Artifacts]]. Both trainers ([[pqCodebookTrain]],
@@ -1032,77 +1033,10 @@ object Similarity {
     Artifacts.memo(dir, "pq-codebook", m, kCodes, iters)(_ =>
       pqCodebookTrain(spark, dir, m, kCodes, iters))
 
+  /** [[pqCodebook]] without the memo: `iters + 1` jobs. */
   private[graft] def pqCodebookTrain(spark: SparkSession, dir: String,
-      m: Int, kCodes: Int, iters: Int): Array[Float] = {
-    val e = Tables.embeddings(spark, dir)
-    val dim = e.select(size(col("embedding"))).head().getInt(0)
-    val d = dim / m
-    // flat codebook, laid out [(sub·kCodes + code)·d + j] like the kernels'
-    val cb = new Array[Float](m * kCodes * d)
-    // deterministic hash-sampled init: per subspace, the kCodes subvectors
-    // with the smallest salted row hash (one job)
-    val wInit = Window.partitionBy("sub")
-      .orderBy(xxhash64(col("vec_id"), col("sub")), col("vec_id"))
-    e.select(col("vec_id"), posexplode(expr(
-        s"transform(sequence(0, ${m - 1}), s -> transform(slice(embedding, s * $d + 1, $d), x -> CAST(x AS DOUBLE)))"))
-        .as(Seq("sub", "sv")))
-      .withColumn("r", row_number().over(wInit))
-      .filter(col("r") <= kCodes)
-      .select(col("sub"), (col("r") - 1).cast("int").as("code"), col("sv"))
-      .collect().foreach { r =>
-        val sv = r.getSeq[Double](2)
-        var j = 0
-        while (j < d) { cb((r.getInt(0) * kCodes + r.getInt(1)) * d + j) = sv(j).toFloat; j += 1 }
-      }
-    // Lloyd iterations: ONE job per iteration trains all m codebooks at
-    // once, with no shuffle. Each partition assigns its rows with the
-    // PqCodes kernel (the exact function encode uses; interpreted
-    // higher-order lambdas at k=256 cost ~100× per element, and m
-    // sequential MLlib fits would re-scan the corpus m times per
-    // iteration) and returns one (sum, count) pair of m·k·d arrays — the
-    // driver collects O(m·k·d · partitions) numbers whatever the corpus
-    // size. A null element is left out of its dimension's sum and count.
-    // The driver merges the partials in partition order, so a given input
-    // always trains the same codebook.
-    val vectors = e.select(col("embedding")).queryExecution.toRdd
-    for (_ <- 1 to iters) {
-      val prev = cb.clone()
-      val partials = vectors.mapPartitions { rows =>
-        val sum = new Array[Double](prev.length)
-        val cnt = new Array[Long](prev.length)
-        rows.foreach { row =>
-          if (!row.isNullAt(0)) {
-            val v = row.getArray(0)
-            val codes = TextHashes.pqCodes(v.toFloatArray(), prev, m, kCodes, d)
-            var s = 0
-            while (s < m) {
-              var j = 0
-              while (j < d) {
-                if (!v.isNullAt(s * d + j)) {
-                  val at = (s * kCodes + codes(s)) * d + j
-                  sum(at) += v.getFloat(s * d + j).toDouble
-                  cnt(at) += 1
-                }
-                j += 1
-              }
-              s += 1
-            }
-          }
-        }
-        Iterator.single((sum, cnt))
-      }.collect()
-      // a (code, dim) that lost every member keeps its previous centroid
-      var i = 0
-      while (i < cb.length) {
-        var sum = 0.0
-        var cnt = 0L
-        partials.foreach { case (ps, pc) => sum += ps(i); cnt += pc(i) }
-        if (cnt > 0) cb(i) = (sum / cnt).toFloat
-        i += 1
-      }
-    }
-    cb
-  }
+      m: Int, kCodes: Int, iters: Int): Array[Float] =
+    Train.kmeans(Tables.embeddings(spark, dir), m, kCodes, iters)
 
   // Round 11: the query-side ADC distance tables used to be built by
   // nested transform/zip_with/aggregate lambdas over a typedLit of the
@@ -1159,29 +1093,25 @@ object Similarity {
     * coarse centroids — the same metric ADC approximates, so the probe
     * and scan rankings agree. ScaleSpec pins recall vs the exact scan.
     */
-  /** Trained IVF-PQ index model: the coarse quantizer plus the flat
-    * product codebook. Production trains ONCE (the codebook is O(m·k·d)
-    * floats and the coarse model O(nClusters·dim) — driver-sized
-    * regardless of corpus scale) and serves every query batch from the
-    * same model; the registered audit query retrains per call only so the
-    * oracle run is self-contained.
+  /** Trained IVF-PQ index model: the coarse quantizer's `nClusters`
+    * centroids (flat, [cluster·dim + j]) plus the flat product codebook.
+    * Production trains ONCE (the codebook is O(m·k·d) floats and the
+    * coarse centroids O(nClusters·dim) — driver-sized regardless of corpus
+    * scale) and serves every query batch from the same model; the
+    * registered audit query retrains per call only so the oracle run is
+    * self-contained.
     */
-  case class IvfPqModel(
-      coarse: org.apache.spark.ml.clustering.KMeansModel,
-      codebook: Array[Float], nClusters: Int, m: Int, kCodes: Int, d: Int)
+  case class IvfPqModel(coarse: Array[Float], codebook: Array[Float],
+      nClusters: Int, m: Int, kCodes: Int, d: Int)
 
-  /** Train the coarse quantizer + PQ codebook (seeded, deterministic;
-    * memoized per corpus+hyperparameters — see [[pqCodebook]]).
+  /** Train the coarse quantizer ([[Train.kmeans]] at m = 1: seeded init +
+    * 5 Lloyd rounds, L2) + PQ codebook (seeded, deterministic; memoized
+    * per corpus+hyperparameters — see [[pqCodebook]]).
     */
   def trainIvfPq(spark: SparkSession, dir: String, nClusters: Int = 16,
       m: Int = 8, kCodes: Int = 256): IvfPqModel =
     Artifacts.memo(dir, "ivf-pq", nClusters, m, kCodes) { _ =>
-      import org.apache.spark.ml.clustering.KMeans
-      import org.apache.spark.ml.functions.array_to_vector
-      val coarse = new KMeans().setK(nClusters).setSeed(7L).setMaxIter(5)
-        .setFeaturesCol("fv").setPredictionCol("cluster")
-        .fit(Tables.embeddings(spark, dir)
-          .withColumn("fv", array_to_vector(col("embedding"))).select("fv"))
+      val coarse = Train.kmeans(Tables.embeddings(spark, dir), 1, nClusters, 5)
       val cb = pqCodebook(spark, dir, m, kCodes)
       IvfPqModel(coarse, cb, nClusters, m, kCodes, cb.length / (m * kCodes))
     }
@@ -1192,59 +1122,52 @@ object Similarity {
     annIvfPqServe(spark, dir, trainIvfPq(spark, dir, nClusters, m, kCodes),
       k, nProbe)
 
-  /** Persist a trained index model: the coarse quantizer via MLlib's own
-    * writer, the codebook + hyperparameters as one parquet row. Serving
-    * clusters load the model instead of retraining — the index artifact a
-    * 100 TB deployment builds once per corpus snapshot.
+  /** Persist a trained index model as one parquet row under
+    * `path/codebook`: the coarse centroids beside the codebook, and the
+    * hyperparameters. Serving clusters load the model instead of
+    * retraining — the index artifact a 100 TB deployment builds once per
+    * corpus snapshot.
     */
   def saveIvfPq(spark: SparkSession, model: IvfPqModel, path: String): Unit = {
     import spark.implicits._
-    model.coarse.write.overwrite().save(s"$path/coarse")
-    Seq((model.codebook, model.nClusters, model.m, model.kCodes, model.d))
-      .toDF("codebook", "n_clusters", "m", "k_codes", "d")
+    Seq((model.coarse, model.codebook, model.nClusters, model.m, model.kCodes, model.d))
+      .toDF("coarse", "codebook", "n_clusters", "m", "k_codes", "d")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")
   }
 
   def loadIvfPq(spark: SparkSession, path: String): IvfPqModel = {
-    val coarse = org.apache.spark.ml.clustering.KMeansModel.load(s"$path/coarse")
     val r = spark.read.parquet(s"$path/codebook").head()
-    IvfPqModel(coarse, r.getSeq[Float](r.fieldIndex("codebook")).toArray,
+    IvfPqModel(r.getSeq[Float](r.fieldIndex("coarse")).toArray,
+      r.getSeq[Float](r.fieldIndex("codebook")).toArray,
       r.getInt(r.fieldIndex("n_clusters")), r.getInt(r.fieldIndex("m")),
       r.getInt(r.fieldIndex("k_codes")), r.getInt(r.fieldIndex("d")))
   }
 
   /** Serve a query batch from an already-trained model — only encode and
-    * scan work here; nothing retrains.
+    * scan work here; nothing retrains. A corpus row's cell is its L2
+    * argmin over the coarse centroids (the PqCodes kernel at m = 1).
     */
   def annIvfPqServe(spark: SparkSession, dir: String, model: IvfPqModel,
       k: Int = DefaultK, nProbe: Int = 4): DataFrame = {
-    import org.apache.spark.ml.functions.array_to_vector
-    import org.apache.spark.ml.linalg.Vector
-    val IvfPqModel(coarse, cb, _, m, kCodes, d) = model
+    val IvfPqModel(coarse, cb, nClusters, m, kCodes, d) = model
+    val dim = coarse.length / nClusters
     val e = Tables.embeddings(spark, dir)
-    val assigned = coarse.transform(
-        e.withColumn("fv", array_to_vector(col("embedding"))))
-      .select(col("vec_id"), col("embedding"), col("cluster"))
-    val cdf = spark.createDataFrame(coarse.clusterCenters.toSeq
-        .map((v: Vector) => v.toArray.map(_.toFloat)).zipWithIndex.map(_.swap))
-      .toDF("cluster", "centroid")
     val qtab = GraftFunctions.pqQueryTable(col("embedding"), cb, m, kCodes, d)
-    val centL2 = aggregate(
-      zip_with(col("embedding"), col("centroid"), (x, y) =>
-        (x.cast("double") - y.cast("double")) * (x.cast("double") - y.cast("double"))),
-      lit(0.0), (acc, v) => acc + v)
+    // each query's squared-L2 to every coarse centroid: the ADC table
+    // kernel at m = 1, position = cluster id
+    val cd2 = GraftFunctions.pqQueryTable(col("embedding"), coarse, 1, nClusters, dim)
     val wProbe = Window.partitionBy("qid").orderBy(col("cd2").asc, col("cluster"))
     val q = e.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("qid"), col("embedding"), qtab.as("qtab"))
-      .crossJoin(broadcast(cdf))
-      .withColumn("cd2", centL2)
+      .select(col("vec_id").as("qid"), qtab.as("qtab"),
+        posexplode(cd2).as(Seq("cluster", "cd2")))
       .withColumn("prnk", row_number().over(wProbe))
       .filter(col("prnk") <= nProbe)
       .select(col("qid"), col("qtab"), col("cluster"))
     val w = Window.partitionBy("qid").orderBy(col("adc_d2").asc, col("nid"))
-    assigned.select(col("vec_id").as("nid"),
+    e.select(col("vec_id").as("nid"),
         GraftFunctions.pqCodes(col("embedding"), cb, m, kCodes, d).as("codes"),
-        col("cluster"))
+        GraftFunctions.pqCodes(col("embedding"), coarse, 1, nClusters, dim)
+          .getItem(0).as("cluster"))
       .join(broadcast(q), Seq("cluster"))
       .filter(col("nid") =!= col("qid"))
       .withColumn("adc_d2", GraftFunctions.pqAdcScore(col("codes"), col("qtab"), kCodes))
@@ -1319,34 +1242,13 @@ object Similarity {
       .selectExpr("label", "n_a", "n_b",
         "CASE WHEN nrm0 = 0 OR nrm1 = 0 THEN NULL ELSE round(CAST(dot AS DOUBLE) / (sqrt(CAST(nrm0 AS DOUBLE)) * sqrt(CAST(nrm1 AS DOUBLE))), 6) END AS centroid_cos")
 
-  /** Trained PCA basis plus its whitening scales — same train-once
-    * lifecycle as [[pqCodebook]]. The scales are the per-component std of
-    * the PROJECTED corpus (k driver-side scalars from one aggregate —
-    * exact, not the model's variance PROPORTIONS), in component order.
+  /** Trained PCA basis (flat k×dim, [[Train.pca]]) plus its whitening
+    * scales — the per-component std of the projected corpus, in component
+    * order — with the same train-once lifecycle as [[pqCodebook]].
     */
   private def pcaModel(spark: SparkSession, dir: String,
-      k: Int): (org.apache.spark.ml.feature.PCAModel, Array[Double]) =
-    Artifacts.memo(dir, "pca", k) { _ =>
-      import org.apache.spark.ml.functions.array_to_vector
-      val model = new org.apache.spark.ml.feature.PCA().setK(k)
-        .setInputCol("fv").setOutputCol("pc")
-        .fit(Tables.embeddings(spark, dir)
-          .withColumn("fv", array_to_vector(col("embedding"))).select("fv"))
-      // k rows need no sort job: put in component order on the driver
-      val stds = pcaProject(spark, dir, model)
-        .select(posexplode(col("pc")).as(Seq("j", "v")))
-        .groupBy("j").agg(stddev_samp(col("v")).as("s"))
-        .collect().sortBy(_.getInt(0)).map(_.getDouble(1))
-      (model, stds)
-    }
-
-  private def pcaProject(spark: SparkSession, dir: String,
-      model: org.apache.spark.ml.feature.PCAModel): DataFrame = {
-    import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
-    model.transform(Tables.embeddings(spark, dir)
-        .withColumn("fv", array_to_vector(col("embedding"))))
-      .select(col("vec_id"), vector_to_array(col("pc")).as("pc"))
-  }
+      k: Int): (Array[Double], Array[Double]) =
+    Artifacts.memo(dir, "pca", k)(_ => Train.pca(Tables.embeddings(spark, dir), k))
 
   /** #193 PCA projection + whitening of the embedding corpus — the
     * dimensionality-reduction pass a training pipeline runs before
@@ -1354,19 +1256,22 @@ object Similarity {
     * ANN index build; whitening equalizes component scales so L2 in the
     * reduced space is Mahalanobis in the original).
     *
-    * Covariance/SVD training is one corpus pass inside MLlib (tree-
-    * aggregated Gramian — O(dim²) per partition, never a corpus-sized
-    * collect); the PROJECTION is a row-local matrix multiply, zero
-    * shuffles at any corpus size. Variances ride along so the spec can
-    * pin the explained-variance ordering; projections round to 4dp (the
-    * eigenbasis sign is implementation-stable but not cross-engine —
-    * rows-only entry, invariants spec'd).
+    * Training is one corpus job ([[Train.pca]]: per-partition (n, Σx,
+    * Σxxᵀ) — O(dim²) per partition, never a corpus-sized collect — then a
+    * dim×dim eigendecomposition on the driver), and the whitening scales
+    * come from the same pass. The PROJECTION is the codegen'd row-local
+    * `pca_project` kernel (uncentered, as MLlib's `PCAModel.transform`),
+    * zero shuffles at any corpus size. Projections round to 4dp; the
+    * component signs follow a fixed rule (largest-|loading| entry
+    * positive), but the gate row still reports only sign-invariant norms
+    * ([[embPcaAudit]]).
     */
   def embPca(spark: SparkSession, dir: String, k: Int = 8): DataFrame = {
-    val (model, stds) = pcaModel(spark, dir, k)
-    val projected = pcaProject(spark, dir, model)
+    val (basis, stds) = pcaModel(spark, dir, k)
     val sLit = typedLit(stds.map(s => if (s < 1e-9) 1e-9 else s).toSeq)
-    projected
+    Tables.embeddings(spark, dir)
+      .select(col("vec_id"),
+        GraftFunctions.pcaProject(col("embedding"), basis, k, basis.length / k).as("pc"))
       .withColumn("pc_r", expr("transform(pc, x -> round(x, 4))"))
       .withColumn("white", zip_with(col("pc"), sLit,
         (p, s) => round(p / s, 4)))

@@ -930,11 +930,16 @@ object CdcStreams {
   final class MetricsListener
       extends org.apache.spark.sql.streaming.StreamingQueryListener {
     import org.apache.spark.sql.streaming.StreamingQueryListener._
-    private val buf = new java.util.concurrent.ConcurrentLinkedQueue[BatchMetric]()
-    private val totals =
-      new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-    private def total(name: String) =
-      totals.computeIfAbsent(name, _ => new java.util.concurrent.atomic.AtomicLong)
+    /** One query's latest [[MetricsListener.Capacity]] batches and its
+      * exact running input-row total; guarded by its own monitor.
+      */
+    private final class Ring {
+      val buf = new java.util.ArrayDeque[BatchMetric]()
+      var rows = 0L
+      def copy(): Seq[BatchMetric] = synchronized(buf.toArray(Array.empty[BatchMetric]).toSeq)
+    }
+    private val rings = new java.util.concurrent.ConcurrentHashMap[String, Ring]()
+    private def ring(name: String) = rings.computeIfAbsent(name, _ => new Ring)
     override def onQueryStarted(e: QueryStartedEvent): Unit = ()
     override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
     override def onQueryProgress(e: QueryProgressEvent): Unit = {
@@ -942,16 +947,34 @@ object CdcStreams {
       val p = e.progress
       val name = Option(p.name).getOrElse(p.id.toString)
       val phases = p.durationMs.asScala.map { case (k, v) => k -> v.longValue }.toMap
-      buf.add(BatchMetric(name, p.batchId, p.numInputRows, p.processedRowsPerSecond,
-        phases.getOrElse("triggerExecution", 0L), phases, received,
-        total(name).addAndGet(p.numInputRows)))
+      val r = ring(name)
+      r.synchronized {
+        r.rows += p.numInputRows
+        r.buf.addLast(BatchMetric(name, p.batchId, p.numInputRows, p.processedRowsPerSecond,
+          phases.getOrElse("triggerExecution", 0L), phases, received, r.rows))
+        if (r.buf.size > MetricsListener.Capacity) r.buf.removeFirst()
+      }
     }
+    /** The named query's retained batches, oldest first. */
+    def batches(queryName: String): Seq[BatchMetric] =
+      Option(rings.get(queryName)).fold(Seq.empty[BatchMetric])(_.copy())
+    /** Every query's retained batches, in arrival order. */
     def snapshot: Seq[BatchMetric] =
-      buf.toArray(Array.empty[BatchMetric]).toSeq
-    /** Input rows the named query has consumed so far — what a
-      * backlog-capped producer polls.
+      rings.values.asScala.toSeq.flatMap(_.copy()).sortBy(_.received_nanos)
+    /** Input rows the named query has consumed so far, exact past the
+      * ring's capacity — what a backlog-capped producer polls.
       */
-    def inputRows(queryName: String): Long = total(queryName).get
+    def inputRows(queryName: String): Long = {
+      val r = ring(queryName)
+      r.synchronized(r.rows)
+    }
+  }
+
+  object MetricsListener {
+    /** Batches kept per query: 400 s of 100 ms triggers, the densest
+      * cadence any caller runs. Older batches are dropped.
+      */
+    val Capacity = 4096
   }
 
   /** Snapshot a listener's collected metrics as a DataFrame. */

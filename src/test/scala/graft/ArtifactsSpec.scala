@@ -71,6 +71,26 @@ class ArtifactsSpec extends SparkSpec {
     }
   }
 
+  test("an entry whose corpus dir is deleted is released by the next lookup") {
+    val sc = spark.sparkContext
+    val gone = Files.createTempDirectory("artifacts_spec_gone")
+    val before = sc.getPersistentRDDs.keySet.toSet
+    var root = ""
+    Artifacts.memo(gone.toString, "spec-gone") { a =>
+      root = a.root()
+      Files.writeString(Paths.get(root, "_SUCCESS"), "")
+      a.frame(spark.range(10).toDF("id").localCheckpoint(eager = true))
+    }
+    val held = sc.getPersistentRDDs.keySet.toSet -- before
+    assert(held.nonEmpty && Files.exists(Paths.get(root)))
+    org.apache.commons.io.FileUtils.deleteDirectory(gone.toFile)
+    withCorpus(d => assert(Artifacts.memo(d.toString, "spec-other")(_ => 1) === 1))
+    assert(!Files.exists(Paths.get(root)), s"root $root of a deleted corpus still on disk")
+    assert((sc.getPersistentRDDs.keySet & held).isEmpty,
+      s"checkpoint RDDs $held of a deleted corpus still persisted")
+    assert(Artifacts.roots(gone.toString, "spec-gone").isEmpty)
+  }
+
   test("a path artifact with a reaped part is rebuilt, not failed (zone-map layouts)") {
     import graft.operators.ZoneMap
     val first = ZoneMap.zoneMapAudit(spark, sf).collect().toSet

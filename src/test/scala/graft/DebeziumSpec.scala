@@ -214,6 +214,25 @@ class DebeziumSpec extends SparkSpec {
         assert(m.phases_ms.get("triggerExecution").contains(m.duration_ms), s"$m"))
       assert(probe.map(_.rows_total) == probe.scanLeft(0L)(_ + _.event_count).tail)
       assert(listener.inputRows("metrics_probe") == probe.map(_.event_count).sum)
+      assert(listener.batches("metrics_probe") == probe)
+      // past its capacity the per-query ring keeps the latest batches, and
+      // rows_total / inputRows stay exact
+      import org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent
+      import org.apache.spark.sql.streaming.StreamingQueryProgress
+      val last = q.recentProgress.filter(_.numInputRows > 0).last
+      // the event's constructor is private to Spark
+      val replay = classOf[QueryProgressEvent]
+        .getConstructor(classOf[StreamingQueryProgress]).newInstance(last)
+      val replays = graft.streaming.CdcStreams.MetricsListener.Capacity + 10
+      val rowsBefore = listener.inputRows("metrics_probe")
+      (1 to replays).foreach(_ => listener.onQueryProgress(replay))
+      val rowsAfter = listener.inputRows("metrics_probe")
+      assert(rowsAfter == rowsBefore + replays * last.numInputRows)
+      val kept = listener.batches("metrics_probe")
+      assert(kept.size == graft.streaming.CdcStreams.MetricsListener.Capacity)
+      assert(kept.last.rows_total == rowsAfter)
+      assert(kept.map(_.rows_total) ==
+        kept.scanLeft(kept.head.rows_total - kept.head.event_count)(_ + _.event_count).tail)
       val df = graft.streaming.CdcStreams.metricsDF(spark, listener)
       assert(df.filter(col("duration_ms") < 0).count() == 0)
       assert(df.columns.contains("rows_per_sec"))

@@ -59,7 +59,7 @@ class TablesSpec extends SparkSpec {
   test("PQ training runs one job per Lloyd round and trains the same codebook every time") {
     val iters = 3
     val (cb, jobs) = jobsOf(Similarity.pqCodebookTrain(spark, sf, 8, 16, iters))
-    assert(jobs.size <= iters + 3, jobs.mkString(", "))
+    assert(jobs.size === iters + 1, jobs.mkString(", "))
     assert(cb.length === 8 * 16 * 8)
     assert(cb.exists(_ != 0f))
     assert(Similarity.pqCodebookTrain(spark, sf, 8, 16, iters).sameElements(cb))
