@@ -40,11 +40,12 @@ import graft.streaming.CdcStreams
   * engine's per-record clock.
   *
   * Scale notes (100 TB / real cluster): every stage here is the shape
-  * that scales — the topic read is partition-parallel (one task per
-  * partition per batch), the parse is whole-stage-codegen'd `from_json`,
-  * and the SCD1 apply shuffles the micro-batch against a key-bounded
-  * gold table. On a 1000-executor cluster the same plan widens by
-  * partition count; the single-node number below is the per-node
+  * that scales — the topic read plans one task per
+  * `KafkaLogPlanner.RecordsPerTask` records of a batch, at most one per
+  * core (a small batch is one task), the parse is whole-stage-codegen'd
+  * `from_json`, and the SCD1 apply shuffles the micro-batch against a
+  * key-bounded gold table. On a 1000-executor cluster the same plan
+  * widens by partition count; the single-node number below is the per-node
   * contribution floor, measured on the same local[32] box the batch
   * bench uses.
   */

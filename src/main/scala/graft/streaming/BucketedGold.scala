@@ -25,7 +25,10 @@ import scala.jdk.CollectionConverters._
   *                         do not depend on compaction timing)
   *   root/delta/b<id>/     one directory per committed micro-batch — the
   *                         raw normalized batch rows, renamed into place
-  *                         atomically
+  *                         atomically; one part file per task of the
+  *                         batch (a kafkalog micro-batch of at most
+  *                         `KafkaLogPlanner.RecordsPerTask` records is one
+  *                         task, so one file)
   *
   *  - '''Commit''' ([[appendBatch]]) = write the batch as one new delta
   *    dir (write to a scratch dir, RENAME into place — atomic on

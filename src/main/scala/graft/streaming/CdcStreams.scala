@@ -789,11 +789,6 @@ object CdcStreams {
         col("p_event_id").isNotNull.as("converted"))
   }
 
-  /** Batch MERGE used from foreachBatch: apply a micro-batch of CDC events
-    * onto a parquet target — latest-per-key wins, DELETE drops the key
-    * (reference: unity_catalog_cdc_demo.py:300-447 does the same with Delta
-    * MERGE/DELETE; parquet-overwrite stands in for the table format).
-    */
   /** True iff `e` means "the target doesn't exist yet" (first batch) —
     * the ONLY failure an upsert may treat as an empty table. Any other
     * read failure (interrupt during query stop, transient IO) must
@@ -808,6 +803,26 @@ object CdcStreams {
     case _ => false
   }
 
+  /** The parquet table at `path`, or None when it does not exist. The
+    * filesystem is asked first and only an existing path is read: reading
+    * a missing one fails in analysis, and Spark posts that failed query to
+    * every query-execution listener of the session (an `Observation`'s
+    * listener then re-analyses it and logs the PATH_NOT_FOUND as a listener
+    * error). A path removed between the probe and the read still reads as
+    * missing through [[isMissingTarget]].
+    */
+  private def readIfExists(spark: SparkSession, path: String): Option[DataFrame] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) None
+    else try Some(spark.read.parquet(path))
+    catch { case e: Exception if isMissingTarget(e) => None }
+  }
+
+  /** Batch MERGE used from foreachBatch: apply a micro-batch of CDC events
+    * onto a parquet target — latest-per-key wins, DELETE drops the key
+    * (reference: unity_catalog_cdc_demo.py:300-447 does the same with Delta
+    * MERGE/DELETE; parquet-overwrite stands in for the table format).
+    */
   def applyCdcBatch(spark: SparkSession, batch: DataFrame, targetPath: String): Unit = {
     val incoming = batch.select("user_id", "operation", "ts_us", "event_id", "value")
     val dst = new org.apache.hadoop.fs.Path(targetPath)
@@ -819,20 +834,16 @@ object CdcStreams {
     // state lives ONLY in _bak — read it as the existing state so the
     // checkpointed replay re-merges against the right base instead of an
     // empty target (which would truncate gold to the batch's keys).
-    // Ordered TRY-READS, not exists()-then-read: an exists probe followed
-    // by the read is a TOCTOU window for the crash-recovery case above.
     // The contract is ONE applier per target (foreachBatch is serial and
     // the checkpointed replay runs alone) — but a misconfigured second
     // applier completing BOTH renames plus the trailing _bak delete
     // between our dst probe and bak probe would still slip past two
-    // reads, so the probe sequence is dst -> _bak -> dst again: after a
+    // probes, so the probe sequence is dst -> _bak -> dst again: after a
     // swap completes, dst holds full state at every instant, so the
-    // second dst read catches it. Only all-three-missing falls through
+    // second dst probe catches it. Only all-three-missing falls through
     // to the first-batch empty base.
-    def tryRead(path: String): Option[DataFrame] =
-      try Some(spark.read.parquet(path)
-        .select("user_id", "operation", "ts_us", "event_id", "value"))
-      catch { case e: Exception if isMissingTarget(e) => None }
+    def tryRead(path: String): Option[DataFrame] = readIfExists(spark, path)
+      .map(_.select("user_id", "operation", "ts_us", "event_id", "value"))
     val existing = tryRead(targetPath).orElse(tryRead(bakPath))
       .orElse(tryRead(targetPath)).getOrElse(
         spark.createDataFrame(
@@ -887,12 +898,10 @@ object CdcStreams {
     val affected = incoming.select("src_table").distinct()
       .collect().map(_.getString(0)).toSeq
     if (affected.isEmpty) return
-    val existing =
-      try spark.read.parquet(targetRoot)
-        .filter(col("src_table").isin(affected: _*))
-        .select(cols.map(col): _*)
-      catch { case e: Exception if isMissingTarget(e) => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], incoming.schema) }
+    val existing = readIfExists(spark, targetRoot)
+      .map(_.filter(col("src_table").isin(affected: _*)).select(cols.map(col): _*))
+      .getOrElse(spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], incoming.schema))
     val w = Window.partitionBy("src_table", "entity_key")
       .orderBy(col("seq").desc, col("operation"))
     val merged = existing.unionByName(incoming)

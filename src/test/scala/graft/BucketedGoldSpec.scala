@@ -139,6 +139,62 @@ class BucketedGoldSpec extends SparkSpec {
     assert(bucketed.map(_._1) === Set(1L, 3L, 4L)) // user 2 deleted
   }
 
+  test("a first apply on a fresh path posts no failed query after an Observation-bearing commit") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("bg-fresh").toString
+    val sentinel = s"sentinel-${System.nanoTime}"
+    val failed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = if (qe.logical.toString.contains(sentinel)) drained.countDown()
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = failed.add(s"$f: ${e.getMessage}")
+    }
+    spark.listenerManager.register(listener)
+    try {
+      // the commit registers the session's Observation listener
+      BucketedGold.appendBatch(spark, batchDF((1L, "INSERT", 10L, 1L, 1.0)), s"$root/gold", 0L)
+      CdcStreams.applyCdcBatch(spark, batchDF((1L, "INSERT", 10L, 1L, 1.0)), s"$root/flat")
+      CdcStreams.applyCdcBatchMultiTable(spark,
+        Seq(("orders", "1", 1L, "INSERT", "{}")).toDF("src_table", "entity_key", "seq",
+          "operation", "payload"), s"$root/mtm")
+      // listener events arrive in order: the sentinel's success comes last
+      spark.range(1).selectExpr(s"'$sentinel' AS s").collect()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.listenerManager.unregister(listener)
+    assert(failed.isEmpty, s"failed queries posted: $failed")
+    assert(spark.read.parquet(s"$root/flat").count() === 1)
+    assert(spark.read.parquet(s"$root/mtm").count() === 1)
+  }
+
+  test("a kafkalog micro-batch below RecordsPerTask records commits one data file") {
+    import graft.sources.{EmbeddedTopicLog, KafkaLogPlanner}
+    val root = Files.createTempDirectory("bg-onefile").toString
+    val n = 300
+    assert(n < KafkaLogPlanner.RecordsPerTask)
+    EmbeddedTopicLog.produce(s"$root/log", "t", (0 until n).map(i => (s"${i % 50}", s"$i")),
+      partitions = 8)
+    val gold = s"$root/gold"
+    val q = spark.readStream.format("kafkalog")
+      .option("path", s"$root/log").option("topic", "t").load()
+      .selectExpr("CAST(CAST(key AS STRING) AS LONG) AS user_id", "'UPDATE' AS operation",
+        "offset AS ts_us", "CAST(CAST(value AS STRING) AS LONG) AS event_id",
+        "CAST(offset AS DOUBLE) AS value")
+      .writeStream
+      .option("checkpointLocation", s"$root/ck")
+      .foreachBatch { (b: DataFrame, id: Long) =>
+        BucketedGold.appendBatch(spark, b, gold, id); ()
+      }
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    val deltas = new java.io.File(s"$gold/delta").listFiles().filter(_.isDirectory)
+    assert(deltas.length === 1)
+    val files = deltas.head.listFiles().map(_.getName).filter(_.startsWith("part-"))
+    assert(files.length === 1, s"one micro-batch of $n records wrote ${files.toSeq}")
+    assert(BucketedGold.read(spark, gold).count() === 50)
+  }
+
   test("compaction changes nothing a reader can see, and GC'd deltas are gone") {
     val root = Files.createTempDirectory("bg-compact").toString
     val gold = s"$root/gold"

@@ -615,8 +615,16 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("Exchange"),
       s"a plain topic-log projection should not shuffle:\n$p")
     assert(df.count() == 100)
-    assert(df.rdd.getNumPartitions == 4,
-      "one input partition per topic partition")
+    assert(df.rdd.getNumPartitions == 1, "100 records plan one task")
+    // 4 · RecordsPerTask records over 4 topic partitions: one task each on 4 cores
+    val n = 4 * graft.sources.KafkaLogPlanner.RecordsPerTask
+    EmbeddedTopicLog.produce(root, "big", (1L to n).map(i => (i.toString, s"v$i")),
+      partitions = 4)
+    val big = spark.read.format("kafkalog")
+      .option("path", root).option("topic", "big").load()
+    assert(!big.queryExecution.executedPlan.toString.contains("Exchange"))
+    assert(big.count() == n)
+    assert(big.rdd.getNumPartitions == 4, "one input partition per topic partition")
   }
 
   test("new session ops: broadcast dims, shared user partitioning, no nested loops") {

@@ -906,8 +906,8 @@ class StreamingSpec extends SparkSpec {
       }
       .start()
     try q.processAllAvailable() finally q.stop()
-    assert(tasks.nonEmpty && tasks.forall(_ <= 4),
-      s"a batch planned more input partitions than local[4] has cores: $tasks")
+    assert(tasks.nonEmpty && tasks.forall(_ == 1),
+      s"a capped batch of at most 50 records planned more than one task: $tasks")
 
     val got = spark.read.parquet(out).collect()
       .map(r => (r.getAs[String]("v"), r.getAs[Int]("partition"), r.getAs[Long]("offset"),
@@ -939,12 +939,30 @@ class StreamingSpec extends SparkSpec {
       .option("path", root).option("topic", topic)
       .option("startingOffsets", json).load()
       .selectExpr("CAST(value AS STRING) AS v", "partition", "offset")
-    assert(mid.rdd.getNumPartitions <= 4)
+    assert(mid.rdd.getNumPartitions === 1)
     val midRows = mid.collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2)))
     assert(midRows.map(r => (r._2, r._3)).toSet ===
       (0 until parts).flatMap(p => (from(p) until next(p)).map(o => (p, o))).toSet)
     assert(midRows.length === midRows.distinct.length)
     midRows.foreach { case (v, p, off) => assert(produced(v) === ((p, off))) }
+  }
+
+  test("kafkalog: a batch plans one task per RecordsPerTask records, at most one per core") {
+    import graft.sources.{EmbeddedTopicLog, KafkaLogMicroBatchStream, KafkaLogPlanner}
+    val r = KafkaLogPlanner.RecordsPerTask.toInt
+    val cores = spark.sparkContext.defaultParallelism
+    val root = tmpDir("kafkalog-size")
+    Seq(1 -> 1, r -> 1, (r + 1) -> 2, (cores * r + 1) -> cores).foreach { case (n, want) =>
+      val topic = s"size$n"
+      // null keys go round-robin over 8 partitions: no count above is capped by ranges
+      EmbeddedTopicLog.produce(root, topic, (0 until n).map(i => (null: String, s"v$i")), 8)
+      val batch = spark.read.format("kafkalog").option("path", root).option("topic", topic).load()
+      assert(batch.rdd.getNumPartitions === want, s"batch read of $n records")
+      assert(batch.count() === n)
+      val stream = new KafkaLogMicroBatchStream(root, topic, "earliest")
+      assert(stream.planInputPartitions(stream.initialOffset(), stream.reportLatestOffset())
+        .length === want, s"micro-batch of $n records")
+    }
   }
 
   test("kafkalog: a truncated segment throws EOFException and releases its file") {
