@@ -605,12 +605,9 @@ object BenchStream {
     val spark = GraftSession.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // committer v2: task files move to the output dir at TASK commit —
     // one fewer sequential rename pass per micro-batch commit. Safety
-    // here: delta writes land in a scratch dir that only becomes
-    // visible via BucketedGold's own atomic rename; the base rewrite
-    // (compaction's dynamic partition overwrite) relies on Spark's
-    // .spark-staging protocol instead, and a crash mid-compaction is
-    // recoverable regardless because the folded deltas are only
-    // retired a full cycle later (re-fold is a no-op).
+    // here: BucketedGold writes every delta and every compacted base into
+    // a fresh dir that only becomes visible when a `_log` version lists
+    // its files, so a half-committed write is never read.
     spark.sparkContext.hadoopConfiguration
       .set("mapreduce.fileoutputcommitter.algorithm.version", "2")
     try sys.env.get("SPARK_GRAFT_STREAM_MODE") match {

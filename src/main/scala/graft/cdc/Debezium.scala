@@ -75,21 +75,30 @@ object Debezium {
     * shared by the plain and DLQ-splitting parse paths so envelopes are
     * parsed exactly once per event either way.
     */
-  private[graft] def extractFields(df: DataFrame): DataFrame =
-    df.withColumn("cdc_operation_raw", col("parsed.op"))
-      .withColumn("operation", readableOp(col("parsed.op")))
-      .withColumn("before_image", col("parsed.before"))
-      .withColumn("after_image", col("parsed.after"))
-      .withColumn("database_name", col("parsed.source.db"))
-      .withColumn("table_name", col("parsed.source.table"))
-      .withColumn("source_ts_ms", col("parsed.source.ts_ms"))
-      .withColumn("snapshot_flag", col("parsed.source.snapshot"))
-      .withColumn("binlog_file", col("parsed.source.file"))
-      .withColumn("binlog_position", col("parsed.source.pos"))
-      .withColumn("gtid", col("parsed.source.gtid"))
-      .withColumn("transaction_id", col("parsed.transaction.id"))
-      .withColumn("event_ts_ms", col("parsed.ts_ms"))
-      .drop("parsed")
+  private[graft] def extractFields(df: DataFrame): DataFrame = {
+    val fields = Seq(
+      "cdc_operation_raw" -> col("parsed.op"),
+      "operation" -> readableOp(col("parsed.op")),
+      "before_image" -> col("parsed.before"),
+      "after_image" -> col("parsed.after"),
+      "database_name" -> col("parsed.source.db"),
+      "table_name" -> col("parsed.source.table"),
+      "source_ts_ms" -> col("parsed.source.ts_ms"),
+      "snapshot_flag" -> col("parsed.source.snapshot"),
+      "binlog_file" -> col("parsed.source.file"),
+      "binlog_position" -> col("parsed.source.pos"),
+      "gtid" -> col("parsed.source.gtid"),
+      "transaction_id" -> col("parsed.transaction.id"),
+      "event_ts_ms" -> col("parsed.ts_ms"))
+    // one projection with `withColumn`'s placement: a passthrough column
+    // named like a field is replaced where it stands, the other fields
+    // follow the passthrough columns in order, and `parsed` is dropped
+    def field(c: String) = fields.find(_._1.equalsIgnoreCase(c))
+    val passthrough = df.columns.toSeq.filterNot(_.equalsIgnoreCase("parsed")).map(c =>
+      field(c).fold(col(s"`${c.replace("`", "``")}`"))(f => f._2.as(f._1)))
+    val added = fields.filterNot(f => df.columns.exists(_.equalsIgnoreCase(f._1)))
+    df.select(passthrough ++ added.map(f => f._2.as(f._1)): _*)
+  }
 
   /** Synthesizes a deterministic Debezium envelope per event row (the
     * sandbox has no Kafka; this stands in for the bronze stream's

@@ -40,7 +40,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *    latest, -2 = earliest — the Kafka option contract), honored by both
   *    the streaming AND the batch read path; `maxOffsetsPerTrigger` bounds
   *    each micro-batch via the engine's admission-control API
-  *    (SupportsAdmissionControl), lag-proportional across partitions;
+  *    (SupportsAdmissionControl), lag-proportional across partitions,
+  *    also under `Trigger.AvailableNow` (SupportsTriggerAvailableNow: the
+  *    drain stops at the end offsets the query started with);
   *  - micro-batch planning reads each partition's segment files for
   *    exactly [start, end) — replaying a checkpoint re-delivers exactly
   *    the same rows, so exactly-once composes with foreachBatch sinks
@@ -280,8 +282,15 @@ object KafkaLogOffset {
 class KafkaLogMicroBatchStream(root: String, topic: String, starting: String,
     maxOffsetsPerTrigger: Option[Long] = None)
     extends MicroBatchStream
-    with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl {
+    with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
   import org.apache.spark.sql.connector.read.streaming.{ReadLimit, ReadMaxRows}
+
+  // Trigger.AvailableNow: the end offsets when the query started. Batches
+  // stop there although records keep arriving, and each is still capped
+  // by maxOffsetsPerTrigger
+  @volatile private var availableNow: Option[Map[Int, Long]] = None
+
+  override def prepareForTriggerAvailableNow(): Unit = availableNow = Some(endOffsets)
 
   private def endOffsets: Map[Int, Long] = {
     val n = EmbeddedTopicLog.partitionCount(root, topic)
@@ -305,7 +314,7 @@ class KafkaLogMicroBatchStream(root: String, topic: String, starting: String,
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val s = start.asInstanceOf[KafkaLogOffset].offsets
-    val latest = endOffsets
+    val latest = availableNow.getOrElse(endOffsets)
     limit match {
       case mr: ReadMaxRows => KafkaLogOffset(admit(s, latest, mr.maxRows))
       case _               => KafkaLogOffset(latest)

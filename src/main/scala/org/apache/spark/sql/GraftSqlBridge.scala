@@ -106,4 +106,24 @@ object GraftSqlBridge {
       new ParquetFileFormat, Map.empty)(spark)
     ofRows(spark, LogicalRelation(relation))
   }
+
+  /** `rows` moved into `n` partitions by one shuffle, each row to the
+    * partition its key names: Spark's own row exchange (`UnsafeRowSerializer`
+    * with partition-id passthrough) without the planner, so a job built on
+    * it stays one job whatever the adaptive-execution setting (an adaptive
+    * plan submits every shuffle as a job of its own). The rows must be
+    * `UnsafeRow`s of `numFields` fields; the reduce side hands out one
+    * reused row per partition.
+    */
+  def shuffleByPartitionId(rows: org.apache.spark.rdd.RDD[(Int, catalyst.InternalRow)],
+      n: Int, numFields: Int): org.apache.spark.rdd.RDD[catalyst.InternalRow] =
+    new org.apache.spark.rdd.ShuffledRDD[Int, catalyst.InternalRow, catalyst.InternalRow](
+      rows, new org.apache.spark.PartitionIdPassthrough(n))
+      .setSerializer(new execution.UnsafeRowSerializer(numFields))
+      .map(_._2)
+
+  /** A DataFrame over internal rows of `schema`, planned as a plain RDD scan. */
+  def rowsToFrame(spark: SparkSession, rows: org.apache.spark.rdd.RDD[catalyst.InternalRow],
+      schema: types.StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
 }

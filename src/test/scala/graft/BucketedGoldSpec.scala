@@ -1,14 +1,17 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 import graft.streaming.{BucketedGold, CdcStreams}
 
 /** The log-structured bucketed gold target (round-9 latency-floor fix):
-  * commit = O(batch) delta append, query = merge-on-read SCD1, compaction
-  * folds deltas into touched buckets only. Pins equivalence with the
-  * full-rewrite `applyCdcBatch`, replay idempotence, tombstone semantics'
-  * independence from compaction timing, and the pruned-bucket rewrite.
+  * commit = O(batch) delta append plus one `_log` version, query =
+  * merge-on-read SCD1 over one version's files, compaction = one job into a
+  * data-sized base. Pins equivalence with the full-rewrite `applyCdcBatch`,
+  * replay idempotence, tombstone semantics' independence from compaction
+  * timing, the pruned-bucket rewrite, the job counts, pinned reads under
+  * compaction and GC, and concurrent commits.
   */
 class BucketedGoldSpec extends SparkSpec {
 
@@ -59,14 +62,15 @@ class BucketedGoldSpec extends SparkSpec {
     assert(at8.size === at40.size, s"8 deltas: $at8; 40 deltas: $at40")
   }
 
-  test("a compacted 64-bucket base plus deltas reads with no listing or schema-inference job") {
+  test("a compacted base plus deltas reads with no listing or schema-inference job") {
     val root = Files.createTempDirectory("bg-flat-base").toString
     val gold = s"$root/gold"
     val seed = (0L until 600L).map(i => (i, "INSERT", i, i, i * 0.5))
     BucketedGold.appendBatch(spark, batchDF(seed: _*), gold, 0L, compactEvery = 1000)
-    BucketedGold.compact(spark, gold) // the default 64 buckets
-    val buckets = new java.io.File(s"$gold/base").listFiles().count(_.getName.startsWith("bucket="))
-    assert(buckets === 64)
+    BucketedGold.compact(spark, gold)
+    // 600 rows fit one bucket: the base is one file
+    val base = BucketedGold.snapshot(spark, gold)
+    assert(base.buckets === 1 && base.base.map(_.rows) === Seq(600L), base)
     val later = (1 to 3).flatMap { i =>
       val b = keyBatch(i).map { case (k, op, ts, id, v) => (k, op, ts + 1000, id + 1000, v) }
       BucketedGold.appendBatch(spark, batchDF(b: _*), gold, i.toLong, compactEvery = 1000)
@@ -106,10 +110,10 @@ class BucketedGoldSpec extends SparkSpec {
       val b1 = batchDF((1L, "INSERT", 10L, 1L, 1.0), (2L, "INSERT", 11L, 2L, 2.0))
       val b2 = batchDF((1L, "DELETE", 20L, 3L, 0.0), (3L, "INSERT", 21L, 4L, 3.0))
       Seq(b1, b2).zipWithIndex.foreach { case (b, i) =>
-        BucketedGold.appendBatch(spark, b, s"$root/gold", i.toLong, numBuckets = 8)
+        BucketedGold.appendBatch(spark, b, s"$root/gold", i.toLong)
         CdcStreams.applyCdcBatch(spark, b, s"$root/flat")
       }
-      BucketedGold.compact(spark, s"$root/gold", numBuckets = 8)
+      BucketedGold.compact(spark, s"$root/gold")
       val want = Set((2L, "INSERT", 11L, 2L, 2.0), (3L, "INSERT", 21L, 4L, 3.0))
       assert(stateSet(BucketedGold.read(spark, s"$root/gold")) === want)
       assert(stateSet(spark.read.parquet(s"$root/flat")
@@ -129,7 +133,7 @@ class BucketedGoldSpec extends SparkSpec {
       (4L, "INSERT", 22L, 6L, 4.0))
     val b3 = batchDF((3L, "UPDATE", 30L, 7L, 3.5), (4L, "UPDATE", 31L, 8L, 4.5))
     Seq(b1, b2, b3).zipWithIndex.foreach { case (b, i) =>
-      BucketedGold.appendBatch(spark, b, s"$root/gold", i.toLong, numBuckets = 8)
+      BucketedGold.appendBatch(spark, b, s"$root/gold", i.toLong)
       CdcStreams.applyCdcBatch(spark, b, flat)
     }
     val bucketed = stateSet(BucketedGold.read(spark, s"$root/gold"))
@@ -203,23 +207,27 @@ class BucketedGoldSpec extends SparkSpec {
       BucketedGold.appendBatch(spark, batchDF(
         (i.toLong % 3, op, 100L + i, i.toLong, i * 1.0),
         (100L + i, "INSERT", 100L + i, 1000L + i, i * 2.0)),
-        gold, i.toLong, numBuckets = 8, compactEvery = 1000)
+        gold, i.toLong, compactEvery = 1000)
     }
     val before = stateSet(BucketedGold.read(spark, gold))
-    BucketedGold.compact(spark, gold, numBuckets = 8)
-    val after = stateSet(BucketedGold.read(spark, gold))
-    assert(before === after)
-    // folded deltas survive ONE grace cycle (so concurrent readers'
-    // listings stay valid), then the next compaction retires them
+    val folded = BucketedGold.snapshot(spark, gold).deltas.flatMap(_.files.map(_.path))
+    BucketedGold.compact(spark, gold)
+    // a read right after the compaction opens only the new version's files
+    val after = BucketedGold.read(spark, gold)
+    val opened = after.inputFiles.map(p => p.substring(p.indexOf("/gold/") + 6)).toSet
+    val latest = BucketedGold.snapshot(spark, gold)
+    assert(latest.deltas.isEmpty && opened === latest.base.map(_.path).toSet, opened)
+    assert(stateSet(after) === before)
+    // the folded deltas stay on disk through retention, for pinned readers
     val deltaDir = new java.io.File(s"$gold/delta")
-    assert(deltaDir.listFiles().exists(_.isDirectory),
-      "folded deltas should persist through the grace cycle")
-    assert(stateSet(BucketedGold.read(spark, gold)) === before) // dedup'd
-    BucketedGold.compact(spark, gold, numBuckets = 8)
+    assert(folded.forall(p => new java.io.File(s"$gold/$p").exists()))
+    // past retention (0 here) GC deletes them and the superseded versions
+    BucketedGold.gc(spark, gold, retentionMs = 0L)
     assert(!deltaDir.exists() || deltaDir.listFiles().forall(!_.isDirectory))
+    assert(new java.io.File(s"$gold/_log").list().filterNot(_.startsWith(".")).toSeq ===
+      Seq(s"v${latest.version}.json"))
     assert(stateSet(BucketedGold.read(spark, gold)) === before)
-    assert(new java.io.File(s"$gold/base").listFiles()
-      .exists(_.getName.startsWith("bucket=")))
+    assert(latest.base.forall(b => new java.io.File(s"$gold/${b.path}").exists()))
   }
 
   test("replayed batch id replaces its own delta — exactly-once under replay") {
@@ -230,12 +238,12 @@ class BucketedGoldSpec extends SparkSpec {
     // crash-and-replay: the SAME batch commits again under the same id
     BucketedGold.appendBatch(spark, b, gold, 0L)
     assert(BucketedGold.read(spark, gold).count() === 1)
-    // and a crash between compaction's base commit and delta retirement
-    // re-merges already-folded rows: simulate by compacting twice with a
-    // stale delta copy re-injected
-    BucketedGold.compact(spark, gold, numBuckets = 8)
-    BucketedGold.appendBatch(spark, b, gold, 0L) // the "unretired" delta
-    BucketedGold.compact(spark, gold, numBuckets = 8)
+    assert(BucketedGold.snapshot(spark, gold).deltas.size === 1)
+    // a replay that lands after its delta was folded re-merges rows the
+    // base already holds: a latest-per-key no-op
+    BucketedGold.compact(spark, gold)
+    BucketedGold.appendBatch(spark, b, gold, 0L)
+    BucketedGold.compact(spark, gold)
     assert(stateSet(BucketedGold.read(spark, gold)) ===
       Set((7L, "INSERT", 10L, 1L, 7.0)))
   }
@@ -251,7 +259,7 @@ class BucketedGoldSpec extends SparkSpec {
       BucketedGold.appendBatch(spark, batchDF(
         (5L, "INSERT", 10L, 1L, 5.0), (6L, "INSERT", 11L, 2L, 6.0)), gold, 0L)
       BucketedGold.appendBatch(spark, batchDF((5L, "DELETE", 100L, 3L, 0.0)), gold, 1L)
-      if (compactBetween) BucketedGold.compact(spark, gold, numBuckets = 8)
+      if (compactBetween) BucketedGold.compact(spark, gold)
       BucketedGold.appendBatch(spark, batchDF((5L, "UPDATE", 50L, 4L, 5.5)), gold, 2L)
       val users = BucketedGold.read(spark, gold).collect().map(_.getLong(0)).toSet
       assert(users === Set(6L), s"compactBetween=$compactBetween")
@@ -262,14 +270,12 @@ class BucketedGoldSpec extends SparkSpec {
     val root = Files.createTempDirectory("bg-gc").toString
     val gold = s"$root/gold"
     BucketedGold.appendBatch(spark, batchDF((9L, "DELETE", 100L, 1L, 0.0)), gold, 0L)
-    BucketedGold.compact(spark, gold, numBuckets = 8,
-      gcTombstonesBeforeUs = Some(200L))
-    // tombstone physically gone: state empty, and the emptied bucket dir
-    // was deleted (dynamic overwrite alone would have left it stale)
+    BucketedGold.compact(spark, gold, gcTombstonesBeforeUs = Some(200L))
+    // tombstone physically gone: state empty, and the version lists no
+    // base file for the emptied bucket
     assert(BucketedGold.read(spark, gold).count() === 0)
-    val baseDir = new java.io.File(s"$gold/base")
-    assert(!baseDir.exists() ||
-      !baseDir.listFiles().exists(_.getName.startsWith("bucket=")))
+    val s = BucketedGold.snapshot(spark, gold)
+    assert(s.base.isEmpty && s.deltas.isEmpty, s)
   }
 
   test("empty micro-batch skips job-free and commits nothing") {
@@ -292,26 +298,22 @@ class BucketedGoldSpec extends SparkSpec {
     // on the write itself, still no commit
     assert(!BucketedGold.appendBatch(spark,
       batchDF((1L, "INSERT", 1L, 1L, 1.0)).filter("user_id < 0"), gold, 2L))
-    assert(deltaDir.listFiles().map(_.getName).toSet === deltasBefore)
-    assert(!new java.io.File(root).listFiles()
-      .exists(_.getName.startsWith(".scratch")), "no scratch left behind")
+    assert(deltaDir.listFiles().map(_.getName).toSet === deltasBefore,
+      "no delta dir left behind")
+    assert(BucketedGold.snapshot(spark, gold).version === 0L, "no version committed")
   }
 
   test("a failed async compaction surfaces from awaitCompactions") {
     val root = Files.createTempDirectory("bg-async-fail").toString
     val gold = s"$root/gold"
     BucketedGold.appendBatch(spark, batchDF((1L, "INSERT", 1L, 1L, 1.0)), gold, 0L,
-      numBuckets = 8, compactEvery = 1000)
-    // a corrupt part file in every base bucket: the compaction's base read
-    // fails whichever buckets its partition filter keeps
-    (0 until 8).foreach { b =>
-      val bucket = new java.io.File(s"$gold/base/bucket=$b")
-      bucket.mkdirs()
-      Files.write(new java.io.File(bucket, "part-00000-corrupt.parquet").toPath,
-        "not parquet".getBytes("UTF-8"))
+      compactEvery = 1000)
+    // the first delta's part file corrupted: the compaction's read fails
+    BucketedGold.snapshot(spark, gold).deltas.flatMap(_.files).foreach { f =>
+      Files.write(new java.io.File(s"$gold/${f.path}").toPath, "not parquet".getBytes("UTF-8"))
     }
     assert(BucketedGold.appendBatch(spark, batchDF((2L, "INSERT", 2L, 2L, 2.0)), gold, 1L,
-      numBuckets = 8, compactEvery = 1, compactAsync = true),
+      compactEvery = 1, compactAsync = true),
       "the delta commit itself does not wait on the compaction")
     intercept[Exception](BucketedGold.awaitCompactions())
     // reported once: the in-flight map was cleared
@@ -332,7 +334,7 @@ class BucketedGoldSpec extends SparkSpec {
       val committer = new Thread(() => {
         spark.sparkContext.setJobGroup("bg-committer", "commits a stopped query cancels")
         (0 until 3).foreach(i => BucketedGold.appendBatch(spark, batchDF(keyBatch(i): _*),
-          gold, i.toLong, numBuckets = 8, compactEvery = 3, compactAsync = true))
+          gold, i.toLong, compactEvery = 3, compactAsync = true))
       })
       committer.start(); committer.join()
       BucketedGold.awaitCompactions()
@@ -346,53 +348,152 @@ class BucketedGoldSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  test("compact sweeps stale foreign-app scratch dirs, keeps own and fresh ones") {
-    val root = Files.createTempDirectory("bg-scratch").toString
+  test("gc sweeps old files no version lists and keeps fresh ones") {
+    val root = Files.createTempDirectory("bg-sweep").toString
     val gold = s"$root/gold"
     BucketedGold.appendBatch(spark, batchDF((1L, "INSERT", 1L, 1L, 1.0)), gold, 0L)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val appScr = sanitizedAppScratch(gold, 99L) // own app, crash leftover
-    val foreignOld = new org.apache.hadoop.fs.Path(s"$gold/.scratch-deadapp-b7")
-    val legacyOld = new org.apache.hadoop.fs.Path(s"$gold/.scratch-b3")
-    val foreignFresh = new org.apache.hadoop.fs.Path(s"$gold/.scratch-liveapp-b1")
-    Seq(appScr, foreignOld, legacyOld, foreignFresh).foreach(fs.mkdirs(_))
-    val old = System.currentTimeMillis() - 16L * 60 * 1000
-    Seq(appScr, foreignOld, legacyOld).foreach(fs.setTimes(_, old, -1))
-    BucketedGold.compact(spark, gold, numBuckets = 8)
-    assert(!fs.exists(foreignOld), "stale foreign scratch must be swept")
-    assert(!fs.exists(legacyOld), "stale legacy-name scratch must be swept")
-    assert(fs.exists(foreignFresh), "fresh foreign scratch must survive (grace)")
-    assert(fs.exists(appScr), "own-app scratch is owned by appendBatch, not swept")
+    val listed = BucketedGold.snapshot(spark, gold).deltas.flatMap(_.files.map(_.path))
+    // a crashed append's delta and a legacy scratch dir, both older than
+    // retention, and an in-flight write younger than it
+    def orphan(dir: String): java.io.File = {
+      val d = new java.io.File(s"$gold/$dir"); d.mkdirs()
+      val part = new java.io.File(d, "part-00000-x.parquet")
+      Files.write(part.toPath, "partial".getBytes("UTF-8")); part
+    }
+    val old = System.currentTimeMillis() - BucketedGold.RetentionMs - 60000L
+    val crashed = orphan("delta/bdeadapp-000000000007-00000000")
+    val legacy = orphan(".scratch-b3")
+    val inFlight = orphan("delta/bliveapp-000000000001-00000000")
+    Seq(crashed, legacy).foreach { f => f.setLastModified(old); f.getParentFile.setLastModified(old) }
+    // a committed delta as old as the orphans is still listed: it stays
+    listed.foreach(p => new java.io.File(s"$gold/$p").setLastModified(old))
+    BucketedGold.gc(spark, gold)
+    assert(!crashed.getParentFile.exists(), "an old unlisted delta dir must be swept")
+    assert(!legacy.getParentFile.exists(), "an old legacy scratch dir must be swept")
+    assert(inFlight.exists(), "a write younger than retention must survive")
+    assert(listed.forall(p => new java.io.File(s"$gold/$p").exists()))
+    assert(stateSet(BucketedGold.read(spark, gold)) === Set((1L, "INSERT", 1L, 1L, 1.0)))
   }
-
-  private def sanitizedAppScratch(gold: String, batchId: Long) =
-    new org.apache.hadoop.fs.Path(s"$gold/.scratch-" +
-      spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "") +
-      s"-b$batchId")
 
   test("compaction rewrites only the buckets the deltas touch") {
     val root = Files.createTempDirectory("bg-prune").toString
     val gold = s"$root/gold"
-    // seed many keys across buckets, compact to a full base
-    val seed = (0L until 64L).map(i => (i, "INSERT", 10L + i, i, i * 1.0))
-    BucketedGold.appendBatch(spark, batchDF(seed: _*), gold, 0L, numBuckets = 8)
-    BucketedGold.compact(spark, gold, numBuckets = 8)
-    def baseFiles(): Map[String, Set[String]] =
-      new java.io.File(s"$gold/base").listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("bucket="))
-        .map(d => d.getName -> d.listFiles().map(_.getName)
-          .filter(_.endsWith(".parquet")).toSet).toMap
+    // seed past 2 * RowsPerBucket rows so the base spans 4 buckets
+    val keys = 2 * BucketedGold.RowsPerBucket + 1
+    val seed = spark.range(keys).selectExpr("id AS user_id", "'INSERT' AS operation",
+      "10 + id AS ts_us", "id AS event_id", "id * 1.0 AS value")
+    BucketedGold.appendBatch(spark, seed, gold, 0L)
+    BucketedGold.compact(spark, gold)
+    def baseFiles(): Map[Int, String] =
+      BucketedGold.snapshot(spark, gold).base.map(b => b.bucket -> b.path).toMap
     val before = baseFiles()
-    assert(before.size > 1, "seed should span several buckets")
-    // one-key delta -> exactly one touched bucket
-    BucketedGold.appendBatch(spark, batchDF((3L, "UPDATE", 999L, 999L, 3.5)),
-      gold, 1L, numBuckets = 8)
-    BucketedGold.compact(spark, gold, numBuckets = 8)
+    assert(before.size === 4, s"$keys rows should span 4 buckets: $before")
+    // one-key delta -> exactly one touched bucket, in at most two jobs
+    BucketedGold.appendBatch(spark, batchDF((3L, "UPDATE", 999L, 999L, 3.5)), gold, 1L)
+    val (_, jobs) = jobsOf(BucketedGold.compact(spark, gold))
+    assert(jobs.size <= 2, s"a compaction onto a base ran $jobs")
     val after = baseFiles()
     val changed = after.keySet.filter(k => before.get(k) != after.get(k))
     assert(changed.size === 1, s"expected 1 rewritten bucket, got $changed")
     assert(stateSet(BucketedGold.read(spark, gold))
       .contains((3L, "UPDATE", 999L, 999L, 3.5)))
+    assert(BucketedGold.read(spark, gold).count() === keys)
+  }
+
+  test("an append runs one job, a compaction with no base one, and building a read none") {
+    val gold = Files.createTempDirectory("bg-jobs").toString + "/gold"
+    val (_, append) = jobsOf(BucketedGold.appendBatch(spark, batchDF(keyBatch(0): _*), gold, 0L,
+      compactEvery = 1000))
+    assert(append.size === 1, s"append: $append")
+    BucketedGold.appendBatch(spark, batchDF(keyBatch(1): _*), gold, 1L, compactEvery = 1000)
+    val (_, compact) = jobsOf(BucketedGold.compact(spark, gold))
+    assert(compact.size === 1, s"compaction with no base: $compact")
+    val (df, built) = jobsOf(BucketedGold.read(spark, gold))
+    assert(built.isEmpty, s"building the read: $built")
+    assert(stateSet(df) === expectedState((0 until 2).flatMap(keyBatch)))
+  }
+
+  test("a reader pinned at version v gets the same answer after two compactions and a GC") {
+    val gold = Files.createTempDirectory("bg-pinned").toString + "/gold"
+    (0 until 3).foreach(i => BucketedGold.appendBatch(spark, batchDF(keyBatch(i): _*), gold,
+      i.toLong, compactEvery = 1000))
+    val pinned = BucketedGold.read(spark, gold)
+    val want = expectedState((0 until 3).flatMap(keyBatch))
+    BucketedGold.compact(spark, gold)
+    (3 until 5).foreach(i => BucketedGold.appendBatch(spark, batchDF(keyBatch(i): _*), gold,
+      i.toLong, compactEvery = 1000))
+    BucketedGold.compact(spark, gold)
+    BucketedGold.gc(spark, gold)
+    assert(stateSet(pinned) === want)
+    assert(stateSet(BucketedGold.read(spark, gold)) === expectedState((0 until 5).flatMap(keyBatch)))
+  }
+
+  test("a second application on the same root after a compaction reads the same state and opens no folded delta") {
+    val gold = Files.createTempDirectory("bg-second-app").toString + "/gold"
+    (0 until 3).foreach(i => BucketedGold.appendBatch(spark, batchDF(keyBatch(i): _*), gold,
+      i.toLong, compactEvery = 1000))
+    val folded = BucketedGold.snapshot(spark, gold).deltas.flatMap(_.files.map(_.path))
+    BucketedGold.compact(spark, gold)
+    val first = stateSet(BucketedGold.read(spark, gold))
+    // nothing of the first application's compaction lives in this JVM: the
+    // second one starts from the log alone, with colliding batch ids
+    val b = keyBatch(7)
+    BucketedGold.commitDelta(spark, batchDF(b: _*), gold, "secondapp", 0L, compactEvery = 1000,
+      compactAsync = false)
+    val read = BucketedGold.read(spark, gold)
+    val opened = read.inputFiles.map(p => p.substring(p.indexOf("/gold/") + 6)).toSet
+    assert(folded.nonEmpty && opened.intersect(folded.toSet).isEmpty, opened)
+    assert(stateSet(read) === expectedState((0 until 3).flatMap(keyBatch) ++ b))
+    assert(first === expectedState((0 until 3).flatMap(keyBatch)))
+    assert(BucketedGold.snapshot(spark, gold).deltas.map(d => d.app -> d.batch) ===
+      Seq("secondapp" -> 0L))
+  }
+
+  test("a concurrent append and async compaction both commit") {
+    val gold = Files.createTempDirectory("bg-concurrent").toString + "/gold"
+    val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long, Long, Double)]
+    def append(i: Int, async: Boolean): Unit = {
+      BucketedGold.appendBatch(spark, batchDF(keyBatch(i): _*), gold, i.toLong,
+        compactEvery = if (async) 4 else 1000, compactAsync = async)
+      rows ++= keyBatch(i)
+    }
+    (0 until 3).foreach(append(_, async = false))
+    append(3, async = true) // the fourth delta starts an async compaction
+    var i = 4
+    while (BucketedGold.compacting(gold) || i == 4) { append(i, async = false); i += 1 }
+    BucketedGold.awaitCompactions()
+    // the compaction committed, and the appends that landed after the
+    // version it folded are still live beside its base
+    val last = BucketedGold.snapshot(spark, gold)
+    assert(last.base.nonEmpty && last.deltas.nonEmpty &&
+      last.deltas.forall(d => d.batch >= 4 && d.batch < i), last.deltas.map(_.batch))
+    assert(stateSet(BucketedGold.read(spark, gold)) === expectedState(rows.toSeq))
+  }
+
+  test("gold jobs carry their graft.phase label, on the async compaction thread too") {
+    val gold = Files.createTempDirectory("bg-phase").toString + "/gold"
+    val phases = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        phases.add(Option(e.properties).flatMap(p => Option(p.getProperty(Phase.Key))).getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(Phase.Key, "outer")
+    try {
+      (0 until 2).foreach(i => BucketedGold.appendBatch(spark, batchDF(keyBatch(i): _*), gold,
+        i.toLong, compactEvery = 2, compactAsync = true))
+      assert(sc.getLocalProperty(Phase.Key) === "outer", "the caller's label was not restored")
+      BucketedGold.awaitCompactions()
+      val deadline = System.currentTimeMillis() + 10000
+      while (!phases.contains("gold.compact") && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+      assert(phases.asScala.count(_ == "gold.append") === 2, phases)
+      assert(phases.contains("gold.compact"), phases)
+      assert(BucketedGold.snapshot(spark, gold).base.nonEmpty)
+    } finally {
+      sc.setLocalProperty(Phase.Key, null)
+      sc.removeSparkListener(listener)
+    }
   }
 }

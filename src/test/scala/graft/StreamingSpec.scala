@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
@@ -947,6 +948,45 @@ class StreamingSpec extends SparkSpec {
     midRows.foreach { case (v, p, off) => assert(produced(v) === ((p, off))) }
   }
 
+  test("kafkalog: Trigger.AvailableNow drains the pre-start backlog in maxOffsetsPerTrigger batches") {
+    import graft.sources.EmbeddedTopicLog
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val root = tmpDir("kafkalog-avnow")
+    val (topic, n, cap) = ("avnow.topic", 400, 60)
+    EmbeddedTopicLog.produce(root, topic, (0 until n).map(i => (s"k${i % 23}", s"v$i")), 4)
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("avnow", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = warnings.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = org.apache.logging.log4j.LogManager.getContext(false)
+      .asInstanceOf[LoggerContext].getRootLogger
+    logger.addAppender(appender)
+    val batches = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val q = spark.readStream.format("kafkalog")
+      .option("path", root).option("topic", topic)
+      .option("maxOffsetsPerTrigger", cap.toString)
+      .load()
+      .writeStream
+      .option("checkpointLocation", s"$root-ck")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+        // records keep arriving after the query started
+        if (id == 0L) EmbeddedTopicLog.produce(root, topic,
+          (0 until 100).map(i => (s"k$i", s"late$i")), 4)
+        batches.add(b.count()); ()
+      }
+      .start()
+    try assert(q.awaitTermination(120000), "an AvailableNow query did not stop by itself")
+    finally { q.stop(); logger.removeAppender(appender) }
+    val sizes = batches.asScala.toSeq.filter(_ > 0)
+    assert(sizes.size === (n + cap - 1) / cap && sizes.forall(_ <= cap), sizes)
+    assert(sizes.sum === n, s"read ${sizes.sum} of the $n records there at start")
+    assert(!warnings.asScala.exists(_.contains("Falling back to single batch")), warnings)
+  }
+
   test("kafkalog: a batch plans one task per RecordsPerTask records, at most one per core") {
     import graft.sources.{EmbeddedTopicLog, KafkaLogMicroBatchStream, KafkaLogPlanner}
     val r = KafkaLogPlanner.RecordsPerTask.toInt
@@ -1196,16 +1236,16 @@ class StreamingSpec extends SparkSpec {
     assert(goldState() === expectedState(),
       "gold state diverged across kill/restart")
     // phase 4: the bucketed gold's crash windows. (a) a crash INSIDE a
-    // delta commit leaves only a scratch dir — invisible to readers and
-    // harmless to the replay; (b) a crash between compaction's base
-    // commit and delta retirement leaves an already-folded delta behind —
-    // the re-merge must be a latest-per-key no-op.
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(gold + "/.scratch-b999"))
-    graft.streaming.BucketedGold.compact(spark, gold, numBuckets = 8)
+    // delta write leaves files no `_log` version lists — invisible to
+    // readers and harmless to the replay; (b) rows already folded into
+    // the base that come back as a delta (a replay landing after the
+    // fold) — the re-merge must be a latest-per-key no-op.
+    val crashed = new java.io.File(gold + "/delta/bcrashed-000000000999-00000000")
+    crashed.mkdirs()
+    Files.write(new java.io.File(crashed, "part-00000-x.parquet").toPath, "torn".getBytes("UTF-8"))
+    graft.streaming.BucketedGold.compact(spark, gold)
     val folded = goldState()
-    // re-inject the full folded state as a stale "unretired" delta
+    // re-inject the full folded state as a delta
     graft.streaming.BucketedGold.appendBatch(spark,
       graft.streaming.BucketedGold.read(spark, gold), gold, 998L)
     EmbeddedTopicLog.produce(logRoot, topic,
@@ -1214,7 +1254,7 @@ class StreamingSpec extends SparkSpec {
       maxPerTrigger = 700L)
     try q3.processAllAvailable() finally q3.stop()
     assert(goldState() === expectedState(),
-      "crash-window recovery diverged (scratch leftovers or stale delta)")
+      "crash-window recovery diverged (torn delta write or re-folded rows)")
     assert(folded.nonEmpty, "compaction folded an empty state — weak test")
   }
 }
