@@ -79,8 +79,8 @@ object BenchStream {
     }
 
   /** Silver projection: raw Kafka-contract rows → parsed envelope →
-    * the (user_id, operation, ts_us, event_id, value) frame
-    * [[CdcStreams.applyCdcBatch]] merges. Identity fields come out of
+    * the [[graft.streaming.BucketedGold.stateSchema]] frame the gold
+    * commit stores. Identity fields come out of
     * the captured image (after for upserts, before for deletes) — the
     * same second-level extraction `cdc_debezium_parse` pins against the
     * DuckDB oracle.

@@ -17,14 +17,13 @@ import scala.jdk.CollectionConverters._
 
 import graft.Phase
 
-/** Log-structured, key-bucketed SCD1 gold target — the latency-floor fix
-  * for the CDC apply path.
+/** Log-structured, key-bucketed SCD1 gold target: the commit every CDC
+  * apply path uses (`Medallion`, `CdcStreams.fileStreamPipeline`,
+  * `BenchStream`).
   *
-  * [[CdcStreams.applyCdcBatch]] commits a micro-batch by merging it
-  * against the FULL existing state and swapping the whole parquet table;
-  * at a 100K-key gold that swap costs ~600-700 ms per batch and is the
-  * measured end-to-end latency floor (BENCH_STREAM_LATENCY.json, round 8).
-  * The reference's gold is a Delta MERGE (unity_catalog_cdc_demo.py:
+  * A commit that merges a micro-batch against the full existing state and
+  * rewrites the table pays for the whole table on every batch. The
+  * reference's gold is a Delta MERGE (unity_catalog_cdc_demo.py:
   * 300-447) — and Delta itself never rewrites the table per commit: it
   * appends data files to a log of table versions and defers consolidation
   * (Armbrust et al., VLDB 2020). This object is that model on plain parquet:
@@ -64,12 +63,11 @@ import graft.Phase
   *    (its row count observed on that write; a zero-row batch commits
   *    nothing), then a version that adds the delta. No read of existing
   *    state, no shuffle, no rewrite: batch cost is O(batch), independent
-  *    of state size — this is what cuts the floor.
+  *    of state size.
   *  - '''Query''' ([[read]]) = merge-on-read over exactly one version's
-  *    files: latest-per-key over base ∪ deltas, tombstones drop. Identical
-  *    window to `applyCdcBatch` ((ts_us, event_id) desc), so the visible
-  *    state is the same SCD1 answer, assembled at read time. The files come
-  *    from the version with their sizes, so building the read lists
+  *    files: latest-per-key by (ts_us, event_id) desc over base ∪ deltas,
+  *    tombstones drop — the SCD1 answer, assembled at read time. The files
+  *    come from the version with their sizes, so building the read lists
   *    nothing and runs no job ([[GraftSqlBridge.parquetScan]] with the
   *    fixed [[stateSchema]]), and a folded delta is never opened again. A
   *    read is pinned to its version for as long as retention keeps that
@@ -108,9 +106,9 @@ import graft.Phase
   */
 object BucketedGold {
 
-  /** The normalized CDC state this target stores — the same frame
-    * [[CdcStreams.applyCdcBatch]] merges. Every delta is written with these
-    * types, so reads take the schema from here instead of inferring it.
+  /** The normalized CDC state this target stores. Every delta is written
+    * with these types, so reads take the schema from here instead of
+    * inferring it.
     */
   val stateSchema: StructType = StructType(Seq(
     StructField("user_id", LongType), StructField("operation", StringType),
@@ -470,9 +468,11 @@ object BucketedGold {
   }
 
   /** SCD1 state at the latest version: latest-per-key over that version's
-    * base ∪ deltas, DELETEs drop — the same answer `applyCdcBatch` stores
-    * physically. The frame is pinned to the version's files: compactions
-    * and GC inside [[RetentionMs]] do not change what it returns.
+    * base ∪ deltas, DELETEs drop. Read a root only through here: its data
+    * directories hold raw deltas and tombstones, so a bare parquet read of
+    * them is not the table's state. The frame is pinned to the version's
+    * files: compactions and GC inside [[RetentionMs]] do not change what it
+    * returns.
     */
   def read(spark: SparkSession, root: String): DataFrame = {
     val s = snapshot(spark, root)

@@ -21,8 +21,7 @@ import graft.Tables
   *
   * Scale: the stateful ops partition by user_id (state store sharded by
   * key); windowed aggs are watermark-bounded so state is evicted; the
-  * foreachBatch upsert shuffles only the micro-batch (small) against the
-  * target's matching partitions.
+  * foreachBatch commit writes only the micro-batch ([[BucketedGold]]).
   */
 object CdcStreams {
 
@@ -818,58 +817,6 @@ object CdcStreams {
     catch { case e: Exception if isMissingTarget(e) => None }
   }
 
-  /** Batch MERGE used from foreachBatch: apply a micro-batch of CDC events
-    * onto a parquet target — latest-per-key wins, DELETE drops the key
-    * (reference: unity_catalog_cdc_demo.py:300-447 does the same with Delta
-    * MERGE/DELETE; parquet-overwrite stands in for the table format).
-    */
-  def applyCdcBatch(spark: SparkSession, batch: DataFrame, targetPath: String): Unit = {
-    val incoming = batch.select("user_id", "operation", "ts_us", "event_id", "value")
-    val dst = new org.apache.hadoop.fs.Path(targetPath)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bakPath = targetPath + "_bak"
-    val bak = new org.apache.hadoop.fs.Path(bakPath)
-    // crash recovery: if a previous apply died between its two renames
-    // (dst already moved to _bak, staging not yet promoted), the pre-batch
-    // state lives ONLY in _bak — read it as the existing state so the
-    // checkpointed replay re-merges against the right base instead of an
-    // empty target (which would truncate gold to the batch's keys).
-    // The contract is ONE applier per target (foreachBatch is serial and
-    // the checkpointed replay runs alone) — but a misconfigured second
-    // applier completing BOTH renames plus the trailing _bak delete
-    // between our dst probe and bak probe would still slip past two
-    // probes, so the probe sequence is dst -> _bak -> dst again: after a
-    // swap completes, dst holds full state at every instant, so the
-    // second dst probe catches it. Only all-three-missing falls through
-    // to the first-batch empty base.
-    def tryRead(path: String): Option[DataFrame] = readIfExists(spark, path)
-      .map(_.select("user_id", "operation", "ts_us", "event_id", "value"))
-    val existing = tryRead(targetPath).orElse(tryRead(bakPath))
-      .orElse(tryRead(targetPath)).getOrElse(
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], incoming.schema))
-    val w = Window.partitionBy("user_id").orderBy(col("ts_us").desc, col("event_id").desc)
-    val merged = existing.unionByName(incoming)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1 && col("operation") =!= "DELETE")
-      .drop("rn")
-    // write-then-swap: parquet has no txn log, so stage to a temp dir,
-    // then retire the old state via RENAME (not delete) — at every point
-    // between the renames the pre-batch state survives in dst or _bak, so
-    // a kill anywhere in the swap is recoverable (BenchStream.recoveryMain
-    // exercises exactly this path; StreamingSpec pins the replay).
-    val tmp = targetPath + "_staging"
-    merged.write.mode("overwrite").parquet(tmp)
-    fs.delete(bak, true)
-    if (fs.exists(dst) && !fs.rename(dst, bak))
-      throw new java.io.IOException(
-        s"CDC merge swap failed: could not retire $targetPath to $bakPath")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), dst))
-      throw new java.io.IOException(
-        s"CDC merge swap failed: could not rename $tmp to $targetPath")
-    fs.delete(bak, true)
-  }
-
   /** Multi-table MERGE in ONE job: apply a micro-batch of UNIFIED-envelope
     * events ([[heterogeneousUnion]] shape: src_table, entity_key, seq,
     * operation, payload) onto a src_table-partitioned parquet target.
@@ -884,11 +831,7 @@ object CdcStreams {
     * write, parallelism from partitioning instead of driver threads.
     * Idempotent under batch replay (same merge result → same partition
     * contents), so exactly-once composes with a checkpointed foreachBatch.
-    *
-    * Edge (documented, inherent to dynamic overwrite): a table whose keys
-    * were ALL deleted in a batch emits no rows, so its stale partition
-    * survives; route full-table truncations through an explicit partition
-    * delete.
+    * A touched table left with no rows has its partition deleted.
     */
   def applyCdcBatchMultiTable(spark: SparkSession, batch: DataFrame,
       targetRoot: String): Unit = {
@@ -911,11 +854,23 @@ object CdcStreams {
     // pin the merge result before writing: the overwrite must not read its
     // own destination (Spark rejects self-overwriting scans), and the
     // truncated lineage is what makes replay idempotent mid-write
+    val written = new org.apache.spark.sql.Observation()
     merged.localCheckpoint()
+      .observe(written, collect_set(col("src_table")).as("tables"))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("src_table")
       .parquet(targetRoot)
+    // dynamic overwrite replaces only the partitions it writes, so a
+    // touched table the merge left empty still shows its old partition
+    val kept = written.get("tables").asInstanceOf[Seq[String]].toSet
+    val root = new org.apache.hadoop.fs.Path(targetRoot)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    affected.filterNot(kept).foreach { t =>
+      fs.delete(new org.apache.hadoop.fs.Path(root,
+        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+          .getPartitionPathString("src_table", t)), true)
+    }
   }
 
   /** Per-micro-batch pipeline metrics via StreamingQueryListener — the
@@ -993,8 +948,9 @@ object CdcStreams {
   }
 
   /** End-to-end file-source CDC pipeline: stream parquet drops from `inDir`,
-    * normalize, upsert into `targetPath` each micro-batch. Returns the
-    * started query (caller stops it).
+    * normalize, and commit each micro-batch to the [[BucketedGold]] root
+    * `targetPath` under the engine's batch id; read the state with
+    * [[BucketedGold.read]]. Returns the started query (caller stops it).
     */
   def fileStreamPipeline(spark: SparkSession, inDir: String, targetPath: String,
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
@@ -1002,8 +958,8 @@ object CdcStreams {
     normalize(raw).writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyCdcBatch(spark, batch, targetPath)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        BucketedGold.appendBatch(spark, batch, targetPath, batchId); ()
       }
       .start()
   }

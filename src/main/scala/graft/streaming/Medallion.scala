@@ -24,9 +24,9 @@ import graft.cdc.Debezium
   *  - DLQ/quarantine write `mode(overwrite)` into a per-batch_id
   *    directory — replaying a batch after a crash overwrites its own
   *    output instead of appending duplicates;
-  *  - the gold merge ([[CdcStreams.applyCdcBatch]]) is a write-then-swap
-  *    latest-per-key MERGE, idempotent under batch replay by
-  *    construction.
+  *  - gold commits through [[BucketedGold.appendBatch]] under the
+  *    foreachBatch `batchId`: a replayed batch replaces its own delta, and
+  *    [[BucketedGold.read]] returns the latest-per-key state.
   *
   * Pipeline health rides [[CdcStreams.MetricsListener]] (attach to the
   * session; zero data-plane cost) and the silver latency view
@@ -44,9 +44,9 @@ object Medallion {
     "has_key" -> ("coalesce(get_json_object(after_image, '$.user_id'), " +
       "get_json_object(before_image, '$.user_id')) IS NOT NULL"))
 
-  /** Gold projection: a clean silver envelope row → the merge-ready CDC
-    * frame [[CdcStreams.applyCdcBatch]] consumes (key from the after
-    * image, falling back to the before image for DELETEs).
+  /** Gold projection: a clean silver envelope row → a
+    * [[BucketedGold.stateSchema]] row (key from the after image, falling
+    * back to the before image for DELETEs).
     */
   def goldProjection(silver: DataFrame): DataFrame =
     silver.select(
@@ -71,7 +71,7 @@ object Medallion {
   final case class SilverQuality(batch_id: Long, n_parsed: Long,
       n_unknown_op: Long, n_missing_after: Long)
 
-  private val qualityLog =
+  private[graft] val qualityLog =
     new scala.collection.concurrent.TrieMap[(String, Long), SilverQuality]()
 
   def clearQuality(goldPath: String): Unit =
@@ -111,7 +111,7 @@ object Medallion {
       quarantine.withColumn("failed_rules", concat_ws(",", col("failed_expectations")))
         .drop("failed_expectations")
         .write.mode("overwrite").parquet(s"$quarantinePath/batch_id=$batchId")
-      CdcStreams.applyCdcBatch(spark, goldProjection(clean), goldPath)
+      BucketedGold.appendBatch(spark, goldProjection(clean), goldPath, batchId)
       // the quarantine/gold actions above flowed every silver row through
       // the observe node; get() returns the already-collected metrics
       val m = obs.get
@@ -148,35 +148,43 @@ object Medallion {
     * envelopes + planted corrupt lines), the full pipeline run to
     * completion in two micro-batches, and a per-layer row-count summary —
     * the "is every layer populated and consistent" view. Bounded input
-    * (1000 envelopes), so cost is scale-factor-independent.
+    * (1000 envelopes), so cost is scale-factor-independent. The counts
+    * are a local frame, so the run's temp root and its silver-quality
+    * entries are released before returning.
     */
   def medallionStats(spark: SparkSession, dir: String): DataFrame = {
     import java.nio.file.{Files, Paths}
-    val root = Files.createTempDirectory("medallion").toString
-    val bronzeDir = s"$root/bronze"
-    Files.createDirectories(Paths.get(bronzeDir))
+    import spark.implicits._
     val envelopes = Debezium.synthEnvelope(spark, dir)
       .filter(col("event_id") <= 1000)
       .select("cdc_event").collect().map(_.getString(0))
     val (fileA, fileB) = envelopes.splitAt(envelopes.length / 2)
-    Files.write(Paths.get(s"$bronzeDir/a.txt"),
-      (fileA :+ "corrupt line one" :+ "{\"op\": 17}").mkString("\n").getBytes)
-    Files.write(Paths.get(s"$bronzeDir/b.txt"),
-      (fileB :+ "corrupt line two").mkString("\n").getBytes)
-    // both files in ONE micro-batch: the demo reports layer counts; the
-    // multi-batch + kill/restart contract is MedallionSpec's job, and a
-    // second trigger would only re-pay the stream-machinery fixed cost
-    val q = pipeline(spark, bronzeDir, s"$root/gold", s"$root/dlq",
-      s"$root/quarantine", s"$root/ck", maxFilesPerTrigger = None,
-      queryName = s"medallion_stats_${java.util.UUID.randomUUID()}")
-    try { q.processAllAvailable() } finally q.stop()
-    import spark.implicits._
-    Seq(
-      ("bronze", envelopes.length + 3L),
-      ("dlq", layerCount(spark, s"$root/dlq")),
-      ("quarantine", layerCount(spark, s"$root/quarantine")),
-      ("gold", layerCount(spark, s"$root/gold")))
-      .toDF("layer", "n_rows")
+    val root = Files.createTempDirectory("medallion").toString
+    try {
+      val bronzeDir = s"$root/bronze"
+      Files.createDirectories(Paths.get(bronzeDir))
+      Files.write(Paths.get(s"$bronzeDir/a.txt"),
+        (fileA :+ "corrupt line one" :+ "{\"op\": 17}").mkString("\n").getBytes)
+      Files.write(Paths.get(s"$bronzeDir/b.txt"),
+        (fileB :+ "corrupt line two").mkString("\n").getBytes)
+      // both files in ONE micro-batch: the demo reports layer counts; the
+      // multi-batch + kill/restart contract is MedallionSpec's job, and a
+      // second trigger would only re-pay the stream-machinery fixed cost
+      val q = pipeline(spark, bronzeDir, s"$root/gold", s"$root/dlq",
+        s"$root/quarantine", s"$root/ck", maxFilesPerTrigger = None,
+        queryName = s"medallion_stats_${java.util.UUID.randomUUID()}")
+      try q.processAllAvailable() finally q.stop()
+      Seq(
+        ("bronze", envelopes.length + 3L),
+        ("dlq", layerCount(spark, s"$root/dlq")),
+        ("quarantine", layerCount(spark, s"$root/quarantine")),
+        ("gold", BucketedGold.read(spark, s"$root/gold").count()))
+        .toDF("layer", "n_rows")
+    } finally {
+      clearQuality(s"$root/gold")
+      val r = new org.apache.hadoop.fs.Path(root)
+      r.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(r, true)
+    }
   }
 
   /** Rows in one parquet layer. A layer directory the run never wrote

@@ -8,10 +8,10 @@ import graft.streaming.{BucketedGold, CdcStreams}
 /** The log-structured bucketed gold target (round-9 latency-floor fix):
   * commit = O(batch) delta append plus one `_log` version, query =
   * merge-on-read SCD1 over one version's files, compaction = one job into a
-  * data-sized base. Pins equivalence with the full-rewrite `applyCdcBatch`,
-  * replay idempotence, tombstone semantics' independence from compaction
-  * timing, the pruned-bucket rewrite, the job counts, pinned reads under
-  * compaction and GC, and concurrent commits.
+  * data-sized base. Pins equivalence with the directly computed SCD1 state
+  * ([[SparkSpec.scd1Reference]]), replay idempotence, tombstone semantics'
+  * independence from compaction timing, the pruned-bucket rewrite, the job
+  * counts, pinned reads under compaction and GC, and concurrent commits.
   */
 class BucketedGoldSpec extends SparkSpec {
 
@@ -111,22 +111,19 @@ class BucketedGoldSpec extends SparkSpec {
       val b2 = batchDF((1L, "DELETE", 20L, 3L, 0.0), (3L, "INSERT", 21L, 4L, 3.0))
       Seq(b1, b2).zipWithIndex.foreach { case (b, i) =>
         BucketedGold.appendBatch(spark, b, s"$root/gold", i.toLong)
-        CdcStreams.applyCdcBatch(spark, b, s"$root/flat")
       }
       BucketedGold.compact(spark, s"$root/gold")
       val want = Set((2L, "INSERT", 11L, 2L, 2.0), (3L, "INSERT", 21L, 4L, 3.0))
       assert(stateSet(BucketedGold.read(spark, s"$root/gold")) === want)
-      assert(stateSet(spark.read.parquet(s"$root/flat")
-        .select("user_id", "operation", "ts_us", "event_id", "value")) === want)
+      assert(stateSet(scd1Reference(b1.unionByName(b2))) === want)
     } finally saved match {
       case Some(v) => conf.set("fs.defaultFS", v)
       case None => conf.unset("fs.defaultFS")
     }
   }
 
-  test("append+read matches the full-rewrite applyCdcBatch state") {
+  test("append+read matches the directly computed SCD1 state") {
     val root = Files.createTempDirectory("bg-eq").toString
-    val flat = s"$root/flat"
     val b1 = batchDF((1L, "INSERT", 10L, 1L, 1.0), (2L, "INSERT", 11L, 2L, 2.0),
       (3L, "INSERT", 12L, 3L, 3.0))
     val b2 = batchDF((1L, "UPDATE", 20L, 4L, 1.5), (2L, "DELETE", 21L, 5L, 0.0),
@@ -134,12 +131,9 @@ class BucketedGoldSpec extends SparkSpec {
     val b3 = batchDF((3L, "UPDATE", 30L, 7L, 3.5), (4L, "UPDATE", 31L, 8L, 4.5))
     Seq(b1, b2, b3).zipWithIndex.foreach { case (b, i) =>
       BucketedGold.appendBatch(spark, b, s"$root/gold", i.toLong)
-      CdcStreams.applyCdcBatch(spark, b, flat)
     }
     val bucketed = stateSet(BucketedGold.read(spark, s"$root/gold"))
-    val rewrite = stateSet(spark.read.parquet(flat)
-      .select("user_id", "operation", "ts_us", "event_id", "value"))
-    assert(bucketed === rewrite)
+    assert(bucketed === stateSet(scd1Reference(b1.unionByName(b2).unionByName(b3))))
     assert(bucketed.map(_._1) === Set(1L, 3L, 4L)) // user 2 deleted
   }
 
@@ -159,7 +153,6 @@ class BucketedGoldSpec extends SparkSpec {
     try {
       // the commit registers the session's Observation listener
       BucketedGold.appendBatch(spark, batchDF((1L, "INSERT", 10L, 1L, 1.0)), s"$root/gold", 0L)
-      CdcStreams.applyCdcBatch(spark, batchDF((1L, "INSERT", 10L, 1L, 1.0)), s"$root/flat")
       CdcStreams.applyCdcBatchMultiTable(spark,
         Seq(("orders", "1", 1L, "INSERT", "{}")).toDF("src_table", "entity_key", "seq",
           "operation", "payload"), s"$root/mtm")
@@ -168,7 +161,8 @@ class BucketedGoldSpec extends SparkSpec {
       assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
     } finally spark.listenerManager.unregister(listener)
     assert(failed.isEmpty, s"failed queries posted: $failed")
-    assert(spark.read.parquet(s"$root/flat").count() === 1)
+    assert(stateSet(BucketedGold.read(spark, s"$root/gold")) ===
+      stateSet(scd1Reference(batchDF((1L, "INSERT", 10L, 1L, 1.0)))))
     assert(spark.read.parquet(s"$root/mtm").count() === 1)
   }
 

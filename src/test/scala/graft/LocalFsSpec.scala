@@ -193,10 +193,7 @@ class LocalFsSpec extends SparkSpec {
     // every event is read exactly once across the kill/restart
     assert(first === 1000L && second === 1000L, s"read $first then $second")
     val raw = spark.read.format("kafkalog").option("path", logRoot).option("topic", topic).load()
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("user_id").orderBy(col("ts_us").desc, col("event_id").desc)
-    val expected = BenchStream.silver(raw).withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1 && col("operation") =!= "DELETE")
+    val expected = scd1Reference(BenchStream.silver(raw))
       .select(BucketedGold.stateCols.map(col): _*).collect().map(_.toSeq).toSet
     val got = BucketedGold.read(spark, gold).collect().map(_.toSeq).toSet
     assert(got === expected)

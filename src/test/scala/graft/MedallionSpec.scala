@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
-import graft.streaming.{CdcStreams, Medallion}
+import graft.streaming.{BucketedGold, CdcStreams, Medallion}
 
 /** End-to-end medallion pipeline (SURVEY §2 #117): one checkpointed
   * bronze→silver→gold flow, killed and restarted mid-stream, with
@@ -48,7 +48,7 @@ class MedallionSpec extends SparkSpec {
         s"$root/quarantine", s"$root/ck", maxFilesPerTrigger = Some(1))
       try q1.processAllAvailable() finally q1.stop() // kill after batch 0
 
-      assert(spark.read.parquet(s"$root/gold").count() == 2)
+      assert(BucketedGold.read(spark, s"$root/gold").count() == 2)
 
       // ---- phase 2: new file while the pipeline is DOWN, then restart
       Files.write(Paths.get(s"$bronze/b.txt"), Seq(
@@ -62,7 +62,7 @@ class MedallionSpec extends SparkSpec {
       try q2.processAllAvailable() finally q2.stop()
 
       // gold: latest state, DELETE applied, no duplicates
-      val gold = spark.read.parquet(s"$root/gold")
+      val gold = BucketedGold.read(spark, s"$root/gold")
         .select("user_id", "event_id", "value").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       assert(gold == Set((1L, 11L, 6.5), (3L, 30L, 9.0)),
@@ -105,7 +105,7 @@ class MedallionSpec extends SparkSpec {
         env("c", base + 5000, "null", img(3, 30, 9.0))).toDF("value")
       Medallion.processBatch(spark, replay, 1L, s"$root/gold", s"$root/dlq",
         s"$root/quarantine", Medallion.defaultRules)
-      val goldAfter = spark.read.parquet(s"$root/gold")
+      val goldAfter = BucketedGold.read(spark, s"$root/gold")
         .select("user_id", "event_id", "value").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       assert(goldAfter == gold, "batch replay changed the gold state")
@@ -126,5 +126,15 @@ class MedallionSpec extends SparkSpec {
     val b = Medallion.medallionStats(spark, sf).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(a == b, s"medallion reruns disagree: $a vs $b")
+  }
+
+  test("medallion stats releases its silver-quality entries and temp root") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def roots() = tmp.listFiles().map(_.getName).filter(_.matches("medallion\\d+")).toSet
+    val (logBefore, rootsBefore) = (Medallion.qualityLog.keySet.toSet, roots())
+    (1 to 2).foreach(_ => Medallion.medallionStats(spark, sf).collect())
+    val logLeft = Medallion.qualityLog.keySet.toSet -- logBefore
+    assert(logLeft.isEmpty, s"quality entries left: $logLeft")
+    assert((roots() -- rootsBefore).isEmpty, s"temp roots left: ${roots() -- rootsBefore}")
   }
 }

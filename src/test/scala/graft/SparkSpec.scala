@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, row_number}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
@@ -8,6 +10,16 @@ import scala.jdk.CollectionConverters._
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sf: String = "/root/testdata/sf0.001"
+
+  /** The SCD1 state of a CDC event frame, computed directly: each
+    * `user_id`'s latest event by (`ts_us`, `event_id`), and no key whose
+    * latest event is a DELETE. The reference gold paths are checked against.
+    */
+  def scd1Reference(events: DataFrame): DataFrame = {
+    val w = Window.partitionBy("user_id").orderBy(col("ts_us").desc, col("event_id").desc)
+    events.withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1 && col("operation") =!= "DELETE").drop("rn")
+  }
 
   /** The jobs `body` starts, by call site: a listener sees every job start
     * between two sentinel jobs, so the listener queue is drained on return.

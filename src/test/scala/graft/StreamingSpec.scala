@@ -246,7 +246,7 @@ class StreamingSpec extends SparkSpec {
     val q = CdcStreams.fileStreamPipeline(spark, inDir, target, ckpt)
     try {
       q.processAllAvailable()
-      assert(spark.read.parquet(target).count() == 2)
+      assert(graft.streaming.BucketedGold.read(spark, target).count() == 2)
 
       // batch 2: user 1 updated, user 2 deleted (error event)
       Seq((3L, 3000000L * 1000, 1L, "purchase", 9.0), (4L, 4000000L * 1000, 2L, "error", 0.0))
@@ -255,7 +255,7 @@ class StreamingSpec extends SparkSpec {
         .select("event_id", "ts", "user_id", "event_type", "value", "props")
         .write.mode("append").parquet(inDir)
       q.processAllAvailable()
-      val fin = spark.read.parquet(target).collect()
+      val fin = graft.streaming.BucketedGold.read(spark, target).collect()
       assert(fin.length == 1)
       assert(fin.head.getAs[Long]("user_id") == 1L)
       assert(fin.head.getAs[String]("operation") == "UPDATE")
@@ -1044,8 +1044,7 @@ class StreamingSpec extends SparkSpec {
       .sortBy(_.getLong(0))
       .map(r => (r.getLong(0).toString, r.getString(1)))
     val (batch1, batch2) = envelopes.splitAt(250)
-    EmbeddedTopicLog.produce(root, topic, batch1.toSeq.map { case (k, v) => (k, v) },
-      partitions = 3)
+    EmbeddedTopicLog.produce(root, topic, batch1.toSeq, partitions = 3)
     def startPipeline() = {
       val stream = graft.sources.AvroEnvelope.readEnvelopeStream(spark, "kafka",
         Map("kafka.bootstrap.servers" -> s"embedded://$root",
@@ -1054,58 +1053,40 @@ class StreamingSpec extends SparkSpec {
       silver.writeStream
         .option("checkpointLocation", ck)
         .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          CdcStreams.applyCdcBatch(spark,
-            graft.streaming.Medallion.goldProjection(b), goldPath)
+          graft.streaming.BucketedGold.appendBatch(spark,
+            graft.streaming.Medallion.goldProjection(b), goldPath, id); ()
         }
         .queryName(s"kafka_e2e_${java.util.UUID.randomUUID().toString.take(8)}")
         .start()
     }
+    // batch 1 is produced before the start, so the first trigger reads it
     val q1 = startPipeline()
     try {
       q1.processAllAvailable()
-      // under full-suite load the first trigger can race the produce's
-      // offset visibility; the stream is still live (ASAP trigger), so
-      // gold appears on the next cycle — bounded wait, then the usual
-      // exact asserts (a genuinely missing gold still fails loudly)
-      val fsLocal = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      var waits = 0
-      while (!fsLocal.exists(new org.apache.hadoop.fs.Path(goldPath)) && waits < 50) {
-        Thread.sleep(200); q1.processAllAvailable(); waits += 1
-      }
       // batch 1 consumed through Kafka offset semantics
-      val g1 = spark.read.parquet(goldPath)
-      assert(g1.count() > 0)
-      // produce while running: the next trigger picks up ONLY the delta
-      EmbeddedTopicLog.produce(root, topic, batch2.toSeq.map { case (k, v) => (k, v) },
-        partitions = 3)
+      assert(graft.streaming.BucketedGold.read(spark, goldPath).count() > 0)
+      // produce while running: a later trigger picks up ONLY the delta. A
+      // trigger already past its offset probe can end processAllAvailable
+      // before reading it; the restart below then resumes at the
+      // checkpointed offsets, and a batch cut by stop() replays under its id
+      EmbeddedTopicLog.produce(root, topic, batch2.toSeq, partitions = 3)
       q1.processAllAvailable()
     } finally q1.stop()
     // kill/restart on the SAME checkpoint: committed offsets resume — a
-    // replayed trigger re-merges idempotently, nothing double-applies
+    // replayed trigger replaces its own delta, nothing double-applies.
+    // The redelivered last envelope is produced while the query is down,
+    // so every trigger of q2 sees it and processAllAvailable returns only
+    // once it is applied
+    EmbeddedTopicLog.produce(root, topic,
+      Seq(("409", batch2.last._2)), partitions = 3) // redeliver last envelope
+    val q2 = startPipeline()
+    try q2.processAllAvailable() finally q2.stop()
     // gold == the declarative latest-per-key fold over the same slice
     // (the batch-path truth the medallion oracle also uses)
-    val expected = graft.cdc.Cdc.log(spark, sf)
+    val expected = scd1Reference(graft.cdc.Cdc.log(spark, sf)
       .filter(col("event_id") <= 400)
-      .withColumn("mts_us", expr("(seq_us DIV 1000) * 1000"))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("user_id")
-          .orderBy(col("mts_us").desc, col("event_id").desc)))
-      .filter(col("rn") === 1 && col("operation") =!= "DELETE")
-    val q2 = startPipeline()
-    try {
-      EmbeddedTopicLog.produce(root, topic,
-        Seq(("409", batch2.last._2)), partitions = 3) // redeliver last envelope
-      q2.processAllAvailable()
-      // under full-suite load, processAllAvailable can return before a
-      // just-produced segment is visible to the offset listing — re-drain
-      // (bounded) until the gold state converges; a real divergence still
-      // fails on the exact asserts below
-      var tries = 0
-      while (spark.read.parquet(goldPath).count() != expected.count() && tries < 25) {
-        Thread.sleep(200); q2.processAllAvailable(); tries += 1
-      }
-    } finally q2.stop()
-    val gold = spark.read.parquet(goldPath)
+      .withColumn("ts_us", expr("(seq_us DIV 1000) * 1000")))
+    val gold = graft.streaming.BucketedGold.read(spark, goldPath)
     assert(gold.count() == expected.count(),
       s"gold ${gold.count()} vs expected ${expected.count()}")
     val mismatch = gold.select(col("user_id"), col("event_id"))
@@ -1170,11 +1151,7 @@ class StreamingSpec extends SparkSpec {
     // oracle: one-shot latest-per-key over the SAME silver projection
     val raw = spark.read.format("kafkalog")
       .option("path", logRoot).option("topic", topic).load()
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("user_id").orderBy(col("ts_us").desc, col("event_id").desc)
-    val expected = BenchStream.silver(raw)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1 && col("operation") =!= "DELETE").drop("rn")
+    val expected = scd1Reference(BenchStream.silver(raw))
       .select("user_id", "operation", "ts_us", "event_id", "value")
       .collect().map(_.toSeq).toSet
     graft.streaming.BucketedGold.awaitCompactions()
@@ -1185,10 +1162,9 @@ class StreamingSpec extends SparkSpec {
       s"gold diverged: ${got.diff(expected).take(3)} vs ${expected.diff(got).take(3)}")
     // delete semantics actually exercised: some keys' latest op is DELETE
     // and they are absent from gold
-    val deleted = BenchStream.silver(raw)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1 && col("operation") === "DELETE")
-      .select("user_id").collect().map(_.getLong(0)).toSet
+    val deleted = BenchStream.silver(raw).select("user_id")
+      .except(scd1Reference(BenchStream.silver(raw)).select("user_id"))
+      .collect().map(_.getLong(0)).toSet
     assert(deleted.nonEmpty, "op mix planted no final deletes — weak test")
     assert(got.forall(r => !deleted.contains(r.head.asInstanceOf[Long])))
   }
@@ -1201,11 +1177,7 @@ class StreamingSpec extends SparkSpec {
     def expectedState(): Set[Seq[Any]] = {
       val raw = spark.read.format("kafkalog")
         .option("path", logRoot).option("topic", topic).load()
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id").orderBy(col("ts_us").desc, col("event_id").desc)
-      BenchStream.silver(raw)
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1 && col("operation") =!= "DELETE").drop("rn")
+      scd1Reference(BenchStream.silver(raw))
         .select("user_id", "operation", "ts_us", "event_id", "value")
         .collect().map(_.toSeq).toSet
     }

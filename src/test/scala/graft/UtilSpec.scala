@@ -208,24 +208,6 @@ class UtilSpec extends SparkSpec {
     assert(rows.map(_.getAs[String]("name")).toSeq == Seq("a", "b", "c", "d"))
   }
 
-  test("applyCdcBatch is idempotent: re-applying a batch changes nothing") {
-    import graft.streaming.CdcStreams
-    val dir = Files.createTempDirectory("idem").toString + "/tbl"
-    val ev = graft.cdc.Cdc.log(spark, sf)
-      .select(col("event_id"), col("user_id"), col("operation"),
-        col("seq_us").as("ts_us"), col("value"))
-      .filter(col("user_id") < 20)
-    CdcStreams.applyCdcBatch(spark, ev, dir)
-    val once = spark.read.parquet(dir)
-    val snapshot = once.collect().toSet
-    // exactly-once delivery can still re-deliver a batch after a retry —
-    // the upsert must converge to the same state
-    CdcStreams.applyCdcBatch(spark, ev, dir)
-    val twice = spark.read.parquet(dir).collect().toSet
-    assert(twice == snapshot, "re-applied batch changed the target table")
-    assert(snapshot.nonEmpty)
-  }
-
   test("multi-table merge applies mixed-table batches in one partitioned write") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("mtm_spec").toString + "/gold"
@@ -274,6 +256,23 @@ class UtilSpec extends SparkSpec {
     assert(custFilesAfter == custFilesBefore,
       "merge of an orders-only batch rewrote the customer partition")
     assert(spark.read.parquet(root).count() == 4)
+
+    // a batch that deletes every customer key leaves no customer rows,
+    // and the orders partition keeps its files and rows
+    val ordersFilesBefore = new java.io.File(s"$root/src_table=orders")
+      .listFiles().map(_.getName).toSet
+    val b4 = Seq(env("customer", 7, 40, "DELETE", """{"n":"a"}"""),
+      env("customer", 8, 40, "DELETE", """{"n":"b"}""")).toDF(cols: _*)
+    graft.streaming.CdcStreams.applyCdcBatchMultiTable(spark, b4, root)
+    val after = spark.read.parquet(root)
+    assert(after.filter(col("src_table") === "customer").count() == 0,
+      "an emptied table kept its stale partition")
+    assert(new java.io.File(s"$root/src_table=orders").listFiles().map(_.getName).toSet ==
+      ordersFilesBefore, "a customer-only batch rewrote the orders partition")
+    assert(after.filter(col("src_table") === "orders")
+      .select("entity_key", "seq", "payload").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSet ==
+      Set(("1", 20L, """{"v":11}"""), ("3", 30L, """{"v":3}""")))
   }
 
   test("stream-static broadcast enrichment joins without shuffling the stream") {
