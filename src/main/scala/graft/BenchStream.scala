@@ -248,13 +248,9 @@ object BenchStream {
         // the commit path never stalls on it.
         val obs = new org.apache.spark.sql.Observation(
           s"bench_lat_max_${batchId}_${java.util.UUID.randomUUID()}")
-        // coalesce(1): a ≤200-row batch writes ONE delta file instead of
-        // one per source partition — 8× fewer file creates on the commit
-        // path (the throughput bench's 250K-row batches keep their full
-        // write parallelism; this is the small-batch arm only)
         val committed = graft.streaming.BucketedGold.appendBatch(spark,
           batch.observe(obs, org.apache.spark.sql.functions.max("event_id")
-            .as("max_id")).coalesce(1),
+            .as("max_id")),
           gold, batchId, compactAsync = true)
         // gold is committed — everything in this batch is now queryable
         // (BucketedGold.read serves the merged SCD1 state). An EMPTY

@@ -648,33 +648,42 @@ object SparkEntry {
     }),
     // multi-table gold merge: 2 tables, INSERT then UPDATE+DELETE batches,
     // through ONE partitioned merge job per batch (rows-only: writes a
-    // temp target; UtilSpec proves merge semantics + replay idempotence)
+    // temp target; UtilSpec proves merge semantics + replay idempotence).
+    // The census is a local frame, so the temp target is deleted before
+    // returning.
     "cdc_multi_table_merge" -> ((s, d) => {
       import org.apache.spark.sql.functions._
       import graft.streaming.CdcStreams
-      val root = java.nio.file.Files.createTempDirectory("mtm").toString + "/gold"
-      val orders = Tables.orders(s, d).filter(col("o_orderkey") <= 500)
-        .select("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority")
-      val cust = Tables.customer(s, d).filter(col("c_custkey") <= 200)
-        .select("c_custkey", "c_name", "c_nationkey")
-      val b1 = CdcStreams.heterogeneousUnion(Seq(
-        ("orders", orders, "o_orderkey", "o_orderkey"),
-        ("customer", cust, "c_custkey", "c_custkey")))
-        .withColumn("operation", lit("INSERT"))
-      CdcStreams.applyCdcBatchMultiTable(s, b1, root)
-      val upd = CdcStreams.heterogeneousUnion(Seq(
-        ("orders", orders.filter(col("o_orderkey") <= 100)
-          .withColumn("o_orderpriority", lit("9-UPDATED")), "o_orderkey", "o_orderkey")))
-        .withColumn("seq", col("seq") + 1000000L)
-        .withColumn("operation", lit("UPDATE"))
-      val del = CdcStreams.heterogeneousUnion(Seq(
-        ("customer", cust.filter(col("c_custkey") <= 50), "c_custkey", "c_custkey")))
-        .withColumn("seq", col("seq") + 1000000L)
-        .withColumn("operation", lit("DELETE"))
-      CdcStreams.applyCdcBatchMultiTable(s, upd.unionByName(del), root)
-      s.read.parquet(root).groupBy("src_table")
-        .agg(count(lit(1)).as("n_rows"),
-          sum(when(col("payload").contains("9-UPDATED"), 1L).otherwise(0L)).as("n_updated"))
+      val tmp = java.nio.file.Files.createTempDirectory("mtm").toString
+      val root = s"$tmp/gold"
+      try {
+        val orders = Tables.orders(s, d).filter(col("o_orderkey") <= 500)
+          .select("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority")
+        val cust = Tables.customer(s, d).filter(col("c_custkey") <= 200)
+          .select("c_custkey", "c_name", "c_nationkey")
+        val b1 = CdcStreams.heterogeneousUnion(Seq(
+          ("orders", orders, "o_orderkey", "o_orderkey"),
+          ("customer", cust, "c_custkey", "c_custkey")))
+          .withColumn("operation", lit("INSERT"))
+        CdcStreams.applyCdcBatchMultiTable(s, b1, root)
+        val upd = CdcStreams.heterogeneousUnion(Seq(
+          ("orders", orders.filter(col("o_orderkey") <= 100)
+            .withColumn("o_orderpriority", lit("9-UPDATED")), "o_orderkey", "o_orderkey")))
+          .withColumn("seq", col("seq") + 1000000L)
+          .withColumn("operation", lit("UPDATE"))
+        val del = CdcStreams.heterogeneousUnion(Seq(
+          ("customer", cust.filter(col("c_custkey") <= 50), "c_custkey", "c_custkey")))
+          .withColumn("seq", col("seq") + 1000000L)
+          .withColumn("operation", lit("DELETE"))
+        CdcStreams.applyCdcBatchMultiTable(s, upd.unionByName(del), root)
+        val census = s.read.parquet(root).groupBy("src_table")
+          .agg(count(lit(1)).as("n_rows"),
+            sum(when(col("payload").contains("9-UPDATED"), 1L).otherwise(0L)).as("n_updated"))
+        s.createDataFrame(java.util.Arrays.asList(census.collect(): _*), census.schema)
+      } finally {
+        val p = new org.apache.hadoop.fs.Path(tmp)
+        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      }
     }),
     // streaming document curation: cross-batch digest dedup + quality gate
     // (rows-only: streaming runtime; StreamingSpec proves the cross-batch
@@ -991,7 +1000,7 @@ object SparkEntry {
 
   // ---- splitmix64 replay in portable SQL --------------------------------
   // The cdcgen DataSource synthesizes rows from the SplitMix64 finalizer
-  // (CdcGenSource.CdcGen.mix). DuckDB has no wrapping 64-bit arithmetic,
+  // (graft.functions.TextHashes.splitMix64). DuckDB has no wrapping 64-bit arithmetic,
   // but HUGEINT (int128) + explicit `% 2^64` reductions replay it exactly:
   // the one overflow-prone step — 64×64-bit wrapping multiply — decomposes
   // into 32-bit halves (a·b mod 2^64 = (al·bl + ((al·bh + ah·bl) mod 2^32)
@@ -1085,11 +1094,11 @@ object SparkEntry {
 
   // ---- LSH / MinHash kernel replay in portable SQL ----------------------
   // The hyperplane-LSH bucket (functions/TextHashes.hyperplaneBucket) and
-  // the MinHash aggregate (functions/MinHashAgg.mix) are pure integer/float
-  // arithmetic — an LCG-derived weight table and a SplitMix64 variant — so
-  // the "hash-seeded, no SQL analog" family is in fact replayable: the
-  // oracle regenerates the weight tables / signatures with the same int128
-  // machinery as the cdcgen replay, and the ordered list folds
+  // the MinHash aggregate (functions/MinHashAgg, via TextHashes.splitMix64)
+  // are pure integer/float arithmetic — an LCG-derived weight table and
+  // SplitMix64 — so the "hash-seeded, no SQL analog" family is in fact
+  // replayable: the oracle regenerates the weight tables / signatures with
+  // the same int128 machinery as the cdcgen replay, and the ordered list folds
   // (list_sum∘list_transform∘list_zip) reproduce the kernels' left-to-right
   // float accumulation bit-for-bit. MATERIALIZED pins each CTE to one
   // evaluation — the iterative chains reference predecessors twice, and
@@ -1268,7 +1277,7 @@ object SparkEntry {
     sb.toString
   }
 
-  /** MinHashAgg.mix replay (j-dependent SplitMix64 increment); expects
+  /** MinHashAgg's `TextHashes.splitMix64(key, j + 1)` replay; expects
     * `l_partkey` and `j` in scope, yields signed `h`. */
   private def minhashMixSql: String = {
     val c1 = BigInt("9e3779b97f4a7c15", 16)

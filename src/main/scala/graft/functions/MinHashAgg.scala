@@ -32,20 +32,13 @@ case class MinHashAgg(
 
   override def createAggregationBuffer(): Array[Long] = Array.fill(k)(Long.MaxValue)
 
-  private def mix(x: Long, j: Int): Long = {
-    var z = x + (j + 1) * 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z ^ (z >>> 31)
-  }
-
   override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
     val v = child.eval(input)
     if (v != null) {
       val key = v.asInstanceOf[Number].longValue()
       var j = 0
       while (j < k) {
-        val h = mix(key, j)
+        val h = TextHashes.splitMix64(key, j + 1)
         if (h < buf(j)) buf(j) = h
         j += 1
       }

@@ -82,9 +82,23 @@ object TextHashes {
     minH
   }
 
+  /** SplitMix64 (Steele, Lea & Flood, OOPSLA 2014): output `i` of the
+    * generator seeded with `x` — the state advanced by `i` golden-gamma
+    * steps, then the finalizer. The one seeded mix in graft: cdcgen's
+    * rows (`i` = 1) and the minhash hash functions (`i` = j + 1 for
+    * function j) call it, and the DuckDB oracle replays it in int128 SQL
+    * (`SparkEntry.mixStagesSql`).
+    */
+  def splitMix64(x: Long, i: Long): Long = {
+    var z = x + i * 0x9e3779b97f4a7c15L
+    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
+    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
+    z ^ (z >>> 31)
+  }
+
   /** MinHash signature over 3-token shingles, one pass: each shingle is
-    * FNV-hashed once, then mixed per hash-function with an xorshift-style
-    * finalizer — O(shingles × k) cheap ops instead of k tokenization passes.
+    * FNV-hashed once, then mixed per hash-function with [[splitMix64]] —
+    * O(shingles × k) cheap ops instead of k tokenization passes.
     */
   def minhashSig(s: UTF8String, k: Int): Array[Long] = {
     val bytes = s.getBytes
@@ -100,11 +114,7 @@ object TextHashes {
           val h = fnv1a64(bytes, t2, i)
           var j = 0
           while (j < k) {
-            // splitmix64-style per-function mix
-            var z = h + (j + 1) * 0x9e3779b97f4a7c15L
-            z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-            z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-            z ^= (z >>> 31)
+            val z = splitMix64(h, j + 1)
             if (z < sig(j)) sig(j) = z
             j += 1
           }

@@ -5,11 +5,12 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import graft.functions.TextHashes
 import scala.jdk.CollectionConverters._
 
 /** `cdcgen` — a DataSource V2 that deterministically synthesizes the CDC
@@ -23,21 +24,23 @@ import scala.jdk.CollectionConverters._
   *              .option("partitions", p).load()
   * Streaming: spark.readStream.format("cdcgen")
   *              .option("rowsPerBatch", n).option("maxRows", m).load()
+  * `mode=txn` selects the transaction arm ([[CdcTxnGen]]), which counts
+  * `txns` / `txnsPerBatch` / `maxTxns` instead; the arms share every other
+  * option, the scan, the stream and the reader ([[CdcGenArm]]).
   *
-  * Scale design: rows are generated partition-locally from (seed, event_id)
+  * Scale design: rows are generated partition-locally from (seed, unit)
   * — no driver-side materialization, arbitrary parallelism, and the
-  * streaming offset is a plain row counter so checkpoint/restart gives
+  * streaming offset is a plain unit counter so checkpoint/restart gives
   * exactly-once delivery (the role binlog file/position pairs play in the
   * reference, aurora_cdc_datasource_v2.py:248-308).
   */
 class CdcGenSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "cdcgen"
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    if (options.getOrDefault("mode", "events") == "txn") CdcTxnGen.schema
-    else CdcGen.schema
+    CdcGenArm.of(options).schema
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table =
-    new CdcGenTable(properties.asScala.toMap)
+    new CdcGenTable(new CaseInsensitiveStringMap(properties))
 }
 
 object CdcGen {
@@ -53,12 +56,8 @@ object CdcGen {
 
   val eventTypes: Array[String] = Array("signup", "click", "view", "purchase", "error")
 
-  private def mix(x: Long): Long = {
-    var z = x + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z ^ (z >>> 31)
-  }
+  /** SplitMix64's first output from state `x`. */
+  private[sources] def mix(x: Long): Long = TextHashes.splitMix64(x, 1)
 
   /** Deterministic event for (seed, id): same tuple on every executor. */
   def row(seed: Long, id: Long, baseTsNs: Long, users: Int): InternalRow = {
@@ -73,17 +72,15 @@ object CdcGen {
   }
 }
 
-class CdcGenTable(props: Map[String, String]) extends Table with SupportsRead {
-  private def mode: String = props.getOrElse("mode", "events")
-  override def name(): String = s"cdcgen($mode)"
-  override def schema(): StructType =
-    if (mode == "txn") CdcTxnGen.schema else CdcGen.schema
+class CdcGenTable(props: CaseInsensitiveStringMap) extends Table with SupportsRead {
+  private val arm = CdcGenArm.of(props)
+  override def name(): String = s"cdcgen(${props.getOrDefault("mode", "events")})"
+  override def schema(): StructType = arm.schema
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ).asJava
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val merged = props ++ options.asScala
-    if (merged.getOrElse("mode", "events") == "txn") () => new CdcTxnScan(merged)
-    else () => new CdcGenScan(merged)
+    val merged = (props.asScala ++ options.asScala).toMap
+    () => new CdcGenScan(arm, merged)
   }
 }
 
@@ -112,6 +109,8 @@ class CdcGenTable(props: Map[String, String]) extends Table with SupportsRead {
   * Money travels as integer CENTS (`*_c` fields) — exact cross-engine.
   */
 object CdcTxnGen {
+  import CdcGen.mix
+
   val schema: StructType = StructType(Seq(
     StructField("txn_id", LongType, nullable = false),
     StructField("seq", LongType, nullable = false),
@@ -130,13 +129,6 @@ object CdcTxnGen {
     case 0 | 1 | 2 => "new_customer_order"
     case 3         => "process_return"
     case _         => "update_prices"
-  }
-
-  private def mix(x: Long): Long = {
-    var z = x + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z ^ (z >>> 31)
   }
 
   private case class NewOrder(custkey: Long, orderkey: Long, nLines: Int,
@@ -207,160 +199,95 @@ object CdcTxnGen {
   }
 }
 
-case class CdcTxnPartition(startTxn: Long, endTxn: Long, seed: Long,
-    baseTsNs: Long, users: Int, parts: Int) extends InputPartition
+/** What the two arms differ in: the schema, the names of the unit count
+  * options, the scan's description and the rows one unit generates. A
+  * unit is an event (one row) or a transaction (all its events), and
+  * offsets and partition ranges count units, so a micro-batch never
+  * splits a transaction. Option keys are lower case: the scan reads them
+  * from a case-insensitive map.
+  */
+sealed abstract class CdcGenArm(val schema: StructType, val unitsKey: String,
+    val perBatchKey: String, val maxKey: String, val label: String)
+  extends Serializable {
+  def rows(p: CdcGenPartition, unit: Long): Iterator[InternalRow]
+}
 
-object CdcTxnReaderFactory extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[CdcTxnPartition]
-    new PartitionReader[InternalRow] {
-      private var t = p.startTxn
-      private var buf: Iterator[InternalRow] = Iterator.empty
-      override def next(): Boolean = {
-        while (!buf.hasNext && t < p.endTxn) {
-          buf = CdcTxnGen.txnEvents(p.seed, t, p.baseTsNs, p.users, p.parts).iterator
-          t += 1
-        }
-        buf.hasNext
-      }
-      override def get(): InternalRow = buf.next()
-      override def close(): Unit = ()
-    }
+object CdcGenArm {
+  /** The arm `mode` selects: `txn`, else events. */
+  def of(options: CaseInsensitiveStringMap): CdcGenArm =
+    if (options.get("mode") == "txn") Txn else Events
+
+  case object Events extends CdcGenArm(CdcGen.schema, "rows", "rowsperbatch", "maxrows", "cdcgen") {
+    def rows(p: CdcGenPartition, unit: Long): Iterator[InternalRow] =
+      Iterator.single(CdcGen.row(p.seed, unit, p.baseTsNs, p.users))
+  }
+
+  case object Txn extends CdcGenArm(CdcTxnGen.schema, "txns", "txnsperbatch", "maxtxns", "cdcgen-txn") {
+    def rows(p: CdcGenPartition, unit: Long): Iterator[InternalRow] =
+      CdcTxnGen.txnEvents(p.seed, unit, p.baseTsNs, p.users, p.parts).iterator
   }
 }
 
-class CdcTxnScan(options: Map[String, String]) extends Scan {
+/** One scan for both arms: a batch read is units `[0, n)`, a micro-batch
+  * the units between two offsets, and both split their range the same way.
+  */
+class CdcGenScan(arm: CdcGenArm, options: Map[String, String]) extends Scan with Batch {
   private def opt(key: String, default: Long): Long =
     options.get(key).map(_.toLong).getOrElse(default)
 
-  private val txns = opt("txns", 1000L)
+  private val units = opt(arm.unitsKey, 1000L)
   private val partitions = opt("partitions", 4L).toInt
   private val seed = opt("seed", 42L)
   private val users = opt("users", 150L).toInt
   private val parts = opt("parts", 200L).toInt
   private val baseTsNs = opt("basetsns", 1704067200L * 1000000000L)
-  private val txnsPerBatch = opt("txnsperbatch", 100L)
-  private val maxTxns = opt("maxtxns", Long.MaxValue)
+  private[sources] val unitsPerBatch = opt(arm.perBatchKey, 100L)
+  private[sources] val maxUnits = opt(arm.maxKey, Long.MaxValue)
 
-  override def readSchema(): StructType = CdcTxnGen.schema
-  override def description(): String = s"cdcgen-txn(txns=$txns, partitions=$partitions)"
+  override def readSchema(): StructType = arm.schema
+  override def description(): String = s"${arm.label}(${arm.unitsKey}=$units, partitions=$partitions)"
 
-  override def toBatch: Batch = new Batch {
-    override def planInputPartitions(): Array[InputPartition] = {
-      val per = (txns + partitions - 1) / partitions
-      (0 until partitions).flatMap { p =>
-        val start = p * per
-        val end = math.min(start + per, txns)
-        if (start < end)
-          Some(CdcTxnPartition(start, end, seed, baseTsNs, users, parts): InputPartition)
-        else None
-      }.toArray
-    }
-    override def createReaderFactory(): PartitionReaderFactory = CdcTxnReaderFactory
-  }
+  override def toBatch: Batch = this
+  override def planInputPartitions(): Array[InputPartition] = ranges(0L, units)
+  override def createReaderFactory(): PartitionReaderFactory = CdcGenReaderFactory
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new CdcTxnMicroBatchStream(txnsPerBatch, maxTxns, partitions, seed,
-      baseTsNs, users, parts)
+    new CdcGenMicroBatchStream(this)
+
+  /** Units `[start, end)` in at most `partitions` ranges of ceil(n / p)
+    * units each; empty ranges are dropped.
+    */
+  private[sources] def ranges(start: Long, end: Long): Array[InputPartition] = {
+    val per = (end - start + partitions - 1) / partitions
+    (0 until partitions).iterator.map(start + _ * per).takeWhile(_ < end)
+      .map(s => CdcGenPartition(arm, s, math.min(s + per, end), seed, baseTsNs, users, parts))
+      .toArray
+  }
 }
 
-/** Offsets count TRANSACTIONS — a micro-batch boundary is always a txn
-  * boundary, so foreachBatch appliers see whole transactions (the
-  * apply-side atomicity the reference gets from binlog commit framing). */
-class CdcTxnMicroBatchStream(txnsPerBatch: Long, maxTxns: Long, partitions: Int,
-    seed: Long, baseTsNs: Long, users: Int, parts: Int)
-  extends MicroBatchStream
-  with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl {
-
-  import org.apache.spark.sql.connector.read.streaming.ReadLimit
-
-  override def initialOffset(): Offset = CdcGenOffset(0L)
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val s = start.asInstanceOf[CdcGenOffset].count
-    CdcGenOffset(math.min(s + txnsPerBatch, maxTxns))
-  }
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException("latestOffset(start, limit) is used")
-  override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
-  override def deserializeOffset(json: String): Offset =
-    CdcGenOffset("""\d+""".r.findFirstIn(json).map(_.toLong).getOrElse(0L))
-  override def commit(end: Offset): Unit = ()
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[CdcGenOffset].count
-    val e = end.asInstanceOf[CdcGenOffset].count
-    val total = e - s
-    if (total <= 0) return Array.empty
-    val per = (total + partitions - 1) / partitions
-    (0 until partitions).flatMap { p =>
-      val ps = s + p * per
-      val pe = math.min(ps + per, e)
-      if (ps < pe)
-        Some(CdcTxnPartition(ps, pe, seed, baseTsNs, users, parts): InputPartition)
-      else None
-    }.toArray
-  }
-  override def createReaderFactory(): PartitionReaderFactory = CdcTxnReaderFactory
-  override def stop(): Unit = ()
-}
-
-class CdcGenScan(options: Map[String, String]) extends Scan {
-  private def opt(key: String, default: Long): Long =
-    options.get(key).map(_.toLong).getOrElse(default)
-
-  private val rows = opt("rows", 1000L)
-  private val partitions = opt("partitions", 4L).toInt
-  private val seed = opt("seed", 42L)
-  private val users = opt("users", 150L).toInt
-  private val baseTsNs = opt("basetsns", 1704067200L * 1000000000L)
-  private val rowsPerBatch = opt("rowsperbatch", 100L)
-  private val maxRows = opt("maxrows", Long.MaxValue)
-
-  override def readSchema(): StructType = CdcGen.schema
-  override def description(): String = s"cdcgen(rows=$rows, partitions=$partitions)"
-
-  override def toBatch: Batch = new Batch {
-    override def planInputPartitions(): Array[InputPartition] = {
-      val per = (rows + partitions - 1) / partitions
-      (0 until partitions).map { p =>
-        val start = p * per
-        CdcGenPartition(start, math.min(start + per, rows), seed, baseTsNs, users)
-          .asInstanceOf[InputPartition]
-      }.toArray
-    }
-    override def createReaderFactory(): PartitionReaderFactory = CdcGenReaderFactory
-  }
-
-  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new CdcGenMicroBatchStream(rowsPerBatch, maxRows, partitions, seed, baseTsNs, users)
-}
-
-case class CdcGenPartition(start: Long, end: Long, seed: Long, baseTsNs: Long, users: Int)
-  extends InputPartition
+case class CdcGenPartition(arm: CdcGenArm, start: Long, end: Long, seed: Long,
+    baseTsNs: Long, users: Int, parts: Int) extends InputPartition
 
 object CdcGenReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[CdcGenPartition]
+    val it = Iterator.iterate(p.start)(_ + 1).takeWhile(_ < p.end).flatMap(p.arm.rows(p, _))
     new PartitionReader[InternalRow] {
-      private var i = p.start - 1
-      override def next(): Boolean = { i += 1; i < p.end }
-      override def get(): InternalRow = CdcGen.row(p.seed, i, p.baseTsNs, p.users)
+      private var row: InternalRow = _
+      override def next(): Boolean = it.hasNext && { row = it.next(); true }
+      override def get(): InternalRow = row
       override def close(): Unit = ()
     }
   }
 }
 
-/** Offset = count of rows emitted so far (the binlog-position analog). */
+/** Offset = count of units emitted so far (the binlog-position analog). */
 case class CdcGenOffset(count: Long) extends Offset {
   override def json(): String = s"""{"count": $count}"""
 }
 
-class CdcGenMicroBatchStream(rowsPerBatch: Long, maxRows: Long, partitions: Int,
-    seed: Long, baseTsNs: Long, users: Int)
-  extends MicroBatchStream
-  with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl {
-
-  import org.apache.spark.sql.connector.read.streaming.ReadLimit
+class CdcGenMicroBatchStream(scan: CdcGenScan)
+  extends MicroBatchStream with SupportsAdmissionControl {
 
   override def initialOffset(): Offset = CdcGenOffset(0L)
 
@@ -371,7 +298,7 @@ class CdcGenMicroBatchStream(rowsPerBatch: Long, maxRows: Long, partitions: Int,
     */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val s = start.asInstanceOf[CdcGenOffset].count
-    CdcGenOffset(math.min(s + rowsPerBatch, maxRows))
+    CdcGenOffset(math.min(s + scan.unitsPerBatch, scan.maxUnits))
   }
   override def latestOffset(): Offset =
     throw new UnsupportedOperationException("latestOffset(start, limit) is used")
@@ -381,19 +308,8 @@ class CdcGenMicroBatchStream(rowsPerBatch: Long, maxRows: Long, partitions: Int,
     CdcGenOffset("""\d+""".r.findFirstIn(json).map(_.toLong).getOrElse(0L))
   override def commit(end: Offset): Unit = ()
 
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[CdcGenOffset].count
-    val e = end.asInstanceOf[CdcGenOffset].count
-    val total = e - s
-    if (total <= 0) return Array.empty
-    val per = (total + partitions - 1) / partitions
-    (0 until partitions).flatMap { p =>
-      val ps = s + p * per
-      val pe = math.min(ps + per, e)
-      if (ps < pe) Some(CdcGenPartition(ps, pe, seed, baseTsNs, users): InputPartition)
-      else None
-    }.toArray
-  }
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
+    scan.ranges(start.asInstanceOf[CdcGenOffset].count, end.asInstanceOf[CdcGenOffset].count)
   override def createReaderFactory(): PartitionReaderFactory = CdcGenReaderFactory
   override def stop(): Unit = ()
 }

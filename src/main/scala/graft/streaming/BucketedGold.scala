@@ -88,8 +88,10 @@ import graft.Phase
   *    after that commit, so a reader pinned to an older version keeps
   *    finding its files. GC deletes what the latest version and those
   *    lists do not name once it is older than the window (so an in-flight
-  *    write is never swept), and the superseded versions (every 16th
-  *    commit prunes those too). Every compaction ends with one GC pass.
+  *    write is never swept), and the superseded versions. Every commit
+  *    also deletes the version two below it, so a root that never
+  *    compacts keeps two versions (the latest and the one it superseded)
+  *    instead of a growing list. Every compaction ends with one GC pass.
   *
   * Exactly-once under checkpointed foreachBatch replay: the delta entry is
   * keyed by (application, batch id), so a replayed batch REPLACES its own
@@ -287,8 +289,9 @@ object BucketedGold {
             }
           if (created) {
             log.latest = mtime(f, file).map(next -> _)
-            // bound the log while nothing compacts (GC prunes it too)
-            if (next.version % 16 == 0) pruneLog(f, root, next.version, Long.MinValue, Set.empty)
+            // keep the version this one superseded, for a reader holding
+            // it, and drop the one before (GC prunes any older ones)
+            if (next.version >= 2) f.delete(versionFile(root, next.version - 2), false)
             Some(next)
           } else if (n >= 100) throw new java.io.IOException(s"BucketedGold: no free version in $root")
           else { log.latest = None; attempt(n + 1) }

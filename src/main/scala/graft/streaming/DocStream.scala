@@ -30,6 +30,17 @@ object DocStream {
     StructField("doc_id", LongType), StructField("lang", StringType),
     StructField("text", StringType)))
 
+  /** The quality gate both curation streams apply (and the near-dup
+    * census replays): at least 5 space-separated tokens and a mean word
+    * length in [2, 12]. Adds the `n_tokens` and `mean_word_len` columns.
+    */
+  private def qualityGate(docs: DataFrame): DataFrame = docs
+    .withColumn("n_tokens", size(split(col("text"), " ")))
+    .withColumn("mean_word_len",
+      length(regexp_replace(col("text"), " ", "")).cast("double") /
+        greatest(col("n_tokens"), lit(1)))
+    .filter(col("n_tokens") >= 5 && col("mean_word_len").between(2.0, 12.0))
+
   /** Start the curation stream: json-lines files in `srcDir` →
     * digest-dedup → quality gate → parquet append in `outDir`.
     */
@@ -49,12 +60,7 @@ object DocStream {
       // langs — nondeterministic per-language counts. The cross-lingual
       // copy of a text is one extra state row, not a correctness issue.
       .dropDuplicates("lang", "digest")
-      .withColumn("n_tokens", size(split(col("text"), " ")))
-      .withColumn("mean_word_len",
-        length(regexp_replace(col("text"), " ", "")).cast("double") /
-          greatest(col("n_tokens"), lit(1)))
-      .filter(col("n_tokens") >= 5 &&
-        col("mean_word_len").between(2.0, 12.0))
+      .transform(qualityGate)
       .select("doc_id", "lang", "text", "digest", "n_tokens")
     curated.writeStream.format("parquet")
       .option("path", outDir).option("checkpointLocation", ckDir)
@@ -94,13 +100,7 @@ object DocStream {
     val rd = spark.readStream.schema(docSchema)
     val src = maxFilesPerTrigger.fold(rd)(n => rd.option("maxFilesPerTrigger", n))
       .json(srcDir)
-    val curated = src
-      .withColumn("n_tokens", size(split(col("text"), " ")))
-      .withColumn("mean_word_len",
-        length(regexp_replace(col("text"), " ", "")).cast("double") /
-          greatest(col("n_tokens"), lit(1)))
-      .filter(col("n_tokens") >= 5 &&
-        col("mean_word_len").between(2.0, 12.0))
+    val curated = src.transform(qualityGate)
       .withColumn("rfp", GraftFunctions.rollingMinHash(col("text"), 32))
       .dropDuplicates("lang", "rfp")
       .select("doc_id", "lang", "text", "rfp", "n_tokens")
@@ -204,12 +204,7 @@ object DocStream {
     // per-lang gate-passer counts the refusal accounting needs (the
     // corpus never touches the driver; one scalar action for the total)
     val shipped = batch1.unionByName(batch2)
-    val gated = shipped
-      .withColumn("n_tokens", size(split(col("text"), " ")))
-      .withColumn("mwl",
-        length(regexp_replace(col("text"), " ", "")).cast("double") /
-          greatest(col("n_tokens"), lit(1)))
-      .filter(col("n_tokens") >= 5 && col("mwl").between(2.0, 12.0))
+    val gated = qualityGate(shipped)
       .groupBy("lang").agg(count(lit(1)).as("n_gated"))
     val nShipped = shipped.count()
     spark.read.parquet(s"$root/out")

@@ -224,6 +224,19 @@ class BucketedGoldSpec extends SparkSpec {
     assert(latest.base.forall(b => new java.io.File(s"$gold/${b.path}").exists()))
   }
 
+  test("a root that never compacts keeps at most two versions in _log") {
+    val root = Files.createTempDirectory("bg-log").toString
+    val gold = s"$root/gold"
+    try {
+      (0 until 40).foreach(i => BucketedGold.appendBatch(spark, batchDF(keyBatch(i): _*), gold,
+        i.toLong, compactEvery = Int.MaxValue))
+      val versions = new java.io.File(s"$gold/_log").list()
+        .filter(n => n.startsWith("v") && n.endsWith(".json")).sorted.toSeq
+      assert(versions === Seq("v38.json", "v39.json"))
+      assert(stateSet(BucketedGold.read(spark, gold)) === expectedState((0 until 40).flatMap(keyBatch)))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+  }
+
   test("replayed batch id replaces its own delta — exactly-once under replay") {
     val root = Files.createTempDirectory("bg-replay").toString
     val gold = s"$root/gold"

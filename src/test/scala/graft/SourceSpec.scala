@@ -8,6 +8,48 @@ import org.apache.spark.sql.streaming.{OutputMode, Trigger}
   */
 class SourceSpec extends SparkSpec {
 
+  private def deleteDirs(dirs: String*): Unit =
+    dirs.foreach(d => org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
+
+  /** Both arms: the micro-batches of a capped stream, taken together, are
+    * the batch read of the same unit count, row for row.
+    */
+  Seq(("events", "rows", "rowsPerBatch", "maxRows", 37, 250),
+      ("txn", "txns", "txnsPerBatch", "maxTxns", 7, 60)).foreach {
+    case (mode, units, perBatch, max, per, n) =>
+      test(s"$mode arm: a capped stream's micro-batches equal the batch read") {
+        val batches = new java.util.concurrent.ConcurrentLinkedQueue[Array[org.apache.spark.sql.Row]]()
+        val stream = spark.readStream.format("cdcgen").option("mode", mode)
+          .option(perBatch, per).option(max, n).option("partitions", 3).load()
+        val q = stream.writeStream
+          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+            val rows = b.collect()
+            if (rows.nonEmpty) batches.add(rows)
+            ()
+          }.start()
+        try {
+          q.processAllAvailable()
+          val all = batches.toArray(Array.empty[Array[org.apache.spark.sql.Row]])
+          assert(all.length == (n + per - 1) / per)
+          val streamed = spark.createDataFrame(
+            java.util.Arrays.asList(all.flatten: _*), stream.schema)
+          val batch = spark.read.format("cdcgen").option("mode", mode).option(units, n).load()
+          assert(streamed.exceptAll(batch).count() == 0 && batch.exceptAll(streamed).count() == 0)
+        } finally q.stop()
+      }
+  }
+
+  test("a batch read plans one partition per non-empty range") {
+    Seq((10, 4), (10, 6), (9, 4), (1, 4), (1000, 13)).foreach { case (rows, parts) =>
+      val df = spark.read.format("cdcgen").option("rows", rows).option("partitions", parts).load()
+      val per = (rows + parts - 1) / parts
+      val nonEmpty = (0 until parts).count(_ * per < rows)
+      val sizes = df.rdd.mapPartitions(it => Iterator(it.size)).collect()
+      assert(df.rdd.getNumPartitions == nonEmpty && sizes.forall(_ > 0) && sizes.sum == rows,
+        s"rows=$rows partitions=$parts: ${sizes.toSeq}")
+    }
+  }
+
   test("batch read: row count, schema, determinism across partitionings") {
     val a = spark.read.format("cdcgen")
       .option("rows", 1000).option("partitions", 4).load()
@@ -31,28 +73,30 @@ class SourceSpec extends SparkSpec {
   test("stream restart from checkpoint resumes at the committed offset") {
     val ckpt = java.nio.file.Files.createTempDirectory("cdcgen_ckpt").toString
     val out = java.nio.file.Files.createTempDirectory("cdcgen_out").toString
-    // file sink (memory sink cannot recover from a checkpoint)
-    def run(maxRows: Int, waitFor: Long): Long = {
-      val stream = spark.readStream.format("cdcgen")
-        .option("rowsPerBatch", 50).option("maxRows", maxRows).load()
-      val q = stream.writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-        .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(10))
-        .start()
-      try {
-        def n() = try spark.read.parquet(out).count() catch { case _: Exception => 0L }
-        val deadline = System.currentTimeMillis() + 30000
-        while (n() < waitFor && System.currentTimeMillis() < deadline) Thread.sleep(200)
-        n()
-      } finally q.stop()
-    }
-    assert(run(100, 100) == 100)
-    // restart with a higher cap: the resumed stream must deliver only rows
-    // beyond the checkpointed offset, exactly once, no duplicates
-    assert(run(200, 200) == 200)
-    val df = spark.read.parquet(out)
-    assert(df.select("event_id").distinct().count() == 200)
+    try {
+      // file sink (memory sink cannot recover from a checkpoint)
+      def run(maxRows: Int, waitFor: Long): Long = {
+        val stream = spark.readStream.format("cdcgen")
+          .option("rowsPerBatch", 50).option("maxRows", maxRows).load()
+        val q = stream.writeStream.format("parquet")
+          .option("path", out).option("checkpointLocation", ckpt)
+          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
+          .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(10))
+          .start()
+        try {
+          def n() = try spark.read.parquet(out).count() catch { case _: Exception => 0L }
+          val deadline = System.currentTimeMillis() + 30000
+          while (n() < waitFor && System.currentTimeMillis() < deadline) Thread.sleep(200)
+          n()
+        } finally q.stop()
+      }
+      assert(run(100, 100) == 100)
+      // restart with a higher cap: the resumed stream must deliver only rows
+      // beyond the checkpointed offset, exactly once, no duplicates
+      assert(run(200, 200) == 200)
+      val df = spark.read.parquet(out)
+      assert(df.select("event_id").distinct().count() == 200)
+    } finally deleteDirs(ckpt, out)
   }
 
   test("micro-batch stream delivers rows incrementally with offset tracking") {
@@ -174,32 +218,33 @@ class SourceSpec extends SparkSpec {
     // envelope -> applyCdcBatchMultiTable, final state referentially
     // consistent (every lineitem's order exists; statuses reflect returns)
     val root = java.nio.file.Files.createTempDirectory("txnmerge").toString
-    val batch = spark.read.format("cdcgen").option("mode", "txn")
-      .option("txns", 200).load()
-      .select(col("src_table"), col("entity_key"), col("seq"),
-        col("operation"), col("payload"))
-    // two halves applied as separate "micro-batches" (idempotent merge)
-    graft.streaming.CdcStreams.applyCdcBatchMultiTable(spark,
-      batch.filter(col("seq") < 100 * 8), s"$root/gold")
-    graft.streaming.CdcStreams.applyCdcBatchMultiTable(spark,
-      batch.filter(col("seq") >= 100 * 8), s"$root/gold")
-    val gold = spark.read.parquet(s"$root/gold").cache()
-    val gOrders = gold.filter(col("src_table") === "orders")
-      .selectExpr("entity_key AS ok", "get_json_object(payload, '$.o_orderstatus') AS status")
-    val gLines = gold.filter(col("src_table") === "lineitem")
-      .selectExpr("get_json_object(payload, '$.l_orderkey') AS lok",
-        "get_json_object(payload, '$.l_returnflag') AS rf")
-    // referential integrity of the merged state
-    assert(gLines.join(gOrders, col("lok") === col("ok"), "left_anti").count() == 0,
-      "gold lineitem without its gold order")
-    // returned orders carry status R (the later UPDATE won)
-    val returned = spark.read.format("cdcgen").option("mode", "txn")
-      .option("txns", 200).load()
-      .filter(col("scenario") === "process_return" && col("src_table") === "orders")
-      .select(col("entity_key").as("ok")).distinct()
-    assert(gOrders.join(returned, "ok").filter(col("status") =!= "R").count() == 0,
-      "a returned order kept status O after the merge")
-    gold.unpersist()
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+    try {
+      val batch = spark.read.format("cdcgen").option("mode", "txn")
+        .option("txns", 200).load()
+        .select(col("src_table"), col("entity_key"), col("seq"),
+          col("operation"), col("payload"))
+      // two halves applied as separate "micro-batches" (idempotent merge)
+      graft.streaming.CdcStreams.applyCdcBatchMultiTable(spark,
+        batch.filter(col("seq") < 100 * 8), s"$root/gold")
+      graft.streaming.CdcStreams.applyCdcBatchMultiTable(spark,
+        batch.filter(col("seq") >= 100 * 8), s"$root/gold")
+      val gold = spark.read.parquet(s"$root/gold").cache()
+      val gOrders = gold.filter(col("src_table") === "orders")
+        .selectExpr("entity_key AS ok", "get_json_object(payload, '$.o_orderstatus') AS status")
+      val gLines = gold.filter(col("src_table") === "lineitem")
+        .selectExpr("get_json_object(payload, '$.l_orderkey') AS lok",
+          "get_json_object(payload, '$.l_returnflag') AS rf")
+      // referential integrity of the merged state
+      assert(gLines.join(gOrders, col("lok") === col("ok"), "left_anti").count() == 0,
+        "gold lineitem without its gold order")
+      // returned orders carry status R (the later UPDATE won)
+      val returned = spark.read.format("cdcgen").option("mode", "txn")
+        .option("txns", 200).load()
+        .filter(col("scenario") === "process_return" && col("src_table") === "orders")
+        .select(col("entity_key").as("ok")).distinct()
+      assert(gOrders.join(returned, "ok").filter(col("status") =!= "R").count() == 0,
+        "a returned order kept status O after the merge")
+      gold.unpersist()
+    } finally deleteDirs(root)
   }
 }

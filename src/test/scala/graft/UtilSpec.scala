@@ -275,6 +275,23 @@ class UtilSpec extends SparkSpec {
       Set(("1", 20L, """{"v":11}"""), ("3", 30L, """{"v":3}""")))
   }
 
+  test("the cdc_multi_table_merge row deletes its temp target") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def roots() = tmp.listFiles().map(_.getName).filter(_.matches("mtm\\d+")).toSet
+    val before = roots()
+    // the census is collected after the target is gone: it is a local frame
+    val rows = SparkEntry.queries("cdc_multi_table_merge")(spark, sf).collect()
+      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+    val orders = Tables.orders(spark, sf)
+    val customers = Tables.customer(spark, sf)
+      .filter(col("c_custkey") > 50 && col("c_custkey") <= 200).count()
+    assert(rows == Map(
+      "orders" -> (orders.filter(col("o_orderkey") <= 500).count(),
+        orders.filter(col("o_orderkey") <= 100).count()),
+      "customer" -> (customers, 0L)), rows)
+    assert((roots() -- before).isEmpty, s"temp roots left: ${roots() -- before}")
+  }
+
   test("stream-static broadcast enrichment joins without shuffling the stream") {
     val normalized = graft.streaming.CdcStreams.normalize(Tables.events(spark, sf))
     val dim = Tables.customer(spark, sf)
